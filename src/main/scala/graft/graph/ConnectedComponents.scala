@@ -111,50 +111,46 @@ object ConnectedComponents {
           maxRounds: Int = 50,
           smallGraphThreshold: Long = 2000000L): DataFrame = {
     val verts = vertices.select(col("id").cast("long").as("id"))
-    var e = edges
+    // the edge count (backend choice) is observed by the pinning job
+    val e0 = Iterate.pin(edges
       .select(greatest(col("src"), col("dst")).cast("long").as("u"),
         least(col("src"), col("dst")).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), count(lit(1)).as("edges"))
 
-    val edgeCount = e.count()
+    val edgeCount = e0.long("edges")
     if (edgeCount <= smallGraphThreshold) {
-      val labels = unionFindLabels(e)
+      val labels = unionFindLabels(e0.df)
         .select(col("u").as("id"), col("v").as("component_id"))
       val out = verts.join(labels, Seq("id"), "left_outer")
         .select(col("id"),
           coalesce(col("component_id"), col("id")).as("component_id"))
         .localCheckpoint(true)
-      e.unpersist()
+      e0.release()
       return out
     }
 
-    // iterate to the fixed point; each round is one eager materialization
-    // (the checksum action doubles as the convergence probe)
-    var round = 0
-    var prev = (-1L, -1L)
-    var converged = e.isEmpty
-    while (!converged && round < maxRounds) {
-      val next = smallStar(largeStar(e)).localCheckpoint(true)
-      // set signature = (count, XOR of row hashes): order-independent and
-      // overflow-free (sum would trip ANSI long-overflow on hash values);
-      // XOR is collision-sound here because the edge set is distinct
-      val sig = next.agg(
-        count(lit(1)).cast("long"),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      val cur = (sig.getLong(0), sig.getLong(1))
-      e.unpersist()
-      e = next
-      converged = cur == prev
-      prev = cur
-      round += 1
+    // iterate to the fixed point: a round whose edge set carries the
+    // same signature as the previous round's changed nothing. Signature =
+    // (count, XOR of row hashes): order-independent and overflow-free
+    // (sum would trip ANSI long-overflow on hash values); XOR is
+    // collision-sound here because the edge set is distinct. Both are
+    // observed by the job that pins the round — no separate signature pass.
+    def sig(p: Iterate.Pin) = (p.stats.get("edges"), p.stats.get("xor"))
+    val r = Iterate.fixpoint("connectedComponents",
+        Iterate.Superstep(e0, e0.stats, converged = edgeCount == 0),
+        maxRounds)(_.release()) { e =>
+      val next = Iterate.pin(smallStar(largeStar(e.df)),
+        count(lit(1)).as("edges"),
+        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("xor"))
+      Iterate.Superstep(next, next.stats, converged = sig(next) == sig(e))
     }
+    val e = r.state.df
     // labels from a non-converged edge set can wrongly SPLIT components;
     // failing loudly beats silently-bad clustering. Alternating-star
     // converges in O(log² n) rounds, so hitting this means maxRounds was
     // sized far below the graph's diameter class — raise it.
-    if (!converged) {
+    if (!r.converged) {
       e.unpersist()
       throw new IllegalStateException(
         s"connected components did not converge in $maxRounds rounds; " +

@@ -4,10 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Graph-shaped analytics over the property-graph tables, as pure
-  * Catalyst dataflows (the round-3 DataFrame connected components removed
-  * the last Pregel handoff; round 4 moved PageRank onto the same
-  * iterate-localCheckpoint-release pattern, so nothing here leaves
-  * Catalyst).
+  * Catalyst dataflows — nothing here leaves Catalyst.
+  *
+  * The fixpoint operators ([[unitHierarchy]], [[kCore]],
+  * [[labelPropagation]], and [[ConnectedComponents.run]]) run each
+  * superstep through [[Iterate]]: the round's new state is pinned with an
+  * eager `localCheckpoint`, the statistic that decides convergence
+  * (frontier size, peeled vertices, changed labels, edge-set signature)
+  * is observed by that same job, and the previous round's pin is
+  * released. A superstep is therefore its dataflow's jobs and nothing
+  * else — no count/head/isEmpty probe after the pin. [[powerIterate]]'s
+  * edge pin observes its edge count and fixed-point guard statistics
+  * the same way.
   *
   * The reference delegates graph traversal to Memgraph (e.g. the unit_of
   * workstream hierarchy, create_graph.py:162-169, and author/output
@@ -39,40 +47,41 @@ object GraphOps {
   /** Transitive closure of the unit_of hierarchy: for every unit, the set
     * of ancestor unit ids (workstream containment). Iterative DataFrame
     * self-joins with early exit — depth-bounded (org hierarchies are
-    * shallow); each round is one shuffle on the frontier only. The frontier
-    * is localCheckpoint-ed each round (bounded lineage — no exponential
-    * plan growth) and the previous round's blocks are released.
+    * shallow); each round joins only the frontier (the newest depth).
+    * The closure is pinned once per round ([[Iterate]] superstep:
+    * bounded lineage, and the new frontier's size — the early exit —
+    * observed by the same job) and the previous round's blocks are
+    * released.
     *
     * @param unitOf edge table (src = child unit id, dst = parent unit id)
     * @return (unit_id, ancestor_id, depth)
     */
   def unitHierarchy(unitOf: DataFrame, maxDepth: Int = 16): DataFrame = {
     val edges = unitOf.select(col("src"), col("dst")).localCheckpoint(true)
-    val base = edges.select(col("src").as("unit_id"),
-      col("dst").as("ancestor_id"), lit(1).as("depth"))
-      .localCheckpoint(true)
-    var closure = base
-    var frontier = base
-    var d = 1
-    while (d < maxDepth && !frontier.isEmpty) {
-      val next = frontier.alias("f")
+    val base = Iterate.pin(edges.select(col("src").as("unit_id"),
+      col("dst").as("ancestor_id"), lit(1).as("depth")),
+      count(lit(1)).as("frontier"))
+    // state = (closure, depth of its newest rows); the frontier is those
+    // rows, and each round pins closure ∪ new rows as ONE frame. (A union
+    // of two separately pinned frames fails Catalyst's constraint rewrite
+    // when the newer pin was projected from the older one.)
+    val r = Iterate.fixpoint("unitHierarchy",
+        Iterate.Superstep((base.df, 1), base.stats,
+          converged = base.long("frontier") == 0),
+        maxDepth - 1)(_._1.unpersist()) { case (closure, d) =>
+      val next = closure.filter(col("depth") === d).alias("f")
         .join(edges.alias("e"), col("f.ancestor_id") === col("e.src"))
         .select(col("f.unit_id"), col("e.dst").as("ancestor_id"),
           (col("f.depth") + 1).as("depth"))
         .join(closure.select("unit_id", "ancestor_id"),
           Seq("unit_id", "ancestor_id"), "left_anti")
-        .localCheckpoint(true) // eager: materializes + truncates lineage
-      val prev = frontier
-      val prevClosure = closure
-      frontier = next
-      closure = closure.union(frontier).localCheckpoint(true)
-      prev.unpersist()
-      prevClosure.unpersist()
-      d += 1
+      val p = Iterate.pin(closure.union(next),
+        count_if(col("depth") === d + 1).as("frontier"))
+      Iterate.Superstep((p.df, d + 1), p.stats,
+        converged = p.long("frontier") == 0)
     }
     edges.unpersist()
-    if (!(frontier eq closure)) frontier.unpersist()
-    closure
+    r.state._1
   }
 
   /** Contributor-graph edge list WITHOUT the k-squared self-join: instead
@@ -170,11 +179,10 @@ object GraphOps {
     // any SQL engine as unrolled rounds (the contract-certification
     // seam; the double mode stays the production default). Both fixed-
     // mode preconditions — integer-valued weights and Long headroom for
-    // the per-round products — are VALIDATED below with two cheap guard
-    // aggregations (fixed mode is the certification seam, never the
-    // 100 TB default, so the extra jobs are free where it runs), failing
-    // loudly instead of silently truncating on the long cast or wrapping
-    // on overflow.
+    // the per-round products — are VALIDATED below (guard 1 observed by
+    // the edge pin's own job, guard 2 one aggregate over the vertex set
+    // that also counts it), failing loudly instead of silently truncating
+    // on the long cast or wrapping on overflow.
     scale.foreach(s => require(s >= 20 && s % 20 == 0,
       "scale must be a positive multiple of 20 (0.15·S must be integral)"))
     val fixed = scale.isDefined
@@ -184,19 +192,23 @@ object GraphOps {
     // of authorRankWeighted) then executes exactly ONCE into the pin,
     // where the join shape ran it once per join side plus once per guard
     // pass. One exchange on src (the sort-merge join needed the same
-    // sort anyway) and, in fixed mode, the guard statistics ride the
-    // same frame as extra columns, so guard 1 costs one reduction over
-    // the pinned rows instead of a separate full-edge aggregation job.
+    // sort anyway). The edge count (the fold gate) and, in fixed mode,
+    // the guard-1 statistics are observed by the job that writes the pin.
     val wsrc = org.apache.spark.sql.expressions.Window.partitionBy("src")
-    val withDeg = (if (fixed)
-        // the long cast is validated by guard 1 BELOW the pin: if a
+    val wd = Iterate.pin((if (fixed)
+        // the long cast is validated by guard 1 on the pinned rows: if a
         // fractional weight slipped in, the integrality require throws
         // before any truncated value feeds a computation
         wedges.select(col("src"), col("dst"),
           col("w").cast("double").as("_wd0"), col("w").cast("long").as("w"))
       else wedges.select(col("src"), col("dst"), col("w")))
-      .withColumn("_wdeg", sum(col("w")).over(wsrc))
-      .localCheckpoint(true)
+      .withColumn("_wdeg", sum(col("w")).over(wsrc)),
+      count(lit(1)).as("edges") +: (if (!fixed) Nil else Seq(
+        max(abs(col("_wd0") - floor(col("_wd0")))).as("frac_w"),
+        max(col("_wd0")).as("max_w"), min(col("_wd0")).as("min_w"),
+        min(col("_wdeg").cast("double")).as("min_wdeg"))): _*)
+    val withDeg = wd.df
+    val nEdges = wd.long("edges")
     // guard 1: weights integral (checked in double space, so also < 2^53
     // where that check is itself exact) and non-negative. The division
     // hazard is NOT a zero weight per se (a zero edge alongside positive
@@ -207,29 +219,23 @@ object GraphOps {
     // source owning ≥ 1 edge row; exact in long given integrality, which
     // is validated first).
     val maxW: Long =
-      if (!fixed) 1L
+      if (!fixed || nEdges == 0) 1L // empty edge list: nothing to overflow
       else {
-        val c = withDeg.agg(
-          max(abs(col("_wd0") - floor(col("_wd0")))),
-          max(col("_wd0")), min(col("_wd0")),
-          min(col("_wdeg").cast("double"))).head()
-        if (c.isNullAt(0)) 1L // empty edge list: nothing to overflow
-        else {
-          require(c.getDouble(2) >= 0d, "fixed-point rank mode requires " +
-            s"non-negative weights (min w = ${c.getDouble(2)})")
-          require(c.getDouble(1) < 9007199254740992d, // 2^53
-            s"fixed-point rank mode requires weights < 2^53 " +
-              s"(max w = ${c.getDouble(1)})")
-          require(c.getDouble(0) == 0d, "fixed-point rank mode requires " +
-            "integer-valued weights (a fractional weight would be " +
-            "silently truncated by the long cast) — scale the weights " +
-            "onto the integer lattice first")
-          require(c.getDouble(3) > 0d, "fixed-point rank mode requires " +
-            "every source's weighted out-degree > 0 (min out-degree = " +
-            s"${c.getDouble(3)} — an all-zero-out-degree source would " +
-            "divide by zero)")
-          c.getDouble(1).toLong
-        }
+        def g(name: String) = wd.stats(name).asInstanceOf[Double]
+        require(g("min_w") >= 0d, "fixed-point rank mode requires " +
+          s"non-negative weights (min w = ${g("min_w")})")
+        require(g("max_w") < 9007199254740992d, // 2^53
+          s"fixed-point rank mode requires weights < 2^53 " +
+            s"(max w = ${g("max_w")})")
+        require(g("frac_w") == 0d, "fixed-point rank mode requires " +
+          "integer-valued weights (a fractional weight would be " +
+          "silently truncated by the long cast) — scale the weights " +
+          "onto the integer lattice first")
+        require(g("min_wdeg") > 0d, "fixed-point rank mode requires " +
+          "every source's weighted out-degree > 0 (min out-degree = " +
+          s"${g("min_wdeg")} — an all-zero-out-degree source would " +
+          "divide by zero)")
+        g("max_w").toLong
       }
     val damp = 0.85
     // uniform 0.15 reset (classic PageRank) or a per-vertex reset
@@ -241,42 +247,6 @@ object GraphOps {
       .getOrElse(verts.withColumn("_r0",
         scale.map(s => lit(3L * (s / 20)).cast("long") // 0.15·S, integrally
         ).getOrElse(lit(0.15))))
-    // guard 2: Long headroom. Total damped mass is bounded by
-    // sum(_r0)/0.15 (per-source contributions never exceed the source's
-    // rank, and integer DIV only shrinks them), so the two per-round
-    // products — rank·w per edge and 85·Σcontribs per vertex — stay
-    // inside Long iff the bound does; checked in BigInt so the check
-    // itself cannot wrap. The DuckDB oracles compute in HUGEINT, so past
-    // this bound op and oracle would silently diverge — hence the loud
-    // failure here.
-    if (fixed) {
-      // like the weights: a caller-supplied reset vector must already be
-      // the scaled LONG lattice — catch fractional values loudly instead
-      // of letting cast("long") truncate them; the mass sum runs in
-      // DECIMAL so the precondition check itself cannot wrap
-      val c = vr.agg(
-        coalesce(sum(col("_r0").cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")),
-        coalesce(min(col("_r0").cast("double")), lit(0d)),
-        coalesce(max(abs(col("_r0").cast("double") -
-          floor(col("_r0").cast("double")))), lit(0d)),
-        coalesce(max(abs(col("_r0").cast("double"))), lit(0d))).head()
-      require(c.getDouble(1) >= 0d,
-        "fixed-point reset vector must be non-negative")
-      require(c.getDouble(2) == 0d, "fixed-point rank mode requires an " +
-        "integer-valued reset vector (a fractional reset would be " +
-        "silently truncated by the long cast) — pre-scale it onto the " +
-        "integer lattice")
-      require(c.getDouble(3) < 9007199254740992d, // 2^53
-        "fixed-point reset values must stay below 2^53")
-      val sumR0 = BigInt(c.getDecimal(0).toBigInteger)
-      val bound = sumR0 * 100 / 15 + 1
-      require(bound * maxW <= BigInt(Long.MaxValue) &&
-          bound * 85 <= BigInt(Long.MaxValue),
-        s"fixed-point overflow precondition failed: damped-mass bound " +
-          s"$bound times max weight $maxW (or times 85) exceeds Long — " +
-          "lower the scale or the weights")
-    }
     // DRIVER FOLD fast path — the bradleyTerry bounded-lattice
     // discipline: when the (pinned) edge list and vertex set both fit
     // the driver budget (word-co-occurrence graphs, citation
@@ -288,15 +258,56 @@ object GraphOps {
     // mode summation order differs only within the non-order-pinned
     // float semantics the distributed loop already has. Beyond the cap
     // the distributed loop below runs unchanged — the 100 TB path.
-    // driverFoldMaxRows = 0 disables the fold (and skips the gate's
-    // count job entirely — an at-scale caller that opts out pays nothing).
-    // The fold allocates Int-indexed arrays, so the effective cap clamps
-    // at Int.MaxValue — a larger caller budget must not let nEdges.toInt
-    // truncate silently.
+    // driverFoldMaxRows = 0 disables the fold (and, outside fixed mode,
+    // skips the vertex aggregate — an at-scale caller that opts out pays
+    // nothing). The fold allocates Int-indexed arrays, so the effective
+    // cap clamps at Int.MaxValue — a larger caller budget must not let
+    // nEdges.toInt truncate silently.
     val foldCap = math.min(driverFoldMaxRows, Int.MaxValue.toLong)
-    val nEdges = if (driverFoldMaxRows > 0) withDeg.count() else Long.MaxValue
-    if (nEdges <= foldCap) {
-      val nVerts = vr.count()
+    val foldEdges = driverFoldMaxRows > 0 && nEdges <= foldCap
+    // guard 2: Long headroom. Total damped mass is bounded by
+    // sum(_r0)/0.15 (per-source contributions never exceed the source's
+    // rank, and integer DIV only shrinks them), so the two per-round
+    // products — rank·w per edge and 85·Σcontribs per vertex — stay
+    // inside Long iff the bound does; checked in BigInt so the check
+    // itself cannot wrap. The DuckDB oracles compute in HUGEINT, so past
+    // this bound op and oracle would silently diverge — hence the loud
+    // failure here. Like the weights, a caller-supplied reset vector must
+    // already be the scaled LONG lattice — fractional values are caught
+    // loudly instead of letting cast("long") truncate them; the mass sum
+    // runs in DECIMAL so the precondition check itself cannot wrap. The
+    // same aggregate counts the vertices for the fold gate.
+    val nVerts: Long =
+      if (!fixed && !foldEdges) Long.MaxValue
+      else {
+        val c = vr.agg(count(lit(1)), (if (!fixed) Nil else Seq(
+          coalesce(sum(col("_r0").cast("decimal(38,0)")),
+            lit(0).cast("decimal(38,0)")),
+          coalesce(min(col("_r0").cast("double")), lit(0d)),
+          coalesce(max(abs(col("_r0").cast("double") -
+            floor(col("_r0").cast("double")))), lit(0d)),
+          coalesce(max(abs(col("_r0").cast("double"))), lit(0d)))): _*)
+          .head()
+        if (fixed) {
+          require(c.getDouble(2) >= 0d,
+            "fixed-point reset vector must be non-negative")
+          require(c.getDouble(3) == 0d, "fixed-point rank mode requires " +
+            "an integer-valued reset vector (a fractional reset would be " +
+            "silently truncated by the long cast) — pre-scale it onto " +
+            "the integer lattice")
+          require(c.getDouble(4) < 9007199254740992d, // 2^53
+            "fixed-point reset values must stay below 2^53")
+          val sumR0 = BigInt(c.getDecimal(1).toBigInteger)
+          val bound = sumR0 * 100 / 15 + 1
+          require(bound * maxW <= BigInt(Long.MaxValue) &&
+              bound * 85 <= BigInt(Long.MaxValue),
+            s"fixed-point overflow precondition failed: damped-mass bound " +
+              s"$bound times max weight $maxW (or times 85) exceeds Long — " +
+              "lower the scale or the weights")
+        }
+        c.getLong(0)
+      }
+    if (foldEdges) {
       if (nVerts <= foldCap) {
         val spark = verts.sparkSession
         import spark.implicits._
@@ -479,7 +490,7 @@ object GraphOps {
     * hub detection while staying skew-proof. For exact co-occurrence
     * weights on moderate hubs see [[authorRankWeighted]]. Sub-cap graphs
     * take the driver fold — see [[pageRank]]'s note on double-mode
-    * summation-order drift and the gate's count() job.
+    * summation-order drift.
     */
   def authorRank(authorOf: DataFrame, tol: Double = 0.001,
                  maxIter: Int = 30,
@@ -624,9 +635,10 @@ object GraphOps {
     * spam vertices fall out; the dense core of the co-citation graph
     * survives).
     *
-    * Each round is one degree aggregate + two left-semi equi-joins on
-    * the SHRINKING edge set, localCheckpoint'd so lineage stays one
-    * round deep (the [[coauthorComponents]] iteration discipline). All
+    * Each round ([[Iterate]] superstep) is one degree aggregate + two
+    * left-semi equi-joins on the SHRINKING edge set, pinned in one job
+    * that also observes the peeled vertices and the kept edges, so
+    * lineage stays one round deep and no count pass follows. All
     * sub-k vertices peel SIMULTANEOUSLY per round, so rounds are
     * bounded by the peeling depth (typically ≪ 20 on real graphs; a
     * worst-case path graph peels two vertices a round — set `maxIter`
@@ -638,26 +650,33 @@ object GraphOps {
   def kCore(edges: DataFrame, k: Int, srcCol: String = "src",
             dstCol: String = "dst", maxIter: Int = 1000): DataFrame = {
     require(k >= 1 && maxIter >= 1)
-    var e = canonEdges(edges, srcCol, dstCol).localCheckpoint(true)
-    var nEdges = e.count()
-    var rounds = 0
-    var converged = nEdges == 0
-    while (!converged) {
-      if (rounds >= maxIter)
-        throw new IllegalStateException(
-          s"kCore: no fixpoint after $maxIter rounds ($nEdges edges live)")
-      val keep = degreesCanonical(e).filter(col("_d") >= k).select("v")
-      val e2 = e
+    val e0 = Iterate.pin(canonEdges(edges, srcCol, dstCol),
+      count(lit(1)).as("kept"))
+    val r = Iterate.fixpoint("kCore",
+        Iterate.Superstep(e0.df, e0.stats, converged = e0.long("kept") == 0),
+        maxIter)(_.unpersist()) { e =>
+      // peeled vertices are observed on the degree aggregate, inside the
+      // round's own job: a vertex below k loses all of its (>= 1) edges,
+      // so no vertex peeled <=> no edge dropped. The semi-joins keep the
+      // pinned edge set's size estimate from growing round over round.
+      // `kept` is tested first: when nothing is kept, adaptive execution
+      // may prune the empty keep side, observation included.
+      val keep = degreesCanonical(e)
+        .observe("kcore-peeled", count_if(col("_d") < k).as("peeled"))
+        .filter(col("_d") >= k).select("v")
+      val p = Iterate.pin(e
         .join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
-        .select("a", "b")
-        .localCheckpoint(true)
-      val n2 = e2.count()
-      e.unpersist()
-      converged = n2 == nEdges || n2 == 0
-      e = e2; nEdges = n2; rounds += 1
+        .select("a", "b"), count(lit(1)).as("kept"))
+      Iterate.Superstep(p.df, p.stats,
+        converged = p.long("kept") == 0 || p.long("peeled") == 0)
     }
-    degreesCanonical(e)
+    if (!r.converged) {
+      r.state.unpersist()
+      throw new IllegalStateException(s"kCore: no fixpoint after $maxIter " +
+        s"rounds (${r.stats("kept")} edges live)")
+    }
+    degreesCanonical(r.state)
       .select(col("v").as("vertex"), col("_d").as("core_degree"))
   }
 
@@ -716,9 +735,11 @@ object GraphOps {
     * floating-point summation order, so floor-scaled projections (e.g.
     * floor(pagerank*1e6)) of pre-fold baselines can flip on boundary
     * values — last-ulp drift, within the non-order-pinned float
-    * semantics the distributed loop already has. The fold gate also
-    * costs one count() job per call on graphs that do NOT take the
-    * fold; pass driverFoldMaxRows = 0 to skip both gate and fold.
+    * semantics the distributed loop already has. The gate's edge count
+    * is observed by the edge pin; its vertex count is one aggregate job,
+    * run only when the edges fit the cap (and in fixed mode, where it
+    * doubles as the reset-vector guard). Pass driverFoldMaxRows = 0 to
+    * skip the fold.
     *
     * @param weightCol optional edge-weight column (default: every edge
     *                  weighs 1)
@@ -839,13 +860,19 @@ object GraphOps {
     * synchronous LPA is known for) and ties break to the smallest label,
     * so reruns agree bit-for-bit — no randomized vertex order.
     *
-    * Per round: one equi-join of the symmetrized edge list to the narrow
-    * (vertex, community) table, one map-side-combinable (vertex, label)
-    * count, one min_by argmax per vertex — all AQE-splittable shuffles,
-    * no window over data rows. Lineage is cut per round and the previous
-    * round's blocks released (the [[kCore]] discipline); early exit when
-    * a round changes no label. Isolated vertices have no edges and are
-    * absent, matching [[triangleCounts]] semantics.
+    * Per round ([[Iterate]] superstep) ONE exchange, no join (the
+    * Pregel message pattern): the state is (vertex, community,
+    * neighbours); every vertex sends its label to each neighbour, and a
+    * groupBy(vertex) collects the votes together with the vertex's own
+    * row, which carries its previous label and its neighbour list
+    * forward. Round 1 builds the neighbour lists from the edges; its
+    * votes are the neighbour ids, the initial labels. The argmax is a
+    * run-length fold over the sorted votes ([[argmaxVote]]), and the
+    * number of changed labels is observed by the job that pins the
+    * round. Early exit when a round changes no label; at `maxIter`
+    * without that, the last labels are returned and the operator WARNs.
+    * Isolated vertices have no edges and are absent, matching
+    * [[triangleCounts]] semantics.
     *
     * @param edges (srcCol, dstCol) — direction ignored, self-loops and
     *              duplicate edges dropped, null endpoints dropped
@@ -856,37 +883,64 @@ object GraphOps {
                        dstCol: String = "dst",
                        maxIter: Int = 20): DataFrame = {
     require(maxIter >= 1)
-    val e = canonEdges(edges, srcCol, dstCol)
-    val sym = e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(true)
-    var labels = sym.select(col("u").as("vertex")).distinct()
-      .withColumn("community", col("vertex"))
-      .localCheckpoint(true)
-    var it = 0
-    var converged = false
-    while (it < maxIter && !converged) {
-      val nbrVotes = sym
-        .join(labels.select(col("vertex").as("v"), col("community")),
-          Seq("v"))
-        .select(col("u").as("vertex"), col("community"))
-      val next = nbrVotes.union(labels) // self-vote damps oscillation
-        .groupBy("vertex", "community")
-        .agg(count(lit(1)).as("_n"))
-        .groupBy("vertex")
-        .agg(min_by(col("community"), struct(-col("_n"), col("community")))
-          .as("community"))
-        .localCheckpoint(true)
-      val nChanged = next
-        .join(labels.withColumnRenamed("community", "_prev"), Seq("vertex"))
-        .filter(col("community") =!= col("_prev")).count()
-      labels.unpersist()
-      labels = next
-      converged = nChanged == 0
-      it += 1
+    val e = edges.filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
+      col(srcCol) =!= col(dstCol))
+    val sym = e.select(col(srcCol).as("u"), col(dstCol).as("v"))
+      .union(e.select(col(dstCol).as("u"), col(srcCol).as("v")))
+    val labelType = sym.schema("u").dataType
+    val none = lit(null).cast(labelType)
+    // state None = before round 1, every vertex labelled by its own id
+    val r = Iterate.fixpoint("labelPropagation",
+        Iterate.Superstep(Option.empty[DataFrame], Map.empty,
+          converged = false),
+        maxIter)(_.foreach(_.unpersist())) { state =>
+      val votes = state match {
+        case None => sym.groupBy(col("u").as("vertex")) // dedupes edges
+          .agg(collect_set(col("v")).as("_nbrs"))
+          .select(col("vertex"), col("_nbrs").as("_votes"),
+            col("vertex").as("_prev"), col("_nbrs"))
+        case Some(s) => s
+          .select(explode(col("_nbrs")).as("vertex"),
+            col("community").as("_vote"), none.as("_prev"),
+            lit(null).cast(s.schema("_nbrs").dataType).as("_nbrs"))
+          .union(s.select(col("vertex"), none.as("_vote"),
+            col("community").as("_prev"), col("_nbrs")))
+          .groupBy("vertex")
+          .agg(collect_list(col("_vote")).as("_votes"),
+            max(col("_prev")).as("_prev"), max(col("_nbrs")).as("_nbrs"))
+      }
+      val p = Iterate.pinAfter(votes.select(col("vertex"),
+          argmaxVote(array_sort(concat(col("_votes"), array(col("_prev")))),
+            labelType).as("community"), col("_prev"), col("_nbrs")),
+        count_if(col("community") =!= col("_prev")).as("changed"))(
+        _.drop("_prev"))
+      Iterate.Superstep(Option(p.df), p.stats,
+        converged = p.long("changed") == 0)
     }
-    sym.unpersist()
-    labels
+    val state = r.state.get // maxIter >= 1: round 1 always runs
+    try state.select("vertex", "community").localCheckpoint(true)
+    finally state.unpersist()
+  }
+
+  /** Most frequent label of a SORTED vote array, ties to the smallest:
+    * one fold tracking the current run and the best run so far — a run
+    * replaces the best only when strictly longer, so among equal counts
+    * the first (smallest) label wins.
+    */
+  private def argmaxVote(sortedVotes: Column,
+                         labelType: org.apache.spark.sql.types.DataType
+                        ): Column = {
+    val none = lit(null).cast(labelType)
+    aggregate(sortedVotes,
+      struct(none.as("cur"), lit(0).as("run"), none.as("best"),
+        lit(0).as("bestRun")),
+      (acc, x) => {
+        val run = when(acc("cur") === x, acc("run") + 1).otherwise(1)
+        struct(x.as("cur"), run.as("run"),
+          when(run > acc("bestRun"), x).otherwise(acc("best")).as("best"),
+          greatest(run, acc("bestRun")).as("bestRun"))
+      },
+      acc => acc("best"))
   }
 
   /** Per-community modularity PARTS (Newman & Girvan 2004): for each

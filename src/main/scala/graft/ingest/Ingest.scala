@@ -46,10 +46,17 @@ object Ingest {
           citedByCountYear: Option[Int] = None,
           totalTimeSeconds: Double = 0.0): DataFrame = {
 
+    // The four reused frames are PINNED (eager localCheckpoint), not
+    // cached: an append re-caches every cached plan over the appended
+    // path, so a cached tracker would count this batch's own DOIs as
+    // existing and `resolved` would re-resolve against the authors this
+    // run just minted. A pin is fixed when it is made; all four are
+    // released after the report.
+
     // 1. validate + existence (tracker stays small: --limit default 50)
     val tracker0 = DoiOps.validate(doiList, limit)
     val tracker = DoiOps.markExisting(tracker0, store.nodeTable("outputs"))
-      .cache()
+      .localCheckpoint(true)
     val ingest = DoiOps.toIngest(tracker, update)
 
     // 2. parse payloads for the to-ingest set (semi-join: payload table may
@@ -57,14 +64,14 @@ object Ingest {
     val batch = payloads.join(ingest.select("doi").hint("broadcast"),
       Seq("doi"), "left_semi")
     val parsed = MetadataParser.parseEnvelope(batch, openAlex = openAlex,
-      citedByCountYear = citedByCountYear).cache()
+      citedByCountYear = citedByCountYear).localCheckpoint(true)
 
     // 3. outputs: deterministic uuid from the DOI; insert-if-absent, or in
     //    update mode a merge-on-key property refresh (doi.py:215-250)
     val newOut = parsed.dropDuplicates("doi")
       .withColumn("uuid",
         EntityResolution.mintUuid(concat(lit("output:"), col("doi"))))
-      .cache()
+      .localCheckpoint(true)
     if (update) store.mergeNodes("outputs", newOut, key = "doi")
     else store.upsertNodes("outputs", newOut, key = "doi")
 
@@ -75,7 +82,8 @@ object Ingest {
         col("a.last_name"), col("a.orcid"), col("a.rank"),
         col("mention_order").cast("long").as("mention_order"))
     val resolved = EntityResolution
-      .resolveAuthors(mentions, store.nodeTable("authors")).cache()
+      .resolveAuthors(mentions, store.nodeTable("authors"))
+      .localCheckpoint(true)
     store.upsertNodes("authors", EntityResolution.mintedAuthors(resolved),
       key = "uuid")
 
