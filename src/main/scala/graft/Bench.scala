@@ -48,35 +48,29 @@ object Bench {
     var leaked = 0L
     def once(name: String,
              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch {
-        case e: Throwable =>
-          errors(name) = s"${e.getClass.getSimpleName}: " +
-            Option(e.getMessage).getOrElse("").takeWhile(_ != '\n').take(200)
+      val (secs, pins) = Pins.track(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch {
+          case e: Throwable =>
+            errors(name) = s"${e.getClass.getSimpleName}: " +
+              Option(e.getMessage).getOrElse("").takeWhile(_ != '\n').take(200)
+        }
+        (System.nanoTime() - t0) / 1e9
       }
-      val secs = (System.nanoTime() - t0) / 1e9
-      // Post-timing hygiene, OUTSIDE the timed region: a query whose
-      // returned frame depends on pinned (localCheckpointed) state cannot
-      // release the pin before the sink consumes it, so without this the
-      // block manager accumulates every query's dead pins for the whole
-      // session (~260 dead RDDs per full pass measured at sf0.1) and late
-      // queries pay the memory/GC pressure of early ones. Pins reachable
-      // from SparkEntry's session-lifetime caches (the build-once/
-      // probe-many index and tokenizer artifacts, whose builds are timed
-      // as their own queries) are protected — unpersisting those would
-      // truncate checkpointed lineage for every later probe query. Dead
-      // pins are unreachable by anything that runs later (each invocation
-      // builds fresh frames from the parquet inputs), so this only
-      // removes inter-query interference; it caches nothing, skips
-      // nothing, and precomputes nothing.
-      val live = SparkEntry.livePinRddIds(spark)
-      val dead = spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => live(id) }
-      if (dead.nonEmpty) {
-        leaked += dead.size
-        dead.values.foreach(_.unpersist(blocking = false))
-      }
+      // Hygiene, OUTSIDE the timed region: a query whose result depends on
+      // a pin (localCheckpoint) cannot release it before the sink has run,
+      // so each query's scope releases the pins it left behind, except
+      // those a session artifact built during the query now owns
+      // (SparkEntry.artifact). Pins that existed before the query are not
+      // in its scope, whichever session holds them. Without this the block
+      // manager keeps every query's dead pins for the whole session (~260
+      // per full pass measured at sf0.1) and late queries pay the memory
+      // and GC pressure of early ones. The release blocks, so it finishes
+      // before the next query's clock starts.
+      val dead = pins -- SparkEntry.livePinRddIds(spark)
+      leaked += dead.size
+      Pins.release(spark.sparkContext, dead)
       secs
     }
     val ordered = queries.toSeq.sortBy(_._1)
@@ -84,17 +78,18 @@ object Bench {
       ordered.map { case (n, fn) => n -> once(n, fn) }.toMap
     }
     System.err.println(
-      s"bench hygiene: released $leaked dead pin RDDs (cache-reachable pins protected)")
+      s"bench hygiene: released $leaked dead pin RDDs (artifact-owned pins kept)")
     (ordered.map { case (n, _) => n -> perPass.map(_(n)).min },
       errors.toMap)
   }
 
-  def main(args: Array[String]): Unit = {
-    val jvmStart = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getStartTime
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
+  /** The session of the dev harnesses (Bench, JobProfile, PlanDump):
+    * `local[SPARK_GRAFT_CPUS]` (default `defaultCpus`) with as many
+    * shuffle partitions, warmed up by one lineitem aggregate so the first
+    * timed query isn't charged for JIT.
+    */
+  def session(sfDir: String, defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -108,10 +103,18 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // JVM/codegen warmup so the first timed query isn't charged for JIT
     try spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()
     catch { case _: Throwable => }
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val jvmStart = java.lang.management.ManagementFactory
+      .getRuntimeMXBean.getStartTime
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
+    val spark = session(sfDir, defaultCpus = 4)
     // noop sink forces full evaluation of every column (a bare count() lets
     // Catalyst prune projections, under-measuring expression-heavy queries).
     // Best-of-`passes` (default 3): later passes amortize codegen/JIT and

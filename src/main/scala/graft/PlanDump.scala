@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev-only optimization harness (round 11): dump `explain("formatted")`
@@ -15,23 +14,11 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r11")
     val timed = args.nonEmpty
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().collect()
-    catch { case _: Throwable => }
+    val spark = Bench.session(sfDir, defaultCpus = 32)
     Files.createDirectories(Paths.get(outDir))
     val all = SparkEntry.queries ++ SparkEntry.benchOnly
     val names = if (args.nonEmpty) args.toSeq else all.keys.toSeq.sorted

@@ -20,11 +20,18 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
-      if (only.isEmpty || only(name))
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      if (only.isEmpty || only(name)) {
+        // one pin scope per query, as in Bench.run: once the write is
+        // done, release the pins the query left that no artifact owns
+        val (_, pins) = Pins.track(spark.sparkContext) {
+          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          }
+        }
+        Pins.release(spark.sparkContext,
+          pins -- SparkEntry.livePinRddIds(spark))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.CorpusFunctions._
+import graft.graph.Iterate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -865,46 +866,20 @@ object Dedup {
         col(textCol).substr(col("_pos").cast("int"), lit(k)).as("gram"))
   }
 
-  /** Broadcast cap for the survivor-set joins of the substring-dedup
-    * operators: ~4M 8-byte keys ≈ a few tens of MB as a HashedRelation —
-    * comfortably inside executor memory, far above any normal corpus's
-    * duplicated-gram census.
-    */
-  private val SurvivorBroadcastCap = 4L * 1000 * 1000
-
-  /** Pin a small survivor/dimension table and pick the join strategy from
-    * its MEASURED size: explicit `broadcast` under `cap` rows, plain
-    * shuffled equi-join above it. The count is one action over the
-    * already-aggregated table (localCheckpoint pins it, so the aggregation
-    * never re-runs for the join). The explicit gate exists because an
-    * unhinted plan is NOT free even when AQE later converts it to a
-    * broadcast join: the probe side — here the full per-position gram
-    * stream, k bytes of text per character of corpus — is shuffle-WRITTEN
-    * before AQE can decide (measured 20× on the span queries). Gating on
-    * the measured row count keeps the normal regime write-free while the
-    * degenerate regime (a heavily-duplicated corpus whose survivor set
-    * outgrows the cap) falls back to the linear shuffled join with no
-    * executor-memory ceiling.
-    */
-  private def gateBroadcast(df: DataFrame, cap: Long): DataFrame = {
-    val pinned = df.localCheckpoint(true)
-    if (pinned.count() <= cap) broadcast(pinned) else pinned
-  }
-
   /** Shared passes of the substring-dedup operators: the positions whose
     * k-gram EXACT text occurs ≥ minOcc times corpus-wide.
     *
     * Pass 1 groups 8-byte xxhash64(gram) keys — the wide stage carries no
     * strings — and keeps hashes with ≥ minOcc occurrences. Pass 2 joins the
     * re-enumerated grams against that survivor set (count-gated broadcast,
-    * see [[gateBroadcast]]: explicit broadcast in the normal regime where
-    * duplicated grams are rare, shuffled equi-join fallback — linear, no
-    * executor-memory ceiling — on heavily-duplicated corpora where the
-    * survivor set outgrows the cap), then regroups survivors by the REAL
-    * gram text. The exact regroup makes the operators collision-proof: a
-    * 64-bit birthday collision (expected in bulk at ~1e14 positions) can
-    * only add a candidate that the regroup discards, never mark a unique
-    * gram duplicated, and the per-gram owner (corpus-first occurrence) is
+    * see [[Iterate.gatedBroadcast]]: explicit broadcast in the normal
+    * regime where duplicated grams are rare, shuffled equi-join fallback
+    * — linear, no executor-memory ceiling — on heavily-duplicated corpora
+    * where the survivor set outgrows the cap), then regroups survivors by
+    * the REAL gram text. The exact regroup makes the operators
+    * collision-proof: a 64-bit birthday collision (expected in bulk at
+    * ~1e14 positions) can only add a candidate that the regroup discards,
+    * never mark a unique gram duplicated, and the per-gram owner (corpus-first occurrence) is
     * computed per exact gram, not per hash group. Pass 3 re-joins positions
     * to the verified-gram table on (_h, gram) — gated the same way.
     *
@@ -926,16 +901,15 @@ object Dedup {
                                keepOwner: Boolean): DataFrame = {
     def grams = gramStream(docs, k, window, idCol, textCol)
       .withColumn("_h", xxhash64(col("gram")))
-    val hot = gateBroadcast(
+    val hot = Iterate.gatedBroadcast(
       grams.groupBy("_h").agg(count(lit(1)).as("_c"))
         .filter(col("_c") >= minOcc)
-        .select("_h"),
-      SurvivorBroadcastCap)
+        .select("_h"))
     // one candidate subtree feeds BOTH the verify regroup and the final
     // position join (ReuseExchange shares its shuffle in the fallback
     // regime; it is a narrow scan in the broadcast regime)
     val cand = grams.join(hot, Seq("_h"))
-    val verified = gateBroadcast(
+    val verified = Iterate.gatedBroadcast(
       cand
         .groupBy("_h", "gram")
         .agg(count(lit(1)).as("_c"),
@@ -944,7 +918,7 @@ object Dedup {
         .select(col("_h"), col("gram"), col("_own")),
       // verified rows carry the k-char gram text, so the byte cap is the
       // same order as the hash set's at k=60
-      SurvivorBroadcastCap / 8)
+      Iterate.BroadcastCap / 8)
     val pos = cand.join(verified, Seq("_h", "gram"))
     if (keepOwner) pos.select(col(idCol), col("_pos"), col("_own"))
     else pos.select(col(idCol), col("_pos"))
@@ -961,10 +935,10 @@ object Dedup {
     * Scale shape: pass 1 groups 8-byte xxhash64(gram) keys — the shuffle
     * carries no strings; pass 2 re-enumerates grams (CPU-cheap re-scan
     * beats shuffling position×k bytes), joins the survivor hash set under
-    * a count-gated broadcast ([[gateBroadcast]]: explicit broadcast while
-    * the measured survivor count fits, shuffled equi-join fallback —
-    * linear, no executor-memory ceiling — on heavily-duplicated corpora
-    * where it doesn't) and regroups by the REAL gram text, so a hash
+    * a count-gated broadcast ([[Iterate.gatedBroadcast]]: explicit
+    * broadcast while the measured survivor count fits, shuffled equi-join
+    * fallback — linear, no executor-memory ceiling — on
+    * heavily-duplicated corpora where it doesn't) and regroups by the REAL gram text, so a hash
     * collision only ever adds a candidate that the regroup discards;
     * counts are exact.
     *
@@ -988,13 +962,12 @@ object Dedup {
                      md5Seam: Boolean = false): DataFrame = {
     require(k > 0 && minOcc > 1)
     def grams = gramStream(docs, k, window, idCol, textCol, md5Seam)
-    val hot = gateBroadcast(
+    val hot = Iterate.gatedBroadcast(
       grams
         .groupBy(xxhash64(col("gram")).as("_h"))
         .agg(count(lit(1)).as("_c"))
         .filter(col("_c") >= minOcc)
-        .select("_h"),
-      SurvivorBroadcastCap)
+        .select("_h"))
     grams
       .join(hot, xxhash64(col("gram")) === col("_h"))
       .groupBy("gram")
@@ -1146,10 +1119,10 @@ object Dedup {
     * Scale shape mirrors [[cutDuplicateSpans]] with the survivor set
     * replaced by the EVAL gram table: eval suites are benchmark-sized
     * (MBs against a 100 TB train side), so the distinct (hash, gram)
-    * table takes the count-gated broadcast ([[gateBroadcast]] — explicit
-    * broadcast in the normal regime, linear shuffled equi-join fallback
-    * if an outsized "eval" set is passed), and the train gram stream is
-    * probed WITHOUT shuffling: the join matches on hash AND exact gram
+    * table takes the count-gated broadcast ([[Iterate.gatedBroadcast]] —
+    * explicit broadcast in the normal regime, linear shuffled equi-join
+    * fallback if an outsized "eval" set is passed), and the train gram
+    * stream is probed WITHOUT shuffling: the join matches on hash AND exact gram
     * text in one step, so 64-bit collisions can never cut a clean span.
     * No owner logic — eval text is never "kept first", every train
     * occurrence goes.
@@ -1162,7 +1135,7 @@ object Dedup {
                            evalTextCol: String = "text"): DataFrame = {
     require(k > 0)
     val e = col(evalTextCol)
-    val evalGrams = gateBroadcast(
+    val evalGrams = Iterate.gatedBroadcast(
       eval.filter(length(e) >= k)
         .select(explode(sequence(lit(1L),
           (length(e) - (k - 1)).cast("long"))).as("_pos"), e.as("_t"))
@@ -1171,7 +1144,7 @@ object Dedup {
         .select(xxhash64(col("gram")).as("_h"), col("gram")),
       // rows carry the k-char gram text: same byte-budget cap as the
       // verified-survivor table of the dedup trio
-      SurvivorBroadcastCap / 8)
+      Iterate.BroadcastCap / 8)
     // no distinct: the unwinnowed gram stream emits each (id, pos) once
     // and evalGrams is unique per (hash, gram) — see [[cutDuplicateSpans]]
     val cutPos = gramStream(train, k, None, idCol, textCol)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.CorpusFunctions._
+import graft.graph.Iterate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -615,28 +616,6 @@ object TextAnalysis {
         round(avg(-log(col("_p")) / ln2), 6).as("bits_per_token"))
   }
 
-  /** Broadcast cap for the denominator-enriched n-gram dimension tables
-    * of the Stupid Backoff scorers: ~4M rows of (terms, longs) is a few
-    * hundred MB as a HashedRelation — the same order as
-    * [[graft.ops.Dedup]]'s survivor cap. Below it the probe join
-    * broadcasts explicitly (the enriched table is a JOIN of two pins, so
-    * its estimated size is the pessimistic product and Catalyst would
-    * demote the probe join to a full-stream shuffle — measured 1.2×-2×
-    * on the lm scorers); above it the plain equi-join keeps the linear
-    * no-memory-ceiling fallback of the raw tables.
-    */
-  private val LmDimBroadcastCap = 4L * 1000 * 1000
-
-  /** Pin a derived dimension table and pick the probe-join strategy from
-    * its MEASURED row count (the [[graft.ops.Dedup]] gateBroadcast
-    * discipline): explicit broadcast under `cap`, plain join above.
-    */
-  private def gatedDim(df: DataFrame,
-                       cap: Long = LmDimBroadcastCap): DataFrame = {
-    val pinned = df.localCheckpoint(true)
-    if (pinned.count() <= cap) broadcast(pinned) else pinned
-  }
-
   /** Unigram + bigram count tables of a trained bigram LM — both pinned
     * (the build-once artifacts a scoring pass joins against).
     */
@@ -723,10 +702,11 @@ object TextAnalysis {
     // §2.4). left_outer keeps the null algebra bit-identical (a missing
     // prev unigram — impossible under the minCount contract — still
     // yields the same null propagation as the old standalone join). The
-    // enriched table rides [[gatedDim]]: pinned + count-gated broadcast,
-    // because the composite join estimate is pessimistic (sizes multiply)
-    // and would silently demote the probe join to a full-stream shuffle.
-    val big = gatedDim(
+    // enriched table rides [[Iterate.gatedBroadcast]] (pinned + count-gated
+    // broadcast) because the composite join estimate is pessimistic (sizes
+    // multiply) and would silently demote the probe join to a full-stream
+    // shuffle.
+    val big = Iterate.gatedBroadcast(
       lm.bigrams.select(col("prev"), col("term"), col("n").as("_n2"))
         .join(lm.unigrams.select(col("term").as("prev"), col("n").as("_np")),
           Seq("prev"), "left_outer"))
@@ -828,16 +808,16 @@ object TextAnalysis {
     // dimension tables — FIVE full-stream join stages collapse to THREE
     // (guide §1.2.1 / §2.4). left_outer keeps the null algebra
     // bit-identical to the old standalone joins; the enriched tables ride
-    // [[gatedDim]] (pinned + count-gated broadcast) because the composite
-    // join estimate would demote the probe joins to full-stream shuffles
-    // (see [[stupidBackoffBits]]).
-    val tri = gatedDim(
+    // [[Iterate.gatedBroadcast]] (pinned + count-gated broadcast) because
+    // the composite join estimate would demote the probe joins to
+    // full-stream shuffles (see [[stupidBackoffBits]]).
+    val tri = Iterate.gatedBroadcast(
       lm.trigrams.select(col("prev2"), col("prev"), col("term"),
         col("n").as("_n3"))
         .join(lm.bigrams.select(col("prev").as("prev2"),
           col("term").as("prev"), col("n").as("_nc")),
           Seq("prev2", "prev"), "left_outer"))
-    val big = gatedDim(
+    val big = Iterate.gatedBroadcast(
       lm.bigrams.select(col("prev"), col("term"), col("n").as("_n2"))
         .join(lm.unigrams.select(col("term").as("prev"), col("n").as("_np")),
           Seq("prev"), "left_outer"))
