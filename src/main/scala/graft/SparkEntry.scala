@@ -1573,11 +1573,10 @@ object SparkEntry {
         .filter(col("inter") / (col("size_a") + col("size_b") - col("inter"))
           >= 0.5)
         .select("id_a", "id_b")
-      // clustersFromPairs' CC loop eagerly materializes both its edge set
-      // and its result (localCheckpoint), so nothing downstream re-reads
-      // sh0 — safe to release before returning the (pinned) clusters
+      // clustersFromPairs reads pairs only through its connected
+      // components pins, so nothing reads sh0 afterwards
       val out = graft.ops.Dedup.clustersFromPairs(docs, pairs)
-      sh0.unpersist()
+      Pins.release(sh0)
       out
     }),
 
@@ -2509,7 +2508,7 @@ object SparkEntry {
         minQuality = 0.0, maxRepetition = 0.9, nearDupThreshold = 0.5,
         nearDupNumHashes = 0, nearDupBands = 1,
         chunkTokens = 64, chunkStride = 64, packBudget = 512)
-      r.chunks.unpersist()
+      Pins.release(r.chunks)
       r.report
     }),
 
@@ -2545,7 +2544,8 @@ object SparkEntry {
         minQuality = 0.0, maxRepetition = 0.9, nearDupThreshold = 0.5,
         numHashes = 0, bands = 1,
         chunkTokens = 64, chunkStride = 64, packBudget = 512)
-      r1.chunks.unpersist(); r2.chunks.unpersist()
+      // the reports are local rows: no pin of either day is read again
+      Pins.release(r1.admitted, r2.admitted, r2.chunks)
       r2.report
     }),
 
@@ -3564,7 +3564,6 @@ object SparkEntry {
         numHashes = 0, bands = 1,
         chunkTokens = 64, chunkStride = 64, packBudget = 512,
         audit = false, batchId = "day-1")
-      r.chunks.unpersist()
       r.card
     }),
 

@@ -151,7 +151,7 @@ object ConnectedComponents {
     // converges in O(log² n) rounds, so hitting this means maxRounds was
     // sized far below the graph's diameter class — raise it.
     if (!r.converged) {
-      e.unpersist()
+      r.state.release()
       throw new IllegalStateException(
         s"connected components did not converge in $maxRounds rounds; " +
           "raise maxRounds")
@@ -163,7 +163,7 @@ object ConnectedComponents {
       .select(col("id"),
         coalesce(col("component_id"), col("id")).as("component_id"))
       .localCheckpoint(true)
-    e.unpersist()
+    r.state.release()
     out
   }
 }

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -68,7 +69,7 @@ object GraphOps {
     val r = Iterate.fixpoint("unitHierarchy",
         Iterate.Superstep((base.df, 1), base.stats,
           converged = base.long("frontier") == 0),
-        maxDepth - 1)(_._1.unpersist()) { case (closure, d) =>
+        maxDepth - 1)(st => Pins.release(st._1)) { case (closure, d) =>
       val next = closure.filter(col("depth") === d).alias("f")
         .join(edges.alias("e"), col("f.ancestor_id") === col("e.src"))
         .select(col("f.unit_id"), col("e.dst").as("ancestor_id"),
@@ -80,7 +81,7 @@ object GraphOps {
       Iterate.Superstep((p.df, d + 1), p.stats,
         converged = p.long("frontier") == 0)
     }
-    edges.unpersist()
+    Pins.release(edges)
     r.state._1
   }
 
@@ -148,7 +149,7 @@ object GraphOps {
         org.apache.spark.sql.expressions.Window.partitionBy("component_id")))
       .select(col("m").as("author_uuid"), col("_cm").as("component_id"))
       .localCheckpoint(true)
-    verts.unpersist()
+    Pins.release(verts)
     out
   }
 
@@ -431,7 +432,7 @@ object GraphOps {
         val out = verts.join(ranksDf, Seq("vid"))
           .select(col("uuid").as("author_uuid"), col("pagerank"))
           .localCheckpoint(true)
-        withDeg.unpersist()
+        Pins.release(withDeg)
         return out
       }
     }
@@ -472,14 +473,14 @@ object GraphOps {
           .agg(coalesce(max(abs(col("pagerank") - col("_prev")))
             .cast("double"), lit(0d)))
           .head().getDouble(0)
-      ranks.unpersist()
+      Pins.release(ranks)
       ranks = next
       iter += 1
     }
     val out = verts.join(ranks, Seq("vid"))
       .select(col("uuid").as("author_uuid"), col("pagerank"))
       .localCheckpoint(true)
-    withDeg.unpersist(); ranks.unpersist()
+    Pins.release(withDeg, ranks)
     out
   }
 
@@ -506,7 +507,7 @@ object GraphOps {
       .select(vid(col("src")).as("src"), vid(col("dst")).as("dst"),
         lit(1L).as("w"))
     val out = powerIterate(verts, edges, tol, maxIter, scale = scale)
-    verts.unpersist()
+    Pins.release(verts)
     out
   }
 
@@ -556,7 +557,7 @@ object GraphOps {
     val edges = coedges
       .select(vid(col("ma")).as("src"), vid(col("mb")).as("dst"), col("w"))
     val out = powerIterate(verts, edges, tol, maxIter, scale = scale)
-    verts.unpersist()
+    Pins.release(verts)
     out
   }
 
@@ -654,7 +655,7 @@ object GraphOps {
       count(lit(1)).as("kept"))
     val r = Iterate.fixpoint("kCore",
         Iterate.Superstep(e0.df, e0.stats, converged = e0.long("kept") == 0),
-        maxIter)(_.unpersist()) { e =>
+        maxIter)(Pins.release(_)) { e =>
       // peeled vertices are observed on the degree aggregate, inside the
       // round's own job: a vertex below k loses all of its (>= 1) edges,
       // so no vertex peeled <=> no edge dropped. The semi-joins keep the
@@ -672,7 +673,7 @@ object GraphOps {
         converged = p.long("kept") == 0 || p.long("peeled") == 0)
     }
     if (!r.converged) {
-      r.state.unpersist()
+      Pins.release(r.state)
       throw new IllegalStateException(s"kCore: no fixpoint after $maxIter " +
         s"rounds (${r.stats("kept")} edges live)")
     }
@@ -813,10 +814,8 @@ object GraphOps {
       resetCol = sources.map(_ => "_reset"), scale = scale,
       driverFoldMaxRows = driverFoldMaxRows)
       .withColumnRenamed("author_uuid", "vertex")
-    // powerIterate checkpoints withDeg (built from wedges -> half) and
-    // its own result before returning, so half's blocks are safe to free
-    half.unpersist()
-    verts.unpersist()
+    // powerIterate's result is pinned: nothing reads half or verts
+    Pins.release(half, verts)
     out
   }
 
@@ -893,7 +892,7 @@ object GraphOps {
     val r = Iterate.fixpoint("labelPropagation",
         Iterate.Superstep(Option.empty[DataFrame], Map.empty,
           converged = false),
-        maxIter)(_.foreach(_.unpersist())) { state =>
+        maxIter)(_.foreach(Pins.release(_))) { state =>
       val votes = state match {
         case None => sym.groupBy(col("u").as("vertex")) // dedupes edges
           .agg(collect_set(col("v")).as("_nbrs"))
@@ -919,7 +918,7 @@ object GraphOps {
     }
     val state = r.state.get // maxIter >= 1: round 1 always runs
     try state.select("vertex", "community").localCheckpoint(true)
-    finally state.unpersist()
+    finally Pins.release(state)
   }
 
   /** Most frequent label of a SORTED vote array, ties to the smallest:

@@ -44,7 +44,7 @@ object Iterate {
       case other => throw new IllegalStateException(
         s"no numeric statistic $name was observed (got $other)")
     }
-    def release(): Unit = df.unpersist()
+    def release(): Unit = graft.Pins.release(df)
   }
 
   /** Pin `df`, observing the named aggregate `stats` over its rows. */

@@ -1,5 +1,6 @@
 package graft.ingest
 
+import graft.Pins
 import graft.enrich.CountryLinker
 import graft.graph.GraphStore
 import graft.report.Metrics
@@ -29,7 +30,8 @@ import org.apache.spark.sql.functions._
   */
 object Ingest {
 
-  /** One full ingestion run. Returns the 14-counter metrics report (1 row).
+  /** One full ingestion run. Returns the 14-counter metrics report (1 row,
+    * pinned: the caller releases it), timed from the call to the report.
     *
     * @param openAlex optional OpenAlex works table (doi, id, cited_by_count)
     *   — the prefetched-JSON analogue of the reference's per-DOI OpenAlex
@@ -43,8 +45,8 @@ object Ingest {
           payloads: DataFrame, openAlex: Option[DataFrame] = None,
           countriesSeed: Option[DataFrame] = None,
           limit: Option[Int] = None, update: Boolean = false,
-          citedByCountYear: Option[Int] = None,
-          totalTimeSeconds: Double = 0.0): DataFrame = {
+          citedByCountYear: Option[Int] = None): DataFrame = {
+    val t0 = System.nanoTime()
 
     // The four reused frames are PINNED (eager localCheckpoint), not
     // cached: an append re-caches every cached plan over the appended
@@ -115,12 +117,12 @@ object Ingest {
           coalesce(col("openalex_metadata"), lit(false)))
         .withColumn("ingestion_success",
           col("openaire_metadata") && col("valid_pattern")),
-      update = update, totalTimeSeconds = totalTimeSeconds)
-      // pin the (1-row) report, then release the run's caches — a
+      update = update, totalTimeSeconds = (System.nanoTime() - t0) / 1e9)
+      // pin the (1-row) report, then release the run's pins — a
       // long-lived session (streaming micro-batches) must not accumulate
       // per-run blocks
       .localCheckpoint(true)
-    Seq(tracker, parsed, newOut, resolved).foreach(_.unpersist())
+    Pins.release(tracker, parsed, newOut, resolved)
     report
   }
 
@@ -179,13 +181,7 @@ object Ingest {
     val doiList = DoiOps.readDoiList(spark, doiListPath)
     val keyed = readPayloadDir(spark, doiList, payloadDir)
 
-    val t0 = System.nanoTime()
-    val report = Ingest.run(spark, store, doiList, keyed,
-      totalTimeSeconds = 0.0)
-    report.drop("total_time_seconds")
-      .withColumn("total_time_seconds",
-        round(lit((System.nanoTime() - t0) / 1e9), 3))
-      .show(truncate = false)
+    Ingest.run(spark, store, doiList, keyed).show(truncate = false)
     val violations = store.assertConstraints()
     println(s"constraint violations: $violations")
     println("nodes/authors=" + store.nodeTable("authors").count() +

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1528,11 +1529,8 @@ object CorpusOps {
         guarded(col("_nmin"), "n_raters").as("n_raters"),
         guarded(col("_s2"), "s2").as("s2"),
         guarded(col("_p2"), "p2").as("p2"))
-      // pin the 1-row result, then free the cell table (the
-      // pmiCollocations discipline — never unpersist a checkpoint a
-      // lazy plan still references)
       .localCheckpoint(true)
-    cells.unpersist()
+    Pins.release(cells)
     out
   }
 
@@ -1697,7 +1695,7 @@ object CorpusOps {
       mom(col("_rb") * col("_rb"), "s_b2").as("s_b2"),
       mom(col("_ra") * col("_rb"), "s_ab").as("s_ab"))
       .localCheckpoint(true)
-    pairs.unpersist()
+    Pins.release(pairs)
     out
   }
 
@@ -1771,7 +1769,7 @@ object CorpusOps {
       .select(col("m").cast("long").as("m"), col("n_units"),
         col("disagree_m"), col("n"), col("sq_sum"))
       .localCheckpoint(true)
-    cells.unpersist(); units.unpersist()
+    Pins.release(cells, units)
     out
   }
 }

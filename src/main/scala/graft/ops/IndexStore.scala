@@ -704,7 +704,8 @@ object IndexStore {
     val stats = TextAnalysis.mergeStats(
       TextAnalysis.additiveStatsOf(base), addStats)
     TextAnalysis.PostingsIndex(base.postings.unionByName(dp),
-      base.docLens.unionByName(dl), docFreqs, stats, base.idCol)
+      base.docLens.unionByName(dl), docFreqs, stats, base.idCol,
+      delta = Seq(docFreqs, stats))
   }
 
   /** [[readPostingsIndex]] plus the LIVE streaming append deltas written
@@ -771,8 +772,7 @@ object IndexStore {
       // the derivation pinned the merged dictionary/stats; the artifact
       // is on disk now — a compaction-cadence job must not accumulate
       // session blocks
-      merged.docFreqs.unpersist()
-      merged.stats.unpersist()
+      merged.releaseDelta()
       hwNew
     }
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -130,7 +131,7 @@ object Pipelines {
       val pinned = df.localCheckpoint(true)
       if (audit) stages += name -> pinned.count()
       spark.sparkContext.setJobDescription(null)
-      prevPinned.foreach(_.unpersist())
+      prevPinned.foreach(Pins.release(_))
       prevPinned = Some(pinned)
       pinned
     }
@@ -430,7 +431,7 @@ object Pipelines {
     // corpus materialization per stage, ~10x the pipeline's necessary
     // I/O. The previous pin is released only when the NEXT pin has
     // materialized (localCheckpoint(true) is eager), so lazy spans
-    // between pins never read unpersisted blocks.
+    // between pins never read released blocks.
     def stage(name: String, df: DataFrame,
               fanout: Boolean = false): DataFrame =
       if (audit || fanout) {
@@ -440,7 +441,7 @@ object Pipelines {
         val pinned = df.localCheckpoint(true)
         if (audit) stages += name -> pinned.count()
         spark.sparkContext.setJobDescription(null)
-        prevPinned.foreach(_.unpersist())
+        prevPinned.foreach(Pins.release(_))
         prevPinned = Some(pinned)
         pinned
       } else df
@@ -526,7 +527,7 @@ object Pipelines {
         .select(col("batch_id").as(idCol)).distinct(),
       Seq(idCol), "left_anti"),
       fanout = true) // decontaminate self-joins it
-    nearBatch.unpersist() // the stage pin above is eager — safe to drop
+    Pins.release(nearBatch) // the stage pin above is eager — safe to drop
 
     val clean = stage("decontaminate", nearNew.join(
       Dedup.decontaminate(nearNew, eval, idCol = idCol, textCol = textCol)
@@ -550,6 +551,7 @@ object Pipelines {
       // fans out three ways: chunk/pack, the new-state index build
       // (which itself reads it several times), and the per-day card
       fanout = true)
+    prevPinned = None // the result owns it: no later stage releases it
 
     val scrubbed = admitted.withColumn(textCol,
       CorpusOps.scrubText(col(textCol)))

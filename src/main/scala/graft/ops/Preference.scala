@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -155,7 +156,7 @@ object Preference {
         col("model_2").isNotNull)
       .select("model_1", "model_2", "wins_1", "wins_2",
         "ties", "n").collect()
-    wm.unpersist()
+    Pins.release(wm)
     val ids = pairs.flatMap(r => Seq(r.getString(0), r.getString(1)))
       .distinct.sorted
     val idx = ids.zipWithIndex.toMap

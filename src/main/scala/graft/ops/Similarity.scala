@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import graft.functions.CorpusFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -105,7 +106,7 @@ object Similarity {
     val base = corpus.select(col(idCol).as("_id"), col(vecCol).as("_v"))
       .localCheckpoint(true)
     val out = kmeansCentroidsPinned(base, nCenters, iters)
-    base.unpersist()
+    Pins.release(base)
     out
   }
 
@@ -136,7 +137,7 @@ object Similarity {
           array_sort(collect_list(struct(col("_pos"), col("_m")))),
           s => s.getField("_m").cast("float")).as("centroid"))
         .localCheckpoint(true)
-      centroids.unpersist()
+      Pins.release(centroids)
       centroids = next
     }
     centroids
@@ -181,28 +182,22 @@ object Similarity {
     */
   final case class IvfIndex(centroids: DataFrame, cells: DataFrame,
                             delta: Option[DataFrame] = None) {
-    /** Drop the pinned blocks THIS index object owns (eager checkpoints
-      * plus, for an appended index, its pinned batch leg). An appended
-      * index SHARES its base's blocks — retire a chain by releasing the
-      * appended indexes first, the base last.
+    /** Release the pins THIS index object created ([[Pins.release]]): a
+      * built index its centroids and cells, an appended index only its
+      * batch leg — its centroids and the base side of its cells are the
+      * base's. The one ownership rule of every index family. An index
+      * loaded from tables holds no pin: [[Pins.release]] rejects it.
       */
-    def release(): Unit = {
-      centroids.unpersist(); cells.unpersist(); delta.foreach(_.unpersist())
-    }
-    /** Free every pinned block the APPEND created (the per-execution
-      * artifact) — the shared base blocks stay live for the next
-      * append/probe. This is the ONE ownership rule across all four
-      * index families: releaseDelta frees exactly what the append
-      * pinned, release() frees the base's own blocks too. The vector
-      * tiers' appends pin only their batch leg;
-      * [[graft.ops.TextAnalysis.PostingsIndex]]'s append additionally
-      * derives (and pins) the merged dictionary/stats, so its
-      * releaseDelta frees those as well — same rule, different append
-      * footprint. Like [[release]], THIS index object is unusable
-      * afterwards: its big tables reference the freed legs. Retire a
-      * chain appended-first, base-last.
+    def release(): Unit =
+      delta.fold(Pins.release(centroids, cells))(Pins.release(_))
+    /** Release the pins the APPEND created (the per-execution artifact),
+      * nothing for a built index: the base stays live for the next
+      * append/probe. [[graft.ops.TextAnalysis.PostingsIndex]]'s append
+      * also pins the merged dictionary/stats, so its releaseDelta frees
+      * those too. THIS index object is unusable afterwards: its cells
+      * read the freed leg.
       */
-    def releaseDelta(): Unit = delta.foreach(_.unpersist())
+    def releaseDelta(): Unit = delta.foreach(Pins.release(_))
   }
 
   /** Build the IVF index: deterministic k-means centroids + nearest-cell
@@ -221,7 +216,7 @@ object Similarity {
     val cells = assignToCentroids(base, centroids)
       .select(col("_id").as("vec_id"), col("_v").as("_cv"), col("center_id"))
       .localCheckpoint(true)
-    base.unpersist()
+    Pins.release(base)
     IvfIndex(centroids, cells)
   }
 
@@ -337,7 +332,7 @@ object Similarity {
     * Caller owns vec_id uniqueness across appends (the incremental-index
     * convention, like [[graft.ops.Dedup.nearDupAgainstIndex]]'s corpus
     * ids) and releases the PREVIOUS index when done probing it — the old
-    * cells block is not unpersisted here. At 100 TB the equivalent move
+    * cells block is not released here. At 100 TB the equivalent move
     * is appending the assignment rows into the cells table persisted
     * bucketed by center_id ([[graft.ops.Bucketing.writeBucketed]]); this
     * is the in-session form.
@@ -430,7 +425,7 @@ object Similarity {
     val out = hist.crossJoin(tvRow)
       .select("center_id", "n_index", "n_batch", "tv_u6", "retrain")
       .localCheckpoint(true)
-    hist.unpersist()
+    Pins.release(hist)
     out
   }
 
@@ -491,11 +486,12 @@ object Similarity {
     */
   final case class IvfIndexQ(centroids: DataFrame, cells: DataFrame,
                              delta: Option[DataFrame] = None) {
-    def release(): Unit = {
-      centroids.unpersist(); cells.unpersist(); delta.foreach(_.unpersist())
-    }
+    /** See [[IvfIndex.release]]; the centroids are always the float
+      * index's ([[quantizeIndex]]), so a quantized index created only
+      * its code cells. */
+    def release(): Unit = Pins.release(delta.getOrElse(cells))
     /** See [[IvfIndex.releaseDelta]]. */
-    def releaseDelta(): Unit = delta.foreach(_.unpersist())
+    def releaseDelta(): Unit = delta.foreach(Pins.release(_))
   }
 
   /** Quantize a built IVF index's cells ([[quantizeInt8]] per vector). The
@@ -572,7 +568,7 @@ object Similarity {
     * broadcasts into every encode/probe pass.
     */
   final case class PqCodebooks(m: Int, subDim: Int, codebooks: DataFrame) {
-    def release(): Unit = codebooks.unpersist()
+    def release(): Unit = Pins.release(codebooks)
   }
 
   /** Squared L2 distance between two float-array columns (double math,
@@ -632,14 +628,15 @@ object Similarity {
                        iters: Int = 3, idCol: String = "vec_id",
                        vecCol: String = "embedding"): PqCodebooks = {
     val subDim = vecDim(corpus, vecCol, m)
-    val parts = (0 until m).map { s =>
-      kmeansCentroids(
-        corpus.select(col(idCol).as("_sid"),
-          slice(col(vecCol), s * subDim + 1, subDim).as("_sv")),
-        ksub, iters, "_sid", "_sv")
-        .select(lit(s).as("sub"), col("center_id").as("code"), col("centroid"))
-    }
-    PqCodebooks(m, subDim, parts.reduce(_ union _).localCheckpoint(true))
+    val parts = (0 until m).map(s => kmeansCentroids(
+      corpus.select(col(idCol).as("_sid"),
+        slice(col(vecCol), s * subDim + 1, subDim).as("_sv")),
+      ksub, iters, "_sid", "_sv"))
+    val cbs = parts.zipWithIndex.map { case (p, s) =>
+      p.select(lit(s).as("sub"), col("center_id").as("code"), col("centroid"))
+    }.reduce(_ union _).localCheckpoint(true)
+    Pins.release(parts: _*)
+    PqCodebooks(m, subDim, cbs)
   }
 
   /** Encode the corpus against PQ codebooks: per (vector, subspace) the
@@ -759,12 +756,11 @@ object Similarity {
   final case class IvfPqIndex(centroids: DataFrame, cells: DataFrame,
                               cb: PqCodebooks,
                               delta: Option[DataFrame] = None) {
-    def release(): Unit = {
-      centroids.unpersist(); cells.unpersist(); cb.release()
-      delta.foreach(_.unpersist())
-    }
+    /** See [[IvfIndex.release]]; a built index also trained `cb`. */
+    def release(): Unit =
+      delta.fold(Pins.release(centroids, cells, cb.codebooks))(Pins.release(_))
     /** See [[IvfIndex.releaseDelta]]. */
-    def releaseDelta(): Unit = delta.foreach(_.unpersist())
+    def releaseDelta(): Unit = delta.foreach(Pins.release(_))
   }
 
   /** Build the combined index: IVF cell assignment + PQ codes joined on
@@ -781,7 +777,7 @@ object Similarity {
     val cells = ivf.cells.select(col("vec_id"), col("center_id"))
       .join(pqEncode(corpus, cb, idCol, vecCol), Seq("vec_id"))
       .localCheckpoint(true)
-    ivf.cells.unpersist()
+    Pins.release(ivf.cells)
     IvfPqIndex(ivf.centroids, cells, cb)
   }
 
@@ -899,11 +895,11 @@ object Similarity {
     */
   final case class NswIndex(edges: DataFrame, entries: DataFrame,
                             delta: Option[DataFrame] = None) {
-    def release(): Unit = {
-      edges.unpersist(); entries.unpersist(); delta.foreach(_.unpersist())
-    }
+    /** See [[IvfIndex.release]]. */
+    def release(): Unit =
+      delta.fold(Pins.release(edges, entries))(Pins.release(_))
     /** See [[IvfIndex.releaseDelta]]. */
-    def releaseDelta(): Unit = delta.foreach(_.unpersist())
+    def releaseDelta(): Unit = delta.foreach(Pins.release(_))
   }
 
   /** Build the NSW graph. Three edge families, each covering a failure
@@ -975,7 +971,7 @@ object Similarity {
     val edges = (local +: mesh +: fingerEdges).reduce(_ union _)
       .distinct().localCheckpoint(true)
     val entries = gateways.localCheckpoint(true)
-    ranked.unpersist()
+    Pins.release(ranked)
     ivf.release()
     NswIndex(edges, entries)
   }
@@ -1037,7 +1033,7 @@ object Similarity {
       val next = topEf(best.union(score(reached))
           .dropDuplicates("query_id", "vec_id"))
         .localCheckpoint(true)
-      best.unpersist()
+      Pins.release(best)
       best = next
     }
     val out = best
@@ -1046,7 +1042,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id"), col("_cos").as("cosine"),
         col("rank"))
       .localCheckpoint(true)
-    best.unpersist()
+    Pins.release(best)
     out
   }
 
@@ -1097,7 +1093,7 @@ object Similarity {
     // new-edge table into the bucketed persisted adjacency,
     // [[graft.ops.IndexStore.writeNswIndex]]).
     val newEdges = mirrorEdges(nn).localCheckpoint(true)
-    found.unpersist() // the search's pinned result is folded into newEdges
+    Pins.release(found) // the search's pinned result is folded into newEdges
     NswIndex(index.edges.union(newEdges), index.entries, Some(newEdges))
   }
 
@@ -1160,7 +1156,7 @@ object Similarity {
       hops = hops, entries = entries, corpusIdCol = corpusIdCol)
     val out = nswDriftReportFrom(index, found, q.select("query_id"),
       reachThresholdU6, growthThresholdU6)
-    found.unpersist() // the report is pinned; the search leg can go
+    Pins.release(found) // the report is pinned; the search leg can go
     out
   }
 

@@ -92,17 +92,6 @@ object Sketches {
         col("_e.est_count").as("est_count"),
         (col("_i") + 1).cast("int").as("rank")): _*)
 
-  /** Count–min frequency sketch per group (binary, mergeable): the
-    * transport format for "how often does value X occur" questions that
-    * must be answered later without the raw rows.
-    */
-  def countMin(df: DataFrame, groupCols: Seq[String], valueCol: String,
-               eps: Double = 0.001, confidence: Double = 0.99,
-               seed: Int = 42): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
-      .agg(count_min_sketch(col(valueCol), lit(eps), lit(confidence),
-        lit(seed)).as("cms"))
-
   /** KMV (bottom-k) distinct-count PARTIAL sketches per (group, slice) —
     * the bottom-k twin of [[hllPartials]]: each row carries the k
     * smallest DISTINCT 60-bit md5-lattice hashes of `valueCol`

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import graft.functions.CorpusFunctions._
 import graft.graph.Iterate
 import org.apache.spark.sql.{Column, DataFrame}
@@ -447,7 +448,7 @@ object TextAnalysis {
       .filter(col("tfidf") > 0)
       .select(col("_id"), col("term"), col("df"), col("tfidf"))
       .localCheckpoint(true)
-    tf.unpersist()
+    Pins.release(tf)
     val norms = w.groupBy("_id")
       .agg(sqrt(sum(col("tfidf") * col("tfidf"))).as("_norm"))
     // Norms attach AFTER the dot-product aggregate, on the (id-keyed)
@@ -668,7 +669,7 @@ object TextAnalysis {
       bigrams = pairCounts.filter(col("prev").isNotNull)
         .filter(col("n") >= minCount)
         .select("prev", "term", "n").localCheckpoint(true))
-    pairCounts.unpersist()
+    Pins.release(pairCounts)
     lm
   }
 
@@ -773,7 +774,7 @@ object TextAnalysis {
       trigrams = tripleCounts.filter(col("prev2").isNotNull)
         .filter(col("n") >= minCount)
         .select("prev2", "prev", "term", "n").localCheckpoint(true))
-    tripleCounts.unpersist()
+    Pins.release(tripleCounts)
     lm
   }
 
@@ -887,7 +888,7 @@ object TextAnalysis {
     * vocabulary × classes and joins broadcast-style while small).
     */
   final case class NbModel(classes: DataFrame, terms: DataFrame) {
-    def release(): Unit = { classes.unpersist(); terms.unpersist() }
+    def release(): Unit = Pins.release(classes, terms)
   }
 
   /** Train a multinomial Naive Bayes text classifier from a labeled
@@ -1034,7 +1035,7 @@ object TextAnalysis {
           / (col("_tr").cast("double") + b)))
       .select("bucket", "_lr")
       .localCheckpoint(true) // ≤ buckets rows, read by every scoring task
-    tgtCnt.unpersist() // ratio (its only consumer) is materialized
+    Pins.release(tgtCnt) // ratio (its only consumer) is materialized
     rawG.join(broadcast(ratio), Seq("bucket"))
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_feats"),
@@ -1100,33 +1101,23 @@ object TextAnalysis {
     * At 100 TB persist `postings` bucketed by term
     * ([[Bucketing.writeBucketed]]) so every probe's query-term join is
     * one-sided, and `docLens` bucketed by the doc id for the scoring
-    * join; `docFreqs` broadcasts.
+    * join; `docFreqs` broadcasts. `delta` holds the pins a DERIVED index
+    * created: an append's batch legs plus the merged dictionary and stats
+    * (new objects — the merge never touches the base's), or just the
+    * merged dictionary and stats of a delta-merged load
+    * ([[graft.ops.IndexStore.readPostingsIndexWithDelta]]).
     */
   final case class PostingsIndex(postings: DataFrame, docLens: DataFrame,
                                  docFreqs: DataFrame, stats: DataFrame,
                                  idCol: String,
                                  delta: Seq[DataFrame] = Nil) {
-    /** Drop the pinned blocks THIS index object owns (its eager
-      * checkpoints plus, for an appended index, its pinned batch legs).
-      * An appended index SHARES its base's postings/docLens blocks —
-      * retire a chain by releasing the appended indexes first, the base
-      * last.
-      */
-    def release(): Unit = {
-      postings.unpersist(); docLens.unpersist(); docFreqs.unpersist()
-      stats.unpersist(); delta.foreach(_.unpersist())
-    }
-    /** See [[graft.ops.Similarity.IvfIndex.releaseDelta]] — the shared
-      * ownership rule: free every pinned block the APPEND created, keep
-      * the base's. This tier's append derives (and pins) the merged
-      * dictionary and stats in addition to its batch legs, so they are
-      * append-owned and freed here; the base's own docFreqs/stats
-      * blocks are untouched (they are different objects — the merge
-      * never mutates them).
-      */
-    def releaseDelta(): Unit = {
-      delta.foreach(_.unpersist()); docFreqs.unpersist(); stats.unpersist()
-    }
+    /** See [[graft.ops.Similarity.IvfIndex.release]]: a built index
+      * created all four tables, a derived one its `delta`. */
+    def release(): Unit =
+      if (delta.isEmpty) Pins.release(postings, docLens, docFreqs, stats)
+      else releaseDelta()
+    /** See [[graft.ops.Similarity.IvfIndex.releaseDelta]]. */
+    def releaseDelta(): Unit = Pins.release(delta: _*)
   }
 
   /** The postings dataflow (not pinned — [[buildPostingsIndex]] pins;
@@ -1233,7 +1224,7 @@ object TextAnalysis {
       broadcastAdd = addDf.count() <= broadcastTermCap)
     val statsNew = mergeStats(additiveStatsOf(index), addStats)
     PostingsIndex(postings, docLens, docFreqs, statsNew, index.idCol,
-      delta = Seq(addPostings, addDocLens, addDf))
+      delta = Seq(addPostings, addDocLens, addDf, docFreqs, statsNew))
   }
 
   /** Batch-vocabulary size above which the append/drift paths stop
@@ -1335,7 +1326,7 @@ object TextAnalysis {
       .localCheckpoint(true)
     val out = postingsDriftReportFrom(index, tf,
       oovThresholdU6, dlThresholdU6, broadcastTermCap)
-    tf.unpersist()
+    Pins.release(tf)
     out
   }
 
@@ -1408,7 +1399,7 @@ object TextAnalysis {
       // pin the 1-row report, release the batch-vocabulary frame — no
       // pinned intermediates accumulate across ingest-cadence calls
       .localCheckpoint(true)
-    bTerms.unpersist()
+    Pins.release(bTerms)
     out
   }
 
@@ -1794,11 +1785,9 @@ object TextAnalysis {
         log((col("_n").cast("double") * col("_T")) /
           (col("_np").cast("double") * col("_nt").cast("double"))) / ln2, 6))
       .select(col("prev"), col("term"), col("_n").as("n_pair"), col("pmi"))
-    // pin the k-row result, then free the vocabulary-sized pair table —
-    // the LM-builder discipline (checkpoint derived, unpersist raw)
     val top = out.orderBy(col("pmi").desc, col("prev"), col("term"))
       .limit(k).localCheckpoint(true)
-    pairCounts.unpersist()
+    Pins.release(pairCounts)
     top
   }
 
@@ -1847,7 +1836,7 @@ object TextAnalysis {
         score.as("textrank"))
       .orderBy(col("textrank").desc, col("term")).limit(k)
       .localCheckpoint(true)
-    pairCounts.unpersist()
+    Pins.release(pairCounts)
     top
   }
 

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import graft.Pins
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -474,9 +475,7 @@ object Streams {
             pinned.join(evidence.select("_k"), Seq("_k"), "left_anti")
               .drop("_k"),
             batchId, outPath)
-          evidence.unpersist()
-          pinned.unpersist()
-          ()
+          Pins.release(evidence, pinned)
         }
       }
       .start()
@@ -529,9 +528,7 @@ object Streams {
           val report = graft.ops.Similarity
             .indexDriftReportFromAssigned(idx, assigned, tvThresholdU6)
           writeBatchIdempotent(report, batchId, auditPath)
-          report.unpersist()
-          assigned.unpersist()
-          ()
+          Pins.release(report, assigned)
         }
       }
       .start()
@@ -571,9 +568,7 @@ object Streams {
           val report = graft.ops.Similarity
             .indexDriftReportFromAssigned(shim, q, tvThresholdU6)
           writeBatchIdempotent(report, batchId, auditPath)
-          report.unpersist()
-          q.unpersist()
-          ()
+          Pins.release(report, q)
         }
       }
       .start()
@@ -611,9 +606,7 @@ object Streams {
           val report = graft.ops.Similarity
             .indexDriftReportFromAssigned(shim, rows, tvThresholdU6)
           writeBatchIdempotent(report, batchId, auditPath)
-          report.unpersist()
-          rows.unpersist()
-          ()
+          Pins.release(report, rows)
         }
       }
       .start()
@@ -663,9 +656,7 @@ object Streams {
           val report = graft.ops.TextAnalysis.postingsDriftReportFrom(
             base, tf, oovThresholdU6, dlThresholdU6)
           writeBatchIdempotent(report, batchId, auditPath)
-          report.unpersist()
-          tf.unpersist()
-          ()
+          Pins.release(report, tf)
         }
       }
       .start()
@@ -749,9 +740,7 @@ object Streams {
             builtEdges = graft.ops.IndexStore
               .nswBuiltEdges(spark, indexPrefix))
           writeBatchIdempotent(report, batchId, auditPath)
-          report.unpersist()
-          found.unpersist()
-          ()
+          Pins.release(report, found)
         }
       }
       .start()
@@ -913,8 +902,7 @@ object Streams {
           writeBatchIdempotent(report, batchId, auditPath)
           writeBatchIdempotent(batch, batchId,
             if (bad) rejectPath else outPath)
-          report.unpersist()
-          () // foreachBatch wants Unit; unpersist returns the frame
+          Pins.release(report)
         }
       }
       .start()
@@ -1007,7 +995,7 @@ object Streams {
           writeBatchIdempotent(r.chunks, batchId, outPath)
           graft.ops.IndexStore.writeCorpusState(r.state,
             s"${statePrefix}_g$batchId", stateBuckets, statePath)
-          r.chunks.unpersist()
+          Pins.release(r.admitted) // audit = false: the batch's one pin
           // retention: drop generations older than the newest
           // `retainGenerations` (AFTER the new one is durably written)
           val pat = s"^${java.util.regex.Pattern.quote(statePrefix.toLowerCase)}_g(\\d+)_fingerprints$$".r
@@ -1086,9 +1074,7 @@ object Streams {
           writeBatchIdempotent(
             r.admitted.select(stateCols.map(col): _*), batchId,
             stateDeltaPath)
-          r.chunks.unpersist()
-          r.admitted.unpersist()
-          ()
+          Pins.release(r.admitted) // audit = false: the batch's one pin
         }
       }
       .start()
@@ -1105,10 +1091,8 @@ object Streams {
           .withColumn("submission_order", monotonically_increasing_id())
           .select(trim(col("value")).as("raw_doi"), col("submission_order"))
           .filter(col("raw_doi") =!= "")
-        if (!doiList.isEmpty) {
-          graft.ingest.Ingest.run(spark, store, doiList, payloads)
-          ()
-        }
+        if (!doiList.isEmpty)
+          Pins.release(graft.ingest.Ingest.run(spark, store, doiList, payloads))
       }
       .start()
   }

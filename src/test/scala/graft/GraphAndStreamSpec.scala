@@ -307,6 +307,34 @@ class GraphAndStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(store.edgeTable("author_of").count() == 1)
   }
 
+  test("doi landing ingest releases each micro-batch's pins") {
+    import spark.implicits._
+    val landing = Files.createTempDirectory("landing-pins").toString
+    val checkpoint = Files.createTempDirectory("ckpt-pins").toString
+    val store = new GraphStore(spark,
+      Files.createTempDirectory("wh-pins").toString)
+    val payload = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/graft/openaire_v2_simple.json"), "UTF-8")
+      .mkString
+    val payloads = Seq(("10.5281/zenodo.4650794", payload))
+      .toDF("doi", "payload")
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    // one landing file per AvailableNow run on one checkpoint: each run
+    // is one micro-batch
+    (1 to 5).foreach { i =>
+      Files.writeString(java.nio.file.Paths.get(s"$landing/batch$i.txt"),
+        "10.5281/zenodo.4650794\n")
+      assert(Streams.doiLandingIngest(spark, landing, payloads, store,
+        checkpoint).awaitTermination(240000))
+    }
+    assert(store.nodeTable("outputs").count() == 1)
+    // by id, not by count: a collected pin of an earlier test must not
+    // make room for one this run left
+    val left = persisted -- before
+    assert(left.isEmpty, s"${left.size} pins left by 5 micro-batches")
+  }
+
   test("streaming near-dup matching flags arrivals against bucket state") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -47,6 +47,16 @@ class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq((doi, "W1234567890", cites)).toDF("doi", "id", "cited_by_count")
   }
 
+  test("a run times itself, from the call to its report") {
+    val store = new GraphStore(spark,
+      Files.createTempDirectory("wh-time").toString)
+    val t0 = System.nanoTime()
+    val report = Ingest.run(spark, store, doiList, payloads).head()
+    val wall = (System.nanoTime() - t0) / 1e9
+    val took = report.getAs[Double]("total_time_seconds")
+    assert(took > 0 && took <= wall, s"total_time_seconds $took, wall $wall")
+  }
+
   test("openalex enrichment populates outputs and the success counter") {
     val wh = Files.createTempDirectory("wh-oa").toString
     val store = new GraphStore(spark, wh)

@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-import graft.graph.Iterate
+import graft.graph.{ConnectedComponents, GraphOps, Iterate}
+import graft.ops.Similarity
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.concurrent.{ThreadSignaler, TimeLimits}
@@ -212,5 +214,77 @@ class PinOwnershipSpec extends AnyFunSuite with BeforeAndAfterAll
       .groupBy(col("id") % 3).count()
     val gated = Iterate.gatedBroadcast(empty, cap = 0)
     assert(isBroadcast(gated) && gated.isEmpty)
+  }
+
+  /** Ids of the pinned RDDs a frame's plan reads. */
+  private def pinsOf(dfs: DataFrame*): Set[Int] = dfs.flatMap(
+    _.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id })
+    .toSet
+
+  test("Pins.release frees a pin, and Iterate's Pin.release goes through it") {
+    val a = Iterate.pin(spark.range(10).toDF("n"))
+    val b = Iterate.pin(spark.range(20).toDF("n"))
+    val ids = pinsOf(a.df) ++ pinsOf(b.df)
+    assert(ids.size == 2 && ids.subsetOf(persisted))
+    Pins.release(a.df)
+    b.release()
+    assert((ids intersect persisted).isEmpty)
+  }
+
+  test("a frame derived from pins is not a pin; a hinted or aliased pin is") {
+    val p = spark.range(10).toDF("n").localCheckpoint(true)
+    intercept[IllegalArgumentException](Pins.release(p.select(col("n") + 1)))
+    intercept[IllegalArgumentException](Pins.release(p.union(p)))
+    assert(p.count() == 10, "a rejected release freed nothing")
+    Pins.release(broadcast(p).as("pinned"))
+    assert(!persisted(pinsOf(p).head))
+  }
+
+  test("iterative operators keep only the pins their result holds") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val graph = Seq.fill(120)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+      .toDF("src", "dst")
+    // a triangle with a six-edge tail: k = 2 peels the tail over rounds
+    val tailed = ((0L, 1L) +: (1L, 2L) +: (2L, 0L) +:
+      (2L to 7L).map(i => (i, i + 1))).toDF("src", "dst")
+    val chain = (1 to 9).map(i => (s"u$i", s"u${i + 1}")).toDF("src", "dst")
+    val path = (0L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
+    val vecs = (0 until 200).map(i => (i.toLong,
+      Array.fill(8)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
+    def check(name: String)(result: => Seq[DataFrame]): Unit = {
+      val before = persisted
+      val held = result
+      val grown = persisted -- before
+      val stray = grown -- pinsOf(held: _*)
+      assert(stray.isEmpty, s"$name left pins its result does not hold: " +
+        stray)
+    }
+    check("labelPropagation")(Seq(GraphOps.labelPropagation(graph)))
+    check("kCore")(Seq(GraphOps.kCore(tailed, k = 2)))
+    check("ConnectedComponents.run")(Seq(ConnectedComponents.run(
+      path.select(col("src").as("id")).union(path.select(col("dst"))),
+      path, smallGraphThreshold = 0)))
+    check("unitHierarchy")(Seq(GraphOps.unitHierarchy(chain)))
+    check("buildIvfIndex") {
+      val idx = Similarity.buildIvfIndex(vecs, nCenters = 4, iters = 3)
+      Seq(idx.centroids, idx.cells)
+    }
+  }
+
+  test("src/main pins only by eager localCheckpoint, releases only by Pins") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), "run from the repository root")
+    val banned = Seq(raw"\.unpersist\(", raw"\.cache\(\)", raw"\.persist\(",
+      raw"localCheckpoint\((?!true\))").map(_.r)
+    import scala.jdk.CollectionConverters._
+    val sources = Files.walk(root).iterator().asScala.toSeq.filter(p =>
+      p.toString.endsWith(".scala") && p.getFileName.toString != "Pins.scala")
+    val hits = for {
+      f <- sources
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if banned.exists(_.findFirstIn(line).isDefined)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(sources.nonEmpty && hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 }

@@ -8,7 +8,10 @@ between two bench artifacts cannot distinguish a code regression from
 environment swing. This tool ratios every shared query against the
 median inflation of a pinned SENTINEL set (queries stable since round
 5 that no round has touched), so only the residual — the part a host
-cannot explain — is reported as regression/improvement.
+cannot explain — is reported as regression/improvement. When the
+sentinel drift and the raw comparable-total ratio point in opposite
+directions (a suite-wide change moved the sentinels too), the ratios are
+reported raw instead; the `normalization` line says which was used.
 
 Usage:
   python3 tools/bench_compare.py OLD NEW [--threshold 1.5]
@@ -100,7 +103,22 @@ def main():
     print(f"shared queries : {len(shared)}")
     print(f"sentinels used : {len(sent)} -> host drift x{drift:.3f} "
           f"(median {', '.join(sent[:4])}{', ...' if len(sent) > 4 else ''})")
-    print(f"threshold      : x{thr} AFTER drift normalization\n")
+    # a suite-wide change (session config, a shared primitive) moves the
+    # sentinels with everything else, so the sentinel drift is no longer
+    # host speed: when it and the raw comparable-total ratio point in
+    # opposite directions, trust neither and report raw ratios
+    comp_pos = [q for q in shared if q not in disc and old[q] > 0]
+    raw = (sum(new[q] for q in comp_pos) / sum(old[q] for q in comp_pos)
+           if comp_pos else 1.0)
+    if (drift - 1.0) * (raw - 1.0) < 0:
+        print(f"normalization  : NONE, raw totals (sentinel drift "
+              f"x{drift:.3f} and raw comparable total x{raw:.3f} disagree "
+              f"in direction)")
+        drift = 1.0
+    else:
+        print(f"normalization  : sentinel drift x{drift:.3f} (raw "
+              f"comparable total x{raw:.3f} agrees in direction)")
+    print(f"threshold      : x{thr} AFTER normalization\n")
     rows, disc_rows = [], []
     for q in shared:
         if old[q] <= 0:
