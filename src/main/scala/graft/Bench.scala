@@ -1,40 +1,19 @@
 package graft
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** Queries whose DEFINITION changed in a past round — what they
+  /** Queries whose DEFINITION changed in a past round (the
+    * `discontinuity` of their [[graft.queries.QueryDef]]) — what they
     * measure is discontinuous across artifacts, so cross-round deltas on
     * them are apples-to-oranges, not regressions/speedups. Emitted in
     * the artifact (`"discontinuities"`) and consumed by
     * tools/bench_compare.py, which reports them separately instead of
-    * flagging them. Keep entries until the change has an artifact on
+    * flagging them. Keep a discontinuity until the change has an artifact on
     * BOTH sides of every comparison anyone still runs (2+ rounds).
     */
-  val DISCONTINUITIES: Map[String, String] = Map(
-    "q_pca_project" -> "r9: measures projection only (fit moved to spec coverage)",
-    "q_dedup_simhash" -> "r9: md5 certification seam replaced the murmur word hash (~10x hash cost)",
-    "q_dup_spans_winnow" -> "r9: md5 gram-hash seam replaced murmur",
-    "q_wordpiece_encode" -> "r9: topWords 200 -> 10",
-    "q_sketch_distinct" -> "r9: KMV exact-below-k swapped in for HLL",
-    "q_dedup_minhash" -> "r10: md5 shingle seam replaced the murmur shingle hash",
-    "q_dedup_minhash_clusters" -> "r10: md5 shingle seam",
-    "q_dedup_minhash_incr" -> "r10: md5 shingle seam",
-    "q_split_leakage" -> "r10: md5 shingle seam",
-    "q_decontaminate_dialogs" -> "r10: md5 word-gram seam replaced the murmur word-shingle hash",
-    "q_ivf_drift" -> "r10: new query",
-    "q_ann_ivf_split" -> "r10: new query",
-    "q_bm25_drift" -> "r10: new query",
-    "q_ann_ivf_compact" -> "r11: new query",
-    "q_bm25_compact" -> "r11: new query",
-    "q_nsw_drift" -> "r11: new query",
-    "q_ann_ivfq_split" -> "r11: new query",
-    "q_ivfpq_compact" -> "r11: new query",
-    "q_dedup_minhash_prod" -> "r11: new bench-only production twin (murmur, deployment banding)",
-    "q_dedup_minhash_incr_prod" -> "r11: new bench-only production twin",
-    "q_dedup_simhash_prod" -> "r11: new bench-only production twin",
-    "q_dup_spans_winnow_prod" -> "r11: new bench-only production twin",
-    "q_split_leakage_prod" -> "r11: new bench-only production twin",
-    "q_decontaminate_dialogs_prod" -> "r11: new bench-only production twin")
+  lazy val DISCONTINUITIES: Map[String, String] =
+    SparkEntry.registry.flatMap { case (n, q) => q.discontinuity.map(n -> _) }
 
   /** Timed best-of-N over a query map through the noop sink. Returns
     * (per-query min seconds, per-query error) — errors are RECORDED, not
@@ -44,11 +23,32 @@ object Bench {
   def run(queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
           spark: SparkSession, sfDir: String,
           passes: Int): (Seq[(String, Double)], Map[String, String]) = {
+    val (times, errors, _) = runCounted(queries, spark, sfDir, passes)
+    (times, errors)
+  }
+
+  /** [[run]], plus each query's Spark job count: the fewest jobs one of
+    * its passes started (the first pass also builds session artifacts).
+    * A listener counts the jobs by a local property naming the query,
+    * which Spark copies to the threads that run a query's broadcasts and
+    * subqueries.
+    */
+  def runCounted(queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
+                 spark: SparkSession, sfDir: String, passes: Int)
+      : (Seq[(String, Double)], Map[String, String], Map[String, Int]) = {
+    val sc = spark.sparkContext
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    val jobs = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(QueryTag)))
+          .foreach(tag => jobs.synchronized { jobs(tag) += 1 })
+    }
     var leaked = 0L
-    def once(name: String,
+    def once(pass: Int, name: String,
              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val (secs, pins) = Pins.track(spark.sparkContext) {
+      sc.setLocalProperty(QueryTag, s"$pass $name")
+      val (secs, pins) = try Pins.track(sc) {
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch {
@@ -57,7 +57,7 @@ object Bench {
               Option(e.getMessage).getOrElse("").takeWhile(_ != '\n').take(200)
         }
         (System.nanoTime() - t0) / 1e9
-      }
+      } finally sc.setLocalProperty(QueryTag, null)
       // Hygiene, OUTSIDE the timed region: a query whose result depends on
       // a pin (localCheckpoint) cannot release it before the sink has run,
       // so each query's scope releases the pins it left behind, except
@@ -70,26 +70,43 @@ object Bench {
       // before the next query's clock starts.
       val dead = pins -- SparkEntry.livePinRddIds(spark)
       leaked += dead.size
-      Pins.release(spark.sparkContext, dead)
+      Pins.release(sc, dead)
       secs
     }
     val ordered = queries.toSeq.sortBy(_._1)
-    val perPass = (1 to passes).map { _ =>
-      ordered.map { case (n, fn) => n -> once(n, fn) }.toMap
-    }
+    sc.addSparkListener(listener)
+    val perPass = try {
+      val perPass = (1 to passes).map { pass =>
+        ordered.map { case (n, fn) => n -> once(pass, n, fn) }.toMap
+      }
+      // the listener bus delivers in order: once this job is counted,
+      // every job of every query has been
+      sc.setLocalProperty(QueryTag, "drained")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(QueryTag, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (jobs.synchronized(!jobs.contains("drained")) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      perPass
+    } finally sc.removeSparkListener(listener)
     System.err.println(
       s"bench hygiene: released $leaked dead pin RDDs (artifact-owned pins kept)")
     (ordered.map { case (n, _) => n -> perPass.map(_(n)).min },
-      errors.toMap)
+      errors.toMap,
+      ordered.map { case (n, _) =>
+        n -> jobs.synchronized((1 to passes).map(p => jobs(s"$p $n")).min)
+      }.toMap)
   }
 
-  /** The session of the dev harnesses (Bench, JobProfile, PlanDump):
-    * `local[SPARK_GRAFT_CPUS]` (default `defaultCpus`) with as many
-    * shuffle partitions, warmed up by one lineitem aggregate so the first
-    * timed query isn't charged for JIT.
+  /** Local property naming the pass and query whose jobs run on a thread. */
+  private val QueryTag = "graft.bench.query"
+
+  /** The bench session: `local[SPARK_GRAFT_CPUS]` (default 4) with as
+    * many shuffle partitions, warmed up by one lineitem aggregate so the
+    * first timed query isn't charged for JIT.
     */
-  def session(sfDir: String, defaultCpus: Int): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+  def session(sfDir: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -114,7 +131,7 @@ object Bench {
       .getRuntimeMXBean.getStartTime
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-    val spark = session(sfDir, defaultCpus = 4)
+    val spark = session(sfDir)
     // noop sink forces full evaluation of every column (a bare count() lets
     // Catalyst prune projections, under-measuring expression-heavy queries).
     // Best-of-`passes` (default 3): later passes amortize codegen/JIT and
@@ -130,19 +147,21 @@ object Bench {
     val selected =
       if (only.isEmpty) all
       else all.filter { case (k, _) => only(k) }
-    val (results, errors) = run(selected, spark, sfDir, passes)
+    val (results, errors, jobs) = runCounted(selected, spark, sfDir, passes)
     def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val qs = results.map { case (k, v) =>
       if (errors.contains(k)) s"${jstr(k)}:{\"err\":${jstr(errors(k))}}"
       else s"${jstr(k)}:$v"
     }.mkString("{", ",", "}")
+    val js = results.map { case (k, _) => s"${jstr(k)}:${jobs(k)}" }
+      .mkString("{", ",", "}")
     val total = results.collect { case (k, v) if !errors.contains(k) => v }.sum
     // wall seconds since JVM start: a contended host shows wall >> measured
     val wall = (System.currentTimeMillis() - jvmStart) / 1e3
     val disc = DISCONTINUITIES.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
       .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passes,"n_errors":${errors.size},"jvm_wall_sec":$wall,"discontinuities":$disc}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"jobs":$js,"sf":"$sfDir","passes":$passes,"n_errors":${errors.size},"jvm_wall_sec":$wall,"discontinuities":$disc}"""
     println(line)
     // the driver's BENCH_r{N}.json keeps only a tail of this (long) line,
     // so cross-round regression tracking would cover a fraction of the

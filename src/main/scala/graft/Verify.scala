@@ -1,8 +1,13 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump for the DuckDB compare (`tools/compare_oracle.py`):
+  * each gated query's result → parquet, plus oracle_sql.json holding the
+  * `Sql` oracle of every query that has one. Both come from the query
+  * registry ([[SparkEntry.queries]], [[SparkEntry.oracleSql]]); a query
+  * whose oracle is `NoOracle` is dumped too, and the compare reports it
+  * as rows-only. Bench-only queries are not gated, so not dumped.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)

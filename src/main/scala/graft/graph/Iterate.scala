@@ -114,26 +114,34 @@ object Iterate {
     */
   def fixpoint[S](operator: String, init: Superstep[S], maxIter: Int)
                  (release: S => Unit)(step: S => Superstep[S]): Outcome[S] = {
-    val sc = SparkSession.active.sparkContext
-    val callerDescription = sc.getLocalProperty("spark.job.description")
     var cur = init
     var round = 0
-    try {
-      while (!cur.converged && round < maxIter) {
-        round += 1
-        sc.setJobDescription(s"$operator superstep $round")
-        val t0 = System.nanoTime()
-        val prev = cur.state
-        cur = try step(prev) finally release(prev)
-        if (log.isInfoEnabled)
-          log.info(f"$operator superstep $round: ${show(cur.stats)}, " +
-            f"${(System.nanoTime() - t0) / 1e9}%.3f s")
+    while (!cur.converged && round < maxIter) {
+      round += 1
+      val t0 = System.nanoTime()
+      val prev = cur.state
+      cur = described(s"$operator superstep $round") {
+        try step(prev) finally release(prev)
       }
-    } finally sc.setJobDescription(callerDescription)
+      if (log.isInfoEnabled)
+        log.info(f"$operator superstep $round: ${show(cur.stats)}, " +
+          f"${(System.nanoTime() - t0) / 1e9}%.3f s")
+    }
     if (!cur.converged)
       log.warn(s"$operator: no fixpoint after $round supersteps " +
         s"(last superstep: ${show(cur.stats)})")
     Outcome(cur.state, round, cur.converged, cur.stats)
+  }
+
+  /** Run `body` with `desc` as the description of the jobs this thread
+    * starts, then restore the caller's description, whether `body`
+    * returns or throws.
+    */
+  def described[A](desc: String)(body: => A): A = {
+    val sc = SparkSession.active.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(caller)
   }
 
   private def show(stats: Map[String, Any]): String =

@@ -3,6 +3,7 @@ package graft.ingest
 import graft.Pins
 import graft.enrich.CountryLinker
 import graft.graph.GraphStore
+import graft.graph.Iterate.described
 import graft.report.Metrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -55,73 +56,92 @@ object Ingest {
     // run just minted. A pin is fixed when it is made; all four are
     // released after the report.
 
+    // Each stage's jobs carry the description "ingest: <stage>".
+
     // 1. validate + existence (tracker stays small: --limit default 50)
-    val tracker0 = DoiOps.validate(doiList, limit)
-    val tracker = DoiOps.markExisting(tracker0, store.nodeTable("outputs"))
-      .localCheckpoint(true)
-    val ingest = DoiOps.toIngest(tracker, update)
+    val (tracker, ingest) = described("ingest: validate") {
+      val tracker0 = DoiOps.validate(doiList, limit)
+      val tracker = DoiOps.markExisting(tracker0, store.nodeTable("outputs"))
+        .localCheckpoint(true)
+      (tracker, DoiOps.toIngest(tracker, update))
+    }
 
     // 2. parse payloads for the to-ingest set (semi-join: payload table may
     //    hold anything; only this batch's DOIs flow on)
-    val batch = payloads.join(ingest.select("doi").hint("broadcast"),
-      Seq("doi"), "left_semi")
-    val parsed = MetadataParser.parseEnvelope(batch, openAlex = openAlex,
-      citedByCountYear = citedByCountYear).localCheckpoint(true)
+    val parsed = described("ingest: parse") {
+      val batch = payloads.join(ingest.select("doi").hint("broadcast"),
+        Seq("doi"), "left_semi")
+      MetadataParser.parseEnvelope(batch, openAlex = openAlex,
+        citedByCountYear = citedByCountYear).localCheckpoint(true)
+    }
 
     // 3. outputs: deterministic uuid from the DOI; insert-if-absent, or in
     //    update mode a merge-on-key property refresh (doi.py:215-250)
-    val newOut = parsed.dropDuplicates("doi")
-      .withColumn("uuid",
-        EntityResolution.mintUuid(concat(lit("output:"), col("doi"))))
-      .localCheckpoint(true)
-    if (update) store.mergeNodes("outputs", newOut, key = "doi")
-    else store.upsertNodes("outputs", newOut, key = "doi")
+    val newOut = described("ingest: outputs") {
+      val newOut = parsed.dropDuplicates("doi")
+        .withColumn("uuid",
+          EntityResolution.mintUuid(concat(lit("output:"), col("doi"))))
+        .localCheckpoint(true)
+      if (update) store.mergeNodes("outputs", newOut, key = "doi")
+      else store.upsertNodes("outputs", newOut, key = "doi")
+      newOut
+    }
 
     // 4. authors: fan out mentions (G3), resolve (J5/J9/J6), mint, append
-    val mentions = newOut.select(col("doi"), col("uuid").as("output_uuid"),
-        posexplode(col("authors")).as(Seq("mention_order", "a")))
-      .select(col("doi"), col("output_uuid"), col("a.first_name"),
-        col("a.last_name"), col("a.orcid"), col("a.rank"),
-        col("mention_order").cast("long").as("mention_order"))
-    val resolved = EntityResolution
-      .resolveAuthors(mentions, store.nodeTable("authors"))
-      .localCheckpoint(true)
-    store.upsertNodes("authors", EntityResolution.mintedAuthors(resolved),
-      key = "uuid")
+    val resolved = described("ingest: resolve") {
+      val mentions = newOut.select(col("doi"), col("uuid").as("output_uuid"),
+          posexplode(col("authors")).as(Seq("mention_order", "a")))
+        .select(col("doi"), col("output_uuid"), col("a.first_name"),
+          col("a.last_name"), col("a.orcid"), col("a.rank"),
+          col("mention_order").cast("long").as("mention_order"))
+      EntityResolution
+        .resolveAuthors(mentions, store.nodeTable("authors"))
+        .localCheckpoint(true)
+    }
+    described("ingest: authors") {
+      store.upsertNodes("authors", EntityResolution.mintedAuthors(resolved),
+        key = "uuid")
+    }
 
     // 5. author_of edges (J2/S8)
-    store.mergeEdges("author_of", EntityResolution.authorOfEdges(resolved))
+    described("ingest: author_of") {
+      store.mergeEdges("author_of", EntityResolution.authorOfEdges(resolved))
+    }
 
     // 6. country enrichment (J4+J8, abstract then title, reference
     //    create_graph_from_doi.py:294-329). Uncapped variant = batch
     //    semantics; the CLI's LIMIT-1-per-country exists as
     //    CountryLinker.newLinksTop1PerCountry.
-    countriesSeed.foreach(c => store.upsertNodes("countries", c, key = "id"))
-    val countries = store.nodeTable("countries")
-    val outputsNow = store.nodeTable("outputs")
-    Seq("abstract", "title").foreach { f =>
-      store.mergeEdges("refers_to", CountryLinker.newLinks(
-        outputsNow, countries, store.edgeTable("refers_to"), f))
+    described("ingest: link") {
+      countriesSeed.foreach(c => store.upsertNodes("countries", c, key = "id"))
+      val countries = store.nodeTable("countries")
+      val outputsNow = store.nodeTable("outputs")
+      Seq("abstract", "title").foreach { f =>
+        store.mergeEdges("refers_to", CountryLinker.newLinks(
+          outputsNow, countries, store.edgeTable("refers_to"), f))
+      }
     }
 
     // 7. metrics (A2/A3) — enrich tracker with per-stage success flags
     //    (openaire = parsed, openalex = parsed AND matched an OpenAlex work)
-    val okDois = parsed.groupBy("doi").agg(
-      max(lit(true)).as("openaire_metadata"),
-      (count(col("openalex")) > 0).as("openalex_metadata"))
-    val report = Metrics.ingestionReport(
-      tracker.join(okDois, Seq("doi"), "left_outer")
-        .withColumn("openaire_metadata",
-          coalesce(col("openaire_metadata"), lit(false)))
-        .withColumn("openalex_metadata",
-          coalesce(col("openalex_metadata"), lit(false)))
-        .withColumn("ingestion_success",
-          col("openaire_metadata") && col("valid_pattern")),
-      update = update, totalTimeSeconds = (System.nanoTime() - t0) / 1e9)
-      // pin the (1-row) report, then release the run's pins — a
-      // long-lived session (streaming micro-batches) must not accumulate
-      // per-run blocks
-      .localCheckpoint(true)
+    val report = described("ingest: report") {
+      val okDois = parsed.groupBy("doi").agg(
+        max(lit(true)).as("openaire_metadata"),
+        (count(col("openalex")) > 0).as("openalex_metadata"))
+      Metrics.ingestionReport(
+        tracker.join(okDois, Seq("doi"), "left_outer")
+          .withColumn("openaire_metadata",
+            coalesce(col("openaire_metadata"), lit(false)))
+          .withColumn("openalex_metadata",
+            coalesce(col("openalex_metadata"), lit(false)))
+          .withColumn("ingestion_success",
+            col("openaire_metadata") && col("valid_pattern")),
+        update = update, totalTimeSeconds = (System.nanoTime() - t0) / 1e9)
+        // pin the (1-row) report, then release the run's pins — a
+        // long-lived session (streaming micro-batches) must not accumulate
+        // per-run blocks
+        .localCheckpoint(true)
+    }
     Pins.release(tracker, parsed, newOut, resolved)
     report
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Bucketed-table helpers: pre-shuffle fact tables ONCE at write time so
   * every later equi-join / aggregation on the bucket key runs with no
@@ -25,13 +25,4 @@ object Bucketing {
       .format("parquet")
       .saveAsTable(table)
   }
-
-  /** Join two same-bucketed tables on their bucket key: with matching
-    * bucket counts Catalyst plans a sort-merge join with zero Exchange
-    * operators (verified in BucketingSpec).
-    */
-  def coLocatedJoin(spark: SparkSession, leftTable: String,
-                    rightTable: String, key: String,
-                    joinType: String = "inner"): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), Seq(key), joinType)
 }

@@ -59,30 +59,6 @@ object Dedup {
       .drop("_fp", "_canon_id")
   }
 
-  /** Exact-dup groups only: fingerprint → (n_docs, canonical_id, ids), for
-    * groups of ≥ 2.
-    *
-    * `maxIds` caps the per-group id list (the `maxIds` SMALLEST ids kept,
-    * via the bounded [[graft.functions.MinK]] aggregate — the buffer itself
-    * holds ≤ maxIds entries) so a 10⁸-dup group — exactly what this
-    * diagnostic surfaces — cannot materialize one pathological multi-GB
-    * row. `n_docs` always reports the TRUE group size and `canonical_id`
-    * the global min id regardless of the cap. Pass `maxIds = 0` for a
-    * count-only census (empty `ids`) when only sizes matter.
-    */
-  def exactGroups(docs: DataFrame, idCol: String = "doc_id",
-                  textCol: String = "text", maxIds: Int = 10000): DataFrame = {
-    require(maxIds >= 0, s"maxIds must be >= 0, got $maxIds")
-    import graft.functions.MinK.min_k
-    val idsAgg =
-      if (maxIds == 0) slice(array(min(col(idCol))), 1, 0).as("ids")
-      else min_k(col(idCol), maxIds).as("ids")
-    docs.select(doc_fingerprint(col(textCol)).as("fingerprint"), col(idCol))
-      .groupBy("fingerprint")
-      .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("canonical_id"), idsAgg)
-      .filter(col("n_docs") > 1)
-  }
-
   /** Incremental (cross-batch) exact dedup — the daily-ingest shape: keep
     * only new-batch docs whose fingerprint appears nowhere in the existing
     * corpus AND is not a within-batch duplicate (min id wins).
@@ -211,45 +187,6 @@ object Dedup {
       .withColumn("kept",
         hash60 < expr(s"${1L << 60}L div dup_group_size"))
       .drop("_fp")
-  }
-
-  /** LSH parameter planner (Leskovec, Rajaraman & Ullman, "Mining of
-    * Massive Datasets" §3.4.3): choose (bands, rowsPerBand) for a
-    * signature of `numHashes` so the S-curve's behavior at the target
-    * Jaccard `threshold` is as close as possible to a step function.
-    * Candidate probability at similarity s is 1 − (1 − s^r)^b; the
-    * planner minimizes ∫₀^t p(s) ds + ∫ₜ¹ (1 − p(s)) ds (false-positive
-    * area below the threshold plus false-negative area above — the
-    * standard datasketch objective, numerically integrated), over every
-    * divisor split b·r = numHashes. Driver-side pure arithmetic over
-    * O(divisors × grid) terms — call it once, pass the result to
-    * [[minhashLsh]].
-    *
-    * @return (bands, rowsPerBand)
-    */
-  def planLshBands(threshold: Double, numHashes: Int = 128,
-                   falsePositiveWeight: Double = 0.5): (Int, Int) = {
-    require(threshold > 0 && threshold < 1,
-      s"need 0 < threshold < 1 (got $threshold)")
-    require(numHashes >= 2, s"need numHashes >= 2 (got $numHashes)")
-    require(falsePositiveWeight >= 0 && falsePositiveWeight <= 1,
-      s"need 0 <= falsePositiveWeight <= 1 (got $falsePositiveWeight)")
-    val grid = 1000
-    def err(b: Int, r: Int): Double = {
-      var fp = 0.0; var fn = 0.0
-      var g = 0
-      while (g < grid) {
-        val s = (g + 0.5) / grid
-        val p = 1.0 - math.pow(1.0 - math.pow(s, r), b)
-        if (s < threshold) fp += p else fn += 1.0 - p
-        g += 1
-      }
-      (falsePositiveWeight * fp + (1 - falsePositiveWeight) * fn) / grid
-    }
-    val splits = (1 to numHashes)
-      .filter(numHashes % _ == 0)
-      .map(b => (b, numHashes / b))
-    splits.minBy { case (b, r) => err(b, r) }
   }
 
   /** MinHash + LSH candidate pairs with exact-Jaccard verification.

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Pins
+import graft.graph.Iterate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -127,10 +128,11 @@ object Pipelines {
       // label the stage's jobs (guide §1.5 practice): the pin + count +
       // any broadcast builds they trigger show up attributable in the
       // UI / listener instead of as anonymous future lambdas
-      spark.sparkContext.setJobDescription(s"curate: $name")
-      val pinned = df.localCheckpoint(true)
-      if (audit) stages += name -> pinned.count()
-      spark.sparkContext.setJobDescription(null)
+      val pinned = Iterate.described(s"curate: $name") {
+        val p = df.localCheckpoint(true)
+        if (audit) stages += name -> p.count()
+        p
+      }
       prevPinned.foreach(Pins.release(_))
       prevPinned = Some(pinned)
       pinned
@@ -437,10 +439,11 @@ object Pipelines {
       if (audit || fanout) {
         // labeled as in curateCorpus (guide §1.5): pins/counts and the
         // broadcast builds they trigger are attributable per stage
-        spark.sparkContext.setJobDescription(s"curate-batch: $name")
-        val pinned = df.localCheckpoint(true)
-        if (audit) stages += name -> pinned.count()
-        spark.sparkContext.setJobDescription(null)
+        val pinned = Iterate.described(s"curate-batch: $name") {
+          val p = df.localCheckpoint(true)
+          if (audit) stages += name -> p.count()
+          p
+        }
         prevPinned.foreach(Pins.release(_))
         prevPinned = Some(pinned)
         pinned

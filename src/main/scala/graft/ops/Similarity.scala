@@ -429,17 +429,6 @@ object Similarity {
     out
   }
 
-  /** One-shot IVF top-k (build + probe). Convenience for ad-hoc use and
-    * tests; anything that probes more than once should [[buildIvfIndex]]
-    * once and [[ivfProbe]] against it (and `release()` when done).
-    */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int = 10,
-              nCenters: Int = 16, nProbe: Int = 4, iters: Int = 3,
-              queryIdCol: String = "query_id", corpusIdCol: String = "vec_id",
-              vecCol: String = "embedding"): DataFrame =
-    ivfProbe(queries, buildIvfIndex(corpus, nCenters, iters, corpusIdCol, vecCol),
-      k, nProbe, queryIdCol, vecCol)
-
   /** All corpus pairs with cosine ≥ threshold, via hyperplane-band blocking
     * (the embedding-cosine near-dup tier of [[Dedup]]).
     *

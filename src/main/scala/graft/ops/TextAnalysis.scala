@@ -1867,15 +1867,6 @@ object TextAnalysis {
       .groupBy(idCol, "bucket").agg(count(lit(1)).as("n"))
   }
 
-  /** Language distribution report (predicted vs labeled when available). */
-  def langReport(docs: DataFrame, textCol: String = "text",
-                 labelCol: String = "lang"): DataFrame = {
-    val base = docs.withColumn("lang_pred", lang_id(col(textCol)))
-    if (docs.columns.contains(labelCol))
-      base.groupBy(labelCol, "lang_pred").count()
-    else base.groupBy("lang_pred").count()
-  }
-
   /** Distinct-n diversity counts per group — the generation-diversity
     * metric (Li et al. 2016, "distinct-1/2"): how repetitive is a
     * model's (or a source's) output? Published as INTEGERS per

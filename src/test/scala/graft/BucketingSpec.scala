@@ -33,7 +33,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Bucketing.writeBucketed(orders, "orders_b", "custkey", buckets = 4)
     Bucketing.writeBucketed(custs, "custs_b", "custkey", buckets = 4)
 
-    val joined = Bucketing.coLocatedJoin(spark, "orders_b", "custs_b", "custkey")
+    val joined = spark.table("orders_b").join(spark.table("custs_b"), Seq("custkey"))
     val plan = joined.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"bucketed join should have no shuffle:\n$plan")

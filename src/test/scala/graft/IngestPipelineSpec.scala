@@ -5,6 +5,7 @@ import java.nio.file.Files
 import graft.graph.GraphStore
 import graft.ingest.{DoiOps, Ingest}
 import graft.report.Metrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -55,6 +56,41 @@ class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val wall = (System.nanoTime() - t0) / 1e9
     val took = report.getAs[Double]("total_time_seconds")
     assert(took > 0 && took <= wall, s"total_time_seconds $took, wall $wall")
+  }
+
+  test("every job of a run carries its stage's ingest: description") {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinel = s"sentinel-${java.util.UUID.randomUUID()}"
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        seen.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    val store = new GraphStore(spark,
+      Files.createTempDirectory("wh-desc").toString)
+    sc.addSparkListener(listener)
+    try {
+      Ingest.run(spark, store, doiList, payloads,
+        openAlex = Some(openAlex(7L)), citedByCountYear = Some(2024))
+      // the listener bus delivers in order: once the sentinel job is
+      // seen, every job of the run has been recorded
+      sc.setJobDescription(sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(sentinel) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(sentinel), "listener never saw the sentinel job")
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val descs = seen.asScala.toSeq.takeWhile(_ != sentinel)
+    assert(descs.nonEmpty)
+    assert(descs.forall(_.startsWith("ingest: ")),
+      s"jobs without an ingest stage: ${descs.filterNot(_.startsWith("ingest: "))}")
+    assert(descs.distinct.toSet.subsetOf(Set("validate", "parse", "outputs",
+      "resolve", "authors", "author_of", "link", "report").map("ingest: " + _)))
   }
 
   test("openalex enrichment populates outputs and the success counter") {

@@ -326,6 +326,25 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
     audited.chunks.unpersist(); silent.chunks.unpersist()
   }
 
+  test("curateCorpus labels its stages and restores the caller's description") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again and again"),
+      (2L, "a completely different second document body with other words")
+    ).toDF("doc_id", "text")
+    val eval = Seq((9L, "no overlap here with any train document at all"))
+      .toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val r = Pipelines.curateCorpus(docs, eval, minQuality = 0.0,
+        maxRepetition = 0.95, nearDupThreshold = 0.95, chunkTokens = 32,
+        chunkStride = 32, packBudget = 128)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      r.chunks.unpersist()
+    } finally sc.setJobDescription(null)
+  }
+
   test("parMinWords stage cuts heuristic boilerplate paragraphs") {
     import spark.implicits._
     val prose = "the cat sat on the mat and then it sat down again today"

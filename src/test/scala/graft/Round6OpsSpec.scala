@@ -184,12 +184,11 @@ class Round6OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out(1L) == ((1L, true)))
   }
 
-  test("exactGroups works with integer ids (min_k int support)") {
+  test("min_k keeps integer ids as integers") {
     import spark.implicits._
-    val docs = Seq((1, "same text body here"), (2, "same text body here"),
-      (3, "different body")).toDF("doc_id", "text")
-    val g = graft.ops.Dedup.exactGroups(docs).collect()
-    assert(g.length == 1 && g(0).getSeq[Int](3) == Seq(1, 2))
+    val g = Seq(3, 1, 2, 1).toDF("id")
+      .agg(graft.functions.MinK.min_k(col("id"), 2)).head()
+    assert(g.getSeq[Int](0) == Seq(1, 2))
   }
 
   test("min_k string order matches Spark's binary min for non-BMP strings") {

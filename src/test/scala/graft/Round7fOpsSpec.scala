@@ -80,22 +80,6 @@ class Round7fOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.ops.Similarity.embeddingMoments(empty, dim = 2).count() === 0L)
   }
 
-  test("planLshBands: divisor split, S-curve midpoint tracks the " +
-      "threshold, more bands for lower thresholds") {
-    import graft.ops.Dedup.planLshBands
-    def midpoint(b: Int, r: Int): Double = math.pow(1.0 / b, 1.0 / r)
-    for (t <- Seq(0.5, 0.7, 0.9)) {
-      val (b, r) = planLshBands(t, numHashes = 128)
-      assert(b * r === 128)
-      assert(math.abs(midpoint(b, r) - t) < 0.17,
-        s"threshold $t -> (b=$b, r=$r), midpoint ${midpoint(b, r)}")
-    }
-    val (bLow, _) = planLshBands(0.4, numHashes = 128)
-    val (bHigh, _) = planLshBands(0.9, numHashes = 128)
-    assert(bLow > bHigh,
-      "catching lower-similarity pairs needs more, smaller bands")
-  }
-
   test("funnel: ordering, anchor window, and partial stages " +
       "(hand-computed)") {
     import spark.implicits._

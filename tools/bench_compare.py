@@ -13,6 +13,11 @@ sentinel drift and the raw comparable-total ratio point in opposite
 directions (a suite-wide change moved the sentinels too), the ratios are
 reported raw instead; the `normalization` line says which was used.
 
+When both artifacts carry Bench's per-query Spark job counts (`"jobs"`),
+the job-count deltas print first: at a fixed scale factor and core count
+they do not drift with the host, so they show what changed before any
+wall-time ratio is read.
+
 Usage:
   python3 tools/bench_compare.py OLD NEW [--threshold 1.5]
 
@@ -36,6 +41,9 @@ KV = re.compile(r'"(q_[a-z0-9_]+)":\s*([0-9][0-9.eE+-]*)')
 
 
 DISC = re.compile(r'"discontinuities"\s*:\s*\{([^}]*)\}')
+# a "jobs" object (possibly cut off by a truncated tail): its integer
+# entries would otherwise read as seconds
+JOBS = re.compile(r'"jobs"\s*:\s*\{([^}]*)\}?')
 DISC_KEY = re.compile(r'"(q_[a-z0-9_]+)"\s*:')
 
 
@@ -51,6 +59,7 @@ def load_discontinuities(raw):
 
 
 def load_queries(path):
+    """(seconds per query, discontinuous names, job counts per query)"""
     raw = open(path).read()
     disc = load_discontinuities(raw)
     try:
@@ -59,18 +68,41 @@ def load_queries(path):
             if isinstance(doc.get("discontinuities"), dict):
                 disc = set(doc["discontinuities"])  # exact, not regex
             if isinstance(doc.get("queries"), dict):
-                return {k: float(v) for k, v in doc["queries"].items()}, disc
+                jobs = doc.get("jobs") if isinstance(doc.get("jobs"), dict) else {}
+                return ({k: float(v) for k, v in doc["queries"].items()
+                         if not isinstance(v, dict)}, disc,
+                        {k: int(v) for k, v in jobs.items()})
             raw = str(doc.get("tail", "")) + raw  # driver wrapper
     except json.JSONDecodeError:
         pass  # raw stdout capture — scan it directly
     # keep the LAST occurrence of each key (reruns append; the final
     # pass is the one the summary line reports)
+    jobs = {}
+    for m in JOBS.finditer(raw):
+        for k in KV.finditer(m.group(1)):
+            jobs[k.group(1)] = int(float(k.group(2)))
     out = {}
-    for m in KV.finditer(raw):
+    for m in KV.finditer(JOBS.sub("", raw)):
         out[m.group(1)] = float(m.group(2))
     # the discontinuities dict's own entries match KV only if numeric —
     # they are strings, so no cleanup needed
-    return out, disc
+    return out, disc, jobs
+
+
+def report_jobs(old, new):
+    """Per-query job-count deltas; returns False when either side has none."""
+    shared = sorted(set(old) & set(new))
+    if not shared:
+        return False
+    moved = [(new[q] - old[q], q) for q in shared if new[q] != old[q]]
+    tot_o = sum(old[q] for q in shared)
+    tot_n = sum(new[q] for q in shared)
+    print(f"spark jobs     : {tot_o} -> {tot_n} over {len(shared)} queries "
+          f"({len(moved)} changed)")
+    for d, q in sorted(moved, key=lambda m: (-abs(m[0]), m[1])):
+        print(f"  {q:<32} {old[q]:5d} -> {new[q]:5d}  ({d:+d})")
+    print()
+    return True
 
 
 def median(xs):
@@ -88,8 +120,10 @@ def main():
                         else sys.argv[sys.argv.index(a) + 1])
     if len(args) != 2:
         sys.exit(__doc__)
-    (old, disc_o), (new, disc_n) = load_queries(args[0]), load_queries(args[1])
+    (old, disc_o, jobs_o), (new, disc_n, jobs_n) = (load_queries(args[0]),
+                                                    load_queries(args[1]))
     disc = disc_o | disc_n
+    report_jobs(jobs_o, jobs_n)
     shared = sorted(set(old) & set(new))
     if not shared:
         sys.exit("no shared queries between the two artifacts")
