@@ -1,7 +1,7 @@
 package graft.graph
 
 import graft.Pins
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Graph-shaped analytics over the property-graph tables, as pure
@@ -156,9 +156,9 @@ object GraphOps {
   /** Weighted-PageRank power iteration as a pure dataflow: per round, one
     * join of the (vid-hashed, weighted-degree-annotated) edge list to
     * current ranks, one contribution aggregation, one left join back onto
-    * the vertex set (isolated vertices hold the reset rank). Lineage is cut
-    * per round and the previous round's blocks released — the
-    * unitHierarchy / ConnectedComponents iteration pattern. Callers must
+    * the vertex set (isolated vertices hold the reset rank). The rounds
+    * run on [[Iterate]] (`"powerIterate superstep <i>"`): lineage is cut
+    * per round and the previous round's pin released. Callers must
     * pass a symmetrized edge list, so every edge endpoint has out-degree
     * ≥ 1 and dangling mass cannot occur. Unweighted PageRank is the w=1
     * special case (weighted out-degree = plain out-degree).
@@ -308,179 +308,153 @@ object GraphOps {
         }
         c.getLong(0)
       }
-    if (foldEdges) {
-      if (nVerts <= foldCap) {
+    // The one convergence rule of both paths below: tol > 0 stops at the
+    // first round whose max |Δrank| <= tol (Iterate WARNs when maxIter
+    // runs out first); tol <= 0 runs exactly maxIter rounds and measures
+    // no delta — when the round budget binds (bounded-round snapshots)
+    // the convergence test is pure per-round overhead (on the
+    // distributed loop, a separate delta query every round).
+    def iterateRanks[S](init: S)(release: S => Unit)(step: S => S)
+                       (maxDelta: (S, S) => Double): S =
+      if (tol <= 0)
+        Iterate.rounds("powerIterate", init, maxIter)(release)(step)
+      else Iterate.fixpoint("powerIterate",
+          Iterate.Superstep(init, Map.empty, converged = false),
+          maxIter)(release) { prev =>
+        val next = step(prev)
+        val d = maxDelta(next, prev)
+        Iterate.Superstep(next, Map("max_delta" -> d), converged = d <= tol)
+      }.state
+    val fold = foldEdges && nVerts <= foldCap
+    val ranks =
+      if (fold) {
         val spark = verts.sparkSession
         import spark.implicits._
         // decode into PARALLEL PRIMITIVE ARRAYS (the bradleyTerry
-        // ei/ej/en layout). Below ~100k rows a plain collect is one
-        // job and the boxed transient is a few MB; above it, stream
-        // partition-at-a-time via toLocalIterator so the driver peak is
-        // the arrays themselves (~32 B/edge) plus one partition of
-        // Rows — never a cap-sized boxed collect; BOTH the edge list and
-        // the vertex set ride this hybrid. NOTE: the fixed and
-        // double branches below are deliberate near-twins (the
-        // arithmetic in the hot loop genuinely differs) — edit them in
-        // LOCKSTEP.
-        def decodeRows(df: DataFrame, nRows: Long)
-                      (f: org.apache.spark.sql.Row => Unit): Unit =
+        // ei/ej/en layout), once for both modes: vertex ids, edge
+        // endpoints as vertex indexes, and the mode's cells (r0, w, wdeg)
+        // cast to `cell` and stored by `vertex`/`edge`. Below ~100k rows
+        // a plain collect is one job and the boxed transient is a few MB;
+        // above it, stream partition-at-a-time via toLocalIterator so the
+        // driver peak is the arrays themselves (~32 B/edge) plus one
+        // partition of Rows — never a cap-sized boxed collect; BOTH the
+        // edge list and the vertex set ride this hybrid. Only the round
+        // kernels are typed per mode: their arithmetic genuinely differs.
+        def decodeRows(df: DataFrame, nRows: Long)(f: Row => Unit): Unit =
           if (nRows <= 100000) df.collect().foreach(f)
           else df.toLocalIterator().forEachRemaining(r => f(r))
-        val hashCap = math.min(nVerts * 2, 1L << 30).toInt
-        val ranksDf =
-          if (fixed) {
-            val n = nVerts.toInt
-            val vids = new Array[Long](n)
-            val r0 = new Array[Long](n)
-            val idx = new java.util.HashMap[Long, Integer](hashCap)
-            var i = 0
-            decodeRows(vr.select(col("vid"), col("_r0").cast("long")),
-              nVerts) { r =>
-              vids(i) = r.getLong(0); r0(i) = r.getLong(1)
-              idx.put(vids(i), i); i += 1
-            }
-            val esi = new Array[Int](nEdges.toInt)
-            val edi = new Array[Int](nEdges.toInt)
-            val ew = new Array[Long](nEdges.toInt)
-            val ewd = new Array[Long](nEdges.toInt)
-            var m = 0
-            decodeRows(withDeg.select(col("src"), col("dst"),
-                col("w").cast("long"), col("_wdeg").cast("long")),
-              nEdges) { r =>
-              val si = idx.get(r.getLong(0))
-              val di = idx.get(r.getLong(1))
-              if (si != null && di != null) { // outside verts: dropped,
-                esi(m) = si.intValue         // like the joins
-                edi(m) = di.intValue
-                ew(m) = r.getLong(2); ewd(m) = r.getLong(3); m += 1
-              }
-            }
-            var rank = r0.clone()
-            var it = 0
-            var dlt = Double.MaxValue
-            while (it < maxIter && dlt > tol) {
-              val acc = new Array[Long](n)
-              var e = 0
-              while (e < m) {
-                acc(edi(e)) += rank(esi(e)) * ew(e) / ewd(e); e += 1
-              }
-              val next = Array.tabulate(n)(i2 => r0(i2) + 85L * acc(i2) / 100L)
-              if (tol > 0) {
-                dlt = 0d
-                var i2 = 0
-                while (i2 < n) {
-                  val d0 = math.abs(next(i2) - rank(i2)).toDouble
-                  if (d0 > dlt) dlt = d0
-                  i2 += 1
-                }
-              }
-              rank = next; it += 1
-            }
-            vids.indices.map(i2 => (vids(i2), rank(i2)))
-              .toDF("vid", "pagerank")
-          } else {
-            val n = nVerts.toInt
-            val vids = new Array[Long](n)
-            val r0 = new Array[Double](n)
-            val idx = new java.util.HashMap[Long, Integer](hashCap)
-            var i = 0
-            decodeRows(vr.select(col("vid"), col("_r0").cast("double")),
-              nVerts) { r =>
-              vids(i) = r.getLong(0); r0(i) = r.getDouble(1)
-              idx.put(vids(i), i); i += 1
-            }
-            val esi = new Array[Int](nEdges.toInt)
-            val edi = new Array[Int](nEdges.toInt)
-            val ew = new Array[Double](nEdges.toInt)
-            val ewd = new Array[Double](nEdges.toInt)
-            var m = 0
-            decodeRows(withDeg.select(col("src"), col("dst"),
-                col("w").cast("double"), col("_wdeg").cast("double")),
-              nEdges) { r =>
-              val si = idx.get(r.getLong(0))
-              val di = idx.get(r.getLong(1))
-              if (si != null && di != null) {
-                esi(m) = si.intValue
-                edi(m) = di.intValue
-                ew(m) = r.getDouble(2); ewd(m) = r.getDouble(3); m += 1
-              }
-            }
-            var rank = r0.clone()
-            var it = 0
-            var dlt = Double.MaxValue
-            while (it < maxIter && dlt > tol) {
-              val acc = new Array[Double](n)
-              var e = 0
-              while (e < m) {
-                acc(edi(e)) += rank(esi(e)) * ew(e) / ewd(e); e += 1
-              }
-              val next = Array.tabulate(n)(i2 => r0(i2) + damp * acc(i2))
-              if (tol > 0) {
-                dlt = 0d
-                var i2 = 0
-                while (i2 < n) {
-                  val d0 = math.abs(next(i2) - rank(i2))
-                  if (d0 > dlt) dlt = d0
-                  i2 += 1
-                }
-              }
-              rank = next; it += 1
-            }
-            vids.indices.map(i2 => (vids(i2), rank(i2)))
-              .toDF("vid", "pagerank")
+        val n = nVerts.toInt
+        val vids = new Array[Long](n)
+        val esi = new Array[Int](nEdges.toInt)
+        val edi = new Array[Int](nEdges.toInt)
+        // returns the number of edges kept
+        def decode(cell: String)(vertex: (Int, Row) => Unit)
+                  (edge: (Int, Row) => Unit): Int = {
+          val idx = new java.util.HashMap[Long, Integer](
+            math.min(nVerts * 2, 1L << 30).toInt)
+          var i = 0
+          decodeRows(vr.select(col("vid"), col("_r0").cast(cell)),
+            nVerts) { r =>
+            vids(i) = r.getLong(0); vertex(i, r)
+            idx.put(vids(i), i); i += 1
           }
-        val out = verts.join(ranksDf, Seq("vid"))
-          .select(col("uuid").as("author_uuid"), col("pagerank"))
+          var m = 0
+          decodeRows(withDeg.select(col("src"), col("dst"),
+              col("w").cast(cell), col("_wdeg").cast(cell)), nEdges) { r =>
+            val si = idx.get(r.getLong(0))
+            val di = idx.get(r.getLong(1))
+            if (si != null && di != null) { // outside verts: dropped,
+              esi(m) = si.intValue         // like the joins
+              edi(m) = di.intValue
+              edge(m, r); m += 1
+            }
+          }
+          m
+        }
+        def maxAbs(d: Int => Double): Double = {
+          var dlt = 0d
+          var i = 0
+          while (i < n) {
+            val d0 = d(i)
+            if (d0 > dlt) dlt = d0
+            i += 1
+          }
+          dlt
+        }
+        if (fixed) {
+          val r0 = new Array[Long](n)
+          val ew = new Array[Long](nEdges.toInt)
+          val ewd = new Array[Long](nEdges.toInt)
+          val m = decode("long")((i, r) => r0(i) = r.getLong(1)) { (e, r) =>
+            ew(e) = r.getLong(2); ewd(e) = r.getLong(3)
+          }
+          val rank = iterateRanks(r0)(_ => ()) { rank =>
+            val acc = new Array[Long](n)
+            var e = 0
+            while (e < m) {
+              acc(edi(e)) += rank(esi(e)) * ew(e) / ewd(e); e += 1
+            }
+            Array.tabulate(n)(i => r0(i) + 85L * acc(i) / 100L)
+          }((next, prev) => maxAbs(i => math.abs(next(i) - prev(i)).toDouble))
+          vids.zip(rank).toSeq.toDF("vid", "pagerank")
+        } else {
+          val r0 = new Array[Double](n)
+          val ew = new Array[Double](nEdges.toInt)
+          val ewd = new Array[Double](nEdges.toInt)
+          val m = decode("double")((i, r) => r0(i) = r.getDouble(1)) {
+              (e, r) =>
+            ew(e) = r.getDouble(2); ewd(e) = r.getDouble(3)
+          }
+          val rank = iterateRanks(r0)(_ => ()) { rank =>
+            val acc = new Array[Double](n)
+            var e = 0
+            while (e < m) {
+              acc(edi(e)) += rank(esi(e)) * ew(e) / ewd(e); e += 1
+            }
+            Array.tabulate(n)(i => r0(i) + damp * acc(i))
+          }((next, prev) => maxAbs(i => math.abs(next(i) - prev(i))))
+          vids.zip(rank).toSeq.toDF("vid", "pagerank")
+        }
+      } else {
+        val init = vr.select(col("vid"), col("_r0").as("pagerank"))
           .localCheckpoint(true)
-        Pins.release(withDeg)
-        return out
+        iterateRanks(init)(Pins.release(_)) { ranks =>
+          val contribExpr =
+            if (fixed) expr("(pagerank * w) DIV _wdeg")
+            else col("pagerank") * col("w") / col("_wdeg")
+          val contribs = withDeg
+            .join(ranks.withColumnRenamed("vid", "src"), Seq("src"))
+            .select(col("dst").as("vid"), contribExpr.as("_c"))
+            .groupBy("vid").agg(sum(col("_c")).as("_csum"))
+          // `ranks` must appear in next's plan exactly ONCE: localCheckpoint
+          // rewrites the LogicalRDD's stats from the pre-checkpoint plan, and
+          // join-size estimates MULTIPLY — a second ranks join would square
+          // sizeInBytes every round, and the BigInt's digit count then doubles
+          // per round until Catalyst spends minutes multiplying million-digit
+          // numbers (observed at ~25 rounds). Hence convergence is measured by
+          // a separate terminal query over the two pinned iterates, whose
+          // stats feed nothing downstream.
+          val dampTerm =
+            if (fixed)
+              expr("(85 * coalesce(_csum, CAST(0 AS BIGINT))) DIV 100")
+            else lit(damp) * coalesce(col("_csum"), lit(0d))
+          vr.select(col("vid"), col("_r0"))
+            .join(contribs, Seq("vid"), "left_outer")
+            .select(col("vid"), (col("_r0") + dampTerm).as("pagerank"))
+            .localCheckpoint(true)
+        } { (next, ranks) =>
+          next
+            .join(ranks.withColumnRenamed("pagerank", "_prev"), Seq("vid"))
+            .agg(coalesce(max(abs(col("pagerank") - col("_prev")))
+              .cast("double"), lit(0d)))
+            .head().getDouble(0)
+        }
       }
-    }
-    var ranks = vr.select(col("vid"), col("_r0").as("pagerank"))
-      .localCheckpoint(true)
-    var delta = Double.MaxValue
-    var iter = 0
-    while (iter < maxIter && delta > tol) {
-      val contribExpr =
-        if (fixed) expr("(pagerank * w) DIV _wdeg")
-        else col("pagerank") * col("w") / col("_wdeg")
-      val contribs = withDeg
-        .join(ranks.withColumnRenamed("vid", "src"), Seq("src"))
-        .select(col("dst").as("vid"), contribExpr.as("_c"))
-        .groupBy("vid").agg(sum(col("_c")).as("_csum"))
-      // `ranks` must appear in next's plan exactly ONCE: localCheckpoint
-      // rewrites the LogicalRDD's stats from the pre-checkpoint plan, and
-      // join-size estimates MULTIPLY — a second ranks join would square
-      // sizeInBytes every round, and the BigInt's digit count then doubles
-      // per round until Catalyst spends minutes multiplying million-digit
-      // numbers (observed at ~25 rounds). Hence convergence is measured by
-      // a separate terminal query over the two pinned iterates, whose
-      // stats feed nothing downstream.
-      val dampTerm =
-        if (fixed)
-          expr("(85 * coalesce(_csum, CAST(0 AS BIGINT))) DIV 100")
-        else lit(damp) * coalesce(col("_csum"), lit(0d))
-      val next = vr.select(col("vid"), col("_r0"))
-        .join(contribs, Seq("vid"), "left_outer")
-        .select(col("vid"), (col("_r0") + dampTerm).as("pagerank"))
-        .localCheckpoint(true)
-      // tol <= 0 = run-exactly-maxIter mode: when the round budget binds
-      // (bounded-round snapshots), the convergence query is pure per-round
-      // overhead — skip it and halve the job count
-      if (tol > 0)
-        delta = next
-          .join(ranks.withColumnRenamed("pagerank", "_prev"), Seq("vid"))
-          .agg(coalesce(max(abs(col("pagerank") - col("_prev")))
-            .cast("double"), lit(0d)))
-          .head().getDouble(0)
-      Pins.release(ranks)
-      ranks = next
-      iter += 1
-    }
     val out = verts.join(ranks, Seq("vid"))
       .select(col("uuid").as("author_uuid"), col("pagerank"))
       .localCheckpoint(true)
-    Pins.release(withDeg, ranks)
+    Pins.release(withDeg)
+    if (!fold) Pins.release(ranks)
     out
   }
 

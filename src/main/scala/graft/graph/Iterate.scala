@@ -3,10 +3,10 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, count, lit}
 
-/** The superstep primitive shared by the iterative graph operators
-  * (Pregelix's "one fixed dataflow per superstep"): a round is ONE job
-  * that both writes the next state and reports the statistic the loop
-  * tests for convergence.
+/** The superstep primitive shared by the iterative operators (Pregelix's
+  * "one fixed dataflow per superstep"): a round is ONE job that both
+  * writes the next state and reports the statistic the loop tests for
+  * convergence.
   *
   *  - [[pin]] materializes a frame with an eager `localCheckpoint` and
   *    collects aggregate statistics over its rows through
@@ -19,6 +19,17 @@ import org.apache.spark.sql.functions.{broadcast, count, lit}
   *    afterwards), releases the previous state in a `finally`, logs one
   *    record per round (observed statistics, seconds), and WARNs when the
   *    round budget runs out before the fixpoint.
+  *  - [[rounds]] is the fixed-round entry on top of [[fixpoint]]: exactly
+  *    `n` rounds, labelled, released and logged the same way, never a
+  *    WARN.
+  *
+  * [[fixpoint]]'s `while` is the one superstep loop in `graft`. Driven by
+  * [[fixpoint]]: `unitHierarchy`, `kCore`, `labelPropagation`,
+  * `connectedComponents` and `powerIterate` with `tol > 0` (PageRank,
+  * author rank; its driver fold too, whose rounds run no job but log the
+  * same record). Driven by [[rounds]]: `kmeans` (the Lloyd loop of
+  * `kmeansCentroids`, `buildIvfIndex` and `trainPqCodebooks`),
+  * `nswSearch`'s hops and `powerIterate` with `tol <= 0`.
   *
   * Observed statistics live in task accumulators. Callers test
   * convergence as a statistic being zero versus non-zero (no label
@@ -124,14 +135,28 @@ object Iterate {
         try step(prev) finally release(prev)
       }
       if (log.isInfoEnabled)
-        log.info(f"$operator superstep $round: ${show(cur.stats)}, " +
-          f"${(System.nanoTime() - t0) / 1e9}%.3f s")
+        log.info(s"$operator superstep $round: " +
+          (Seq(show(cur.stats)).filter(_.nonEmpty) :+
+            f"${(System.nanoTime() - t0) / 1e9}%.3f s").mkString(", "))
     }
     if (!cur.converged)
       log.warn(s"$operator: no fixpoint after $round supersteps " +
         s"(last superstep: ${show(cur.stats)})")
     Outcome(cur.state, round, cur.converged, cur.stats)
   }
+
+  /** Run `step` exactly `n` rounds from `init` and return the last state
+    * (the caller's). The round count is the stopping rule, so the state
+    * carries the round number and the n-th round is the fixpoint: the
+    * rounds are labelled, released and logged as [[fixpoint]]'s are, and
+    * the budget running out is no WARN.
+    */
+  def rounds[S](operator: String, init: S, n: Int)
+               (release: S => Unit)(step: S => S): S =
+    fixpoint(operator, Superstep((init, 0), Map.empty, converged = n <= 0),
+        n)((s: (S, Int)) => release(s._1)) { case (s, i) =>
+      Superstep((step(s), i + 1), Map.empty, converged = i + 1 >= n)
+    }.state._1
 
   /** Run `body` with `desc` as the description of the jobs this thread
     * starts, then restore the caller's description, whether `body`

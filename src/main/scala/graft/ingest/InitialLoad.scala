@@ -47,12 +47,6 @@ object InitialLoad {
     StructField("id", StringType), StructField("name", StringType),
     StructField("orcid", StringType)))
 
-  /** countries.csv: 68 mledoze/countries columns; only these four are
-    * consumed (create_graph.py:106-123).
-    */
-  val countrySchemaConsumed: Seq[String] =
-    Seq("name.common", "name.official", "cca3", "latlng")
-
   /** Membership resolution (J10): orcid-preferred else exact-name join
     * against the current authors table. Returns ALL input rows annotated
     * with `author_uuid` (null = unresolved) — callers split matched from

@@ -116,11 +116,6 @@ object Schemas {
       StructField("queryTime", LongType)))),
     StructField("results", ArrayType(openAireResult))))
 
-  /** OpenAlex work (FIXTURES.md §2): only id + cited_by_count consumed. */
-  val openAlexWork: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("cited_by_count", LongType)))
-
   // --- legacy search envelope (FIXTURES.md §3) ----------------------------
 
   /** XML-attribute-style creator (`tests/fixtures/authors.json`,

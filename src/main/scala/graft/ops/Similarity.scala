@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.Pins
 import graft.functions.CorpusFunctions._
+import graft.graph.Iterate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -112,14 +113,16 @@ object Similarity {
 
   /** The Lloyd loop over an ALREADY-PINNED (_id, _v) frame — shared by
     * [[kmeansCentroids]] and [[buildIvfIndex]] (which reuses one pin for
-    * the loop AND the final cell assignment).
+    * the loop AND the final cell assignment). `iters` rounds of
+    * [[graft.graph.Iterate.rounds]] (`"kmeans superstep <i>"`), each
+    * pinning the next centroid table and releasing the previous one.
     */
   private def kmeansCentroidsPinned(base: DataFrame, nCenters: Int,
                                     iters: Int): DataFrame = {
     // center ids via array positions over the (≤ nCenters-row) hash-ordered
     // sample — no global window (a partition-less WindowExec would both
     // warn and single-task; collect_list on ≤ nCenters rows is trivial)
-    var centroids = base
+    val init = base
       .select(struct(xxhash64(col("_id")).as("_h"), col("_v").as("_v"))
         .as("_s"))
       .orderBy(col("_s._h")).limit(nCenters)
@@ -127,9 +130,9 @@ object Similarity {
       .select(posexplode(col("_a")).as(Seq("center_id", "_s")))
       .select(col("center_id"), col("_s._v").as("centroid"))
       .localCheckpoint(true)
-    for (_ <- 1 to iters) {
+    Iterate.rounds("kmeans", init, iters)(Pins.release(_)) { centroids =>
       val assigned = assignToCentroids(base, centroids)
-      val next = assigned
+      assigned
         .select(col("center_id"), posexplode(col("_v")).as(Seq("_pos", "_x")))
         .groupBy("center_id", "_pos").agg(avg(col("_x")).as("_m"))
         .groupBy("center_id")
@@ -137,10 +140,7 @@ object Similarity {
           array_sort(collect_list(struct(col("_pos"), col("_m")))),
           s => s.getField("_m").cast("float")).as("centroid"))
         .localCheckpoint(true)
-      Pins.release(centroids)
-      centroids = next
     }
-    centroids
   }
 
   /** Nearest-centroid assignment: fold the (small) centroid table into
@@ -971,7 +971,8 @@ object Similarity {
     * newly reached nodes fetch their vector (equi-join on the corpus
     * id), and a per-query window keeps the best `ef`. Run-exactly-N
     * rounds (the PageRank discipline — a data-dependent convergence test
-    * would serialize the job graph); each round pins its frontier and
+    * would serialize the job graph) on [[graft.graph.Iterate.rounds]]
+    * (`"nswSearch superstep <i>"`); each round pins its frontier and
     * releases the previous one. Deterministic: ties to the smallest id.
     *
     * Approximate by construction (the graph may not connect a query's
@@ -1009,21 +1010,20 @@ object Similarity {
       .withColumn("_rn", row_number().over(wEf))
       .filter(col("_rn") <= ef)
       .select("query_id", "vec_id", "_cos")
-    var best = topEf(score(q.select("query_id")
+    val init = topEf(score(q.select("query_id")
         .crossJoin(broadcast(entry))))
       .localCheckpoint(true)
-    for (_ <- 1 to hops) {
+    val best = Iterate.rounds("nswSearch", init, hops)(
+        Pins.release(_)) { best =>
       val reached = best.select(col("query_id"), col("vec_id").as("src"))
         .join(index.edges, Seq("src"))
         .select(col("query_id"), col("dst").as("vec_id"))
         .dropDuplicates("query_id", "vec_id")
       // dedup AFTER the union: a re-reached node rescores to the
       // identical cosine, so dropDuplicates is deterministic here
-      val next = topEf(best.union(score(reached))
+      topEf(best.union(score(reached))
           .dropDuplicates("query_id", "vec_id"))
         .localCheckpoint(true)
-      Pins.release(best)
-      best = next
     }
     val out = best
       .withColumn("rank", row_number().over(wEf))

@@ -62,16 +62,4 @@ object Metrics {
       .withColumn("total_time_seconds",
         round(lit(totalTimeSeconds), 3))
   }
-
-  /** Duplicate-submission detail (A3, doi.py:209-213): DOIs submitted more
-    * than once with their multiplicity.
-    */
-  def duplicateSubmissions(tracker: DataFrame): DataFrame =
-    tracker.groupBy("doi").count().filter(col("count") > 1)
-
-  /** Output-type census (A5, notebooks/summary.ipynb): one reporting query
-    * over the outputs node table.
-    */
-  def resultTypeCensus(outputs: DataFrame): DataFrame =
-    outputs.groupBy("result_type").count()
 }

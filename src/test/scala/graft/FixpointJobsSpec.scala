@@ -1,6 +1,13 @@
 package graft
 
-import graft.graph.{ConnectedComponents, GraphOps}
+import java.nio.file.{Files, Paths}
+
+import graft.graph.{ConnectedComponents, GraphOps, Iterate}
+import graft.ops.Similarity
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,9 +18,11 @@ import org.scalatest.time.SpanSugar._
 
 import scala.util.Random
 
-/** The iterative graph operators run one superstep as a few jobs: the
-  * round's pin observes its own convergence statistic, so no separate
-  * count/head/isEmpty job follows it.
+/** The iterative operators run one superstep as a few jobs: the round's
+  * pin observes its own convergence statistic, so no separate
+  * count/head/isEmpty job follows it. Every superstep loop is
+  * [[Iterate]]'s, so each round's jobs carry its label and only an
+  * unconverged fixpoint WARNs.
   */
 class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
     with TimeLimits {
@@ -229,6 +238,160 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
       GraphOps.labelPropagation(md5Graph, maxIter = 2).count()
       assert(sc.getLocalProperty("spark.job.description") == "curate: outer")
     } finally sc.setJobDescription(null)
+  }
+
+  /** 200 random 8-dim vectors, the PinOwnershipSpec IVF corpus. */
+  private def vectors: DataFrame = {
+    import spark.implicits._
+    val rnd = new Random(7)
+    (0 until 200).map(i => (i.toLong,
+      Array.fill(8)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
+  }
+
+  /** The first 5 vectors as nswSearch queries. */
+  private def queriesOf(v: DataFrame): DataFrame =
+    v.filter(col("vec_id") < 5).withColumnRenamed("vec_id", "query_id")
+
+  /** A path of 30 vertices: ranks still move after a few rounds. */
+  private def pathEdges: DataFrame = {
+    import spark.implicits._
+    (0L until 30L).map(i => (i, i + 1)).toDF("src", "dst")
+  }
+
+  test("buildIvfIndex: each Lloyd round is a kmeans superstep of at most " +
+      "5 jobs") {
+    var centers = 0L
+    val descs = jobDescriptions {
+      val idx = Similarity.buildIvfIndex(vectors, nCenters = 4, iters = 3)
+      centers = idx.centroids.count()
+      idx.release()
+    }
+    val rounds = perSuperstep(descs, "kmeans")
+    assert(rounds.keySet == Set(1, 2, 3), rounds)
+    assert(rounds.values.forall(_ <= 5), rounds)
+    assert(centers == 4)
+  }
+
+  test("nswSearch: each hop is an nswSearch superstep of at most 9 jobs") {
+    val v = vectors
+    val idx = Similarity.buildNswGraph(v, m = 4, nCenters = 4)
+    var rows = 0L
+    val descs = jobDescriptions {
+      rows = Similarity.nswSearch(queriesOf(v), idx, v,
+        k = 3, ef = 8, hops = 3).count()
+    }
+    val rounds = perSuperstep(descs, "nswSearch")
+    assert(rounds.keySet == Set(1, 2, 3), rounds)
+    assert(rounds.values.forall(_ <= 9), rounds)
+    assert(rows == 15)
+  }
+
+  test("distributed pageRank with tol > 0: each round is a powerIterate " +
+      "superstep of at most 10 jobs") {
+    var ranked = 0L
+    val descs = jobDescriptions {
+      ranked = GraphOps.pageRank(md5Graph, tol = 1e-6, maxIter = 8,
+        driverFoldMaxRows = 0).count()
+    }
+    val rounds = perSuperstep(descs, "powerIterate")
+    assert(rounds.nonEmpty)
+    assert(rounds.values.forall(_ <= 10), rounds)
+    assert(ranked > 0)
+  }
+
+  /** WARN messages of the [[Iterate]] logger while `body` runs. */
+  private def iterateWarnings(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("iterate-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(Iterate.getClass.getName)
+      .asInstanceOf[CoreLogger]
+    logger.addAppender(capture)
+    val level = logger.getLevel
+    if (!logger.isWarnEnabled) logger.setLevel(Level.WARN)
+    try body finally {
+      logger.setLevel(level)
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  test("an unconverged pageRank WARNs once on the fold and on the " +
+      "distributed loop") {
+    for (fold <- Seq(2000000L, 0L)) {
+      val warns = iterateWarnings {
+        GraphOps.pageRank(pathEdges, tol = 1e-9, maxIter = 2,
+          driverFoldMaxRows = fold).collect()
+      }
+      assert(warns.size == 1, s"driverFoldMaxRows = $fold: $warns")
+      assert(warns.head.startsWith("powerIterate: no fixpoint after 2 " +
+        "supersteps"), warns.head)
+    }
+  }
+
+  test("fixed-round loops log no WARN") {
+    val v = vectors
+    val warns = iterateWarnings {
+      for (fold <- Seq(2000000L, 0L))
+        GraphOps.pageRank(pathEdges, tol = 0.0, maxIter = 2,
+          driverFoldMaxRows = fold).collect()
+      Similarity.buildIvfIndex(v, nCenters = 4, iters = 2).release()
+      val idx = Similarity.buildNswGraph(v, m = 4, nCenters = 4)
+      Similarity.nswSearch(queriesOf(v), idx, v, k = 3,
+        ef = 8, hops = 2).collect()
+    }
+    assert(warns.isEmpty, warns)
+  }
+
+  test("Iterate.rounds runs exactly n rounds and releases every state but " +
+      "the last") {
+    spark // described labels the rounds' jobs of the active session
+    for (n <- 0 to 3) {
+      val released = scala.collection.mutable.Buffer.empty[Int]
+      val last = Iterate.rounds("count", 0, n)(released += _)(_ + 1)
+      assert(last == n)
+      assert(released == (0 until n), s"n = $n")
+    }
+  }
+
+  test("no var outside Iterate holds a pinned frame across rounds") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), "run from the repository root")
+    val decl = raw"^\s*(?:private(?:\[\w+\])?\s+)?var\s".r
+    import scala.jdk.CollectionConverters._
+    val sources = Files.walk(root).iterator().asScala.toSeq.filter(p =>
+      p.toString.endsWith(".scala") &&
+        !p.endsWith(Paths.get("graph", "Iterate.scala")))
+    val hits = for {
+      f <- sources
+      lines = Files.readAllLines(f).asScala.toIndexedSeq
+      i <- lines.indices
+      if decl.findFirstIn(lines(i)).isDefined &&
+        initialiser(lines, i).exists(_.contains("localCheckpoint("))
+    } yield s"$f:${i + 1}: ${lines(i).trim}"
+    assert(sources.nonEmpty)
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  /** The lines of the initialiser that starts on line `i`: that line,
+    * then the next while a bracket is still open or the next line
+    * continues the expression with a leading `.`.
+    */
+  private def initialiser(lines: IndexedSeq[String], i: Int): Seq[String] = {
+    var depth = 0
+    var j = i
+    do {
+      depth += lines(j).count("([{".contains(_)) -
+        lines(j).count(")]}".contains(_))
+      j += 1
+    } while (j < lines.length && (depth > 0 || lines(j).trim.startsWith(".")))
+    lines.slice(i, j)
   }
 
   test("fixed-point rank guards keep their messages on both paths") {
