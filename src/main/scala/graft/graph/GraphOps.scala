@@ -3,6 +3,8 @@ package graft.graph
 import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType,
+  DoubleType, LongType, StructField, StructType}
 
 /** Graph-shaped analytics over the property-graph tables, as pure
   * Catalyst dataflows — nothing here leaves Catalyst.
@@ -36,14 +38,6 @@ import org.apache.spark.sql.functions._
 object GraphOps {
 
   private def vid(c: org.apache.spark.sql.Column) = xxhash64(c)
-
-  /** Driver budget for [[powerIterate]]'s fold fast path: 2M edges ≈
-    * 64 MB of driver arrays (the [[graft.ops.Preference.bradleyTerry]]
-    * maxPairs discipline) — word graphs, citation projections and other
-    * dimension-sized rank inputs sit far below it; corpus-scale graphs
-    * exceed it and take the distributed per-round loop.
-    */
-  private val RankDriverFoldMaxRows = 2L * 1000 * 1000
 
   /** Transitive closure of the unit_of hierarchy: for every unit, the set
     * of ancestor unit ids (workstream containment). Iterative DataFrame
@@ -131,7 +125,8 @@ object GraphOps {
       .select(array_min(col("_vs")).as("src"), explode(col("_vs")).as("dst"))
       .filter(col("src") =!= col("dst"))
     // the vertex map is reused on both sides of the label normalization;
-    // pin it once, release after the (small) result is materialized
+    // pin it once, release it and the components' pin after the (small)
+    // result is materialized
     val verts = authorOf.select(col("src").as("m")).distinct()
       .select(vid(col("m")).as("vid"), col("m"))
       .localCheckpoint(true)
@@ -149,7 +144,7 @@ object GraphOps {
         org.apache.spark.sql.expressions.Window.partitionBy("component_id")))
       .select(col("m").as("author_uuid"), col("_cm").as("component_id"))
       .localCheckpoint(true)
-    Pins.release(verts)
+    Pins.release(verts, cc)
     out
   }
 
@@ -161,9 +156,12 @@ object GraphOps {
     * per round and the previous round's pin released. Callers must
     * pass a symmetrized edge list, so every edge endpoint has out-degree
     * ≥ 1 and dangling mass cannot occur. Unweighted PageRank is the w=1
-    * special case (weighted out-degree = plain out-degree).
+    * special case (weighted out-degree = plain out-degree). The edge list
+    * and the vertex set are pinned here, each by one job that also counts
+    * its rows; when both counts pass [[Iterate.folds]] the rounds run in
+    * the driver fold instead, and the result is a local frame.
     *
-    * @param verts  (uuid, vid)
+    * @param verts  (uuid, vid), unpinned: pinned here once
     * @param wedges (src, dst, w) with vid-hashed endpoints, symmetrized
     * @return (author_uuid, pagerank), unnormalized (reset + damp·contribs)
     */
@@ -171,7 +169,7 @@ object GraphOps {
                            tol: Double, maxIter: Int,
                            resetCol: Option[String] = None,
                            scale: Option[Long] = None,
-                           driverFoldMaxRows: Long = RankDriverFoldMaxRows
+                           driverFoldMaxRows: Long = Iterate.foldMaxRows
                           ): DataFrame = {
     // scale = Some(S) switches the cell arithmetic to FIXED-POINT LONGS
     // (rank in units of 1/S): per-edge contribution (rank·w) DIV wdeg,
@@ -181,9 +179,9 @@ object GraphOps {
     // seam; the double mode stays the production default). Both fixed-
     // mode preconditions — integer-valued weights and Long headroom for
     // the per-round products — are VALIDATED below (guard 1 observed by
-    // the edge pin's own job, guard 2 one aggregate over the vertex set
-    // that also counts it), failing loudly instead of silently truncating
-    // on the long cast or wrapping on overflow.
+    // the edge pin's own job, guard 2 by the vertex pin's), failing
+    // loudly instead of silently truncating on the long cast or wrapping
+    // on overflow.
     scale.foreach(s => require(s >= 20 && s % 20 == 0,
       "scale must be a positive multiple of 20 (0.15·S must be integral)"))
     val fixed = scale.isDefined
@@ -241,31 +239,9 @@ object GraphOps {
     val damp = 0.85
     // uniform 0.15 reset (classic PageRank) or a per-vertex reset
     // vector (personalized PageRank — teleport mass only onto the
-    // topic set); the vector rides the verts table so each round's
+    // topic set); the vector rides the vertex pin so each round's
     // rebuild stays one narrow join. In fixed mode a caller-supplied
     // reset column must already be the scaled LONG vector.
-    val vr = resetCol.map(rc => verts.withColumn("_r0", col(rc)))
-      .getOrElse(verts.withColumn("_r0",
-        scale.map(s => lit(3L * (s / 20)).cast("long") // 0.15·S, integrally
-        ).getOrElse(lit(0.15))))
-    // DRIVER FOLD fast path — the bradleyTerry bounded-lattice
-    // discipline: when the (pinned) edge list and vertex set both fit
-    // the driver budget (word-co-occurrence graphs, citation
-    // projections, anything dimension-sized), 20 rounds of per-round
-    // Spark jobs are pure scheduling overhead — fold the rounds over
-    // arrays instead. The recurrence is IDENTICAL: in fixed mode the
-    // integer ops are order-free, so the fold is bit-equal to the
-    // distributed loop (and to the unrolled SQL oracles); in double
-    // mode summation order differs only within the non-order-pinned
-    // float semantics the distributed loop already has. Beyond the cap
-    // the distributed loop below runs unchanged — the 100 TB path.
-    // driverFoldMaxRows = 0 disables the fold (and, outside fixed mode,
-    // skips the vertex aggregate — an at-scale caller that opts out pays
-    // nothing). The fold allocates Int-indexed arrays, so the effective
-    // cap clamps at Int.MaxValue — a larger caller budget must not let
-    // nEdges.toInt truncate silently.
-    val foldCap = math.min(driverFoldMaxRows, Int.MaxValue.toLong)
-    val foldEdges = driverFoldMaxRows > 0 && nEdges <= foldCap
     // guard 2: Long headroom. Total damped mass is bounded by
     // sum(_r0)/0.15 (per-source contributions never exceed the source's
     // rank, and integer DIV only shrinks them), so the two per-round
@@ -277,37 +253,41 @@ object GraphOps {
     // already be the scaled LONG lattice — fractional values are caught
     // loudly instead of letting cast("long") truncate them; the mass sum
     // runs in DECIMAL so the precondition check itself cannot wrap. The
-    // same aggregate counts the vertices for the fold gate.
-    val nVerts: Long =
-      if (!fixed && !foldEdges) Long.MaxValue
-      else {
-        val c = vr.agg(count(lit(1)), (if (!fixed) Nil else Seq(
-          coalesce(sum(col("_r0").cast("decimal(38,0)")),
-            lit(0).cast("decimal(38,0)")),
-          coalesce(min(col("_r0").cast("double")), lit(0d)),
-          coalesce(max(abs(col("_r0").cast("double") -
-            floor(col("_r0").cast("double")))), lit(0d)),
-          coalesce(max(abs(col("_r0").cast("double"))), lit(0d)))): _*)
-          .head()
-        if (fixed) {
-          require(c.getDouble(2) >= 0d,
-            "fixed-point reset vector must be non-negative")
-          require(c.getDouble(3) == 0d, "fixed-point rank mode requires " +
-            "an integer-valued reset vector (a fractional reset would be " +
-            "silently truncated by the long cast) — pre-scale it onto " +
-            "the integer lattice")
-          require(c.getDouble(4) < 9007199254740992d, // 2^53
-            "fixed-point reset values must stay below 2^53")
-          val sumR0 = BigInt(c.getDecimal(1).toBigInteger)
-          val bound = sumR0 * 100 / 15 + 1
-          require(bound * maxW <= BigInt(Long.MaxValue) &&
-              bound * 85 <= BigInt(Long.MaxValue),
-            s"fixed-point overflow precondition failed: damped-mass bound " +
-              s"$bound times max weight $maxW (or times 85) exceeds Long — " +
-              "lower the scale or the weights")
-        }
-        c.getLong(0)
-      }
+    // job that pins the vertex set observes these statistics and the
+    // vertex count of the fold gate: no separate pass over the vertices.
+    val vp = Iterate.pin(resetCol.map(rc => verts.withColumn("_r0", col(rc)))
+      .getOrElse(verts.withColumn("_r0",
+        scale.map(s => lit(3L * (s / 20)).cast("long") // 0.15·S, integrally
+        ).getOrElse(lit(0.15)))),
+      count(lit(1)).as("verts") +: (if (!fixed) Nil else Seq(
+        coalesce(sum(col("_r0").cast("decimal(38,0)")),
+          lit(0).cast("decimal(38,0)")).as("r0_sum"),
+        coalesce(min(col("_r0").cast("double")), lit(0d)).as("r0_min"),
+        coalesce(max(abs(col("_r0").cast("double") -
+          floor(col("_r0").cast("double")))), lit(0d)).as("r0_frac"),
+        coalesce(max(abs(col("_r0").cast("double"))), lit(0d))
+          .as("r0_abs"))): _*)
+    val vr = vp.df
+    val nVerts = vp.long("verts")
+    if (fixed) {
+      def g(name: String) = vp.stats(name).asInstanceOf[Double]
+      require(g("r0_min") >= 0d,
+        "fixed-point reset vector must be non-negative")
+      require(g("r0_frac") == 0d, "fixed-point rank mode requires " +
+        "an integer-valued reset vector (a fractional reset would be " +
+        "silently truncated by the long cast) — pre-scale it onto " +
+        "the integer lattice")
+      require(g("r0_abs") < 9007199254740992d, // 2^53
+        "fixed-point reset values must stay below 2^53")
+      val sumR0 = BigInt(vp.stats("r0_sum").asInstanceOf[java.math.BigDecimal]
+        .toBigInteger)
+      val bound = sumR0 * 100 / 15 + 1
+      require(bound * maxW <= BigInt(Long.MaxValue) &&
+          bound * 85 <= BigInt(Long.MaxValue),
+        s"fixed-point overflow precondition failed: damped-mass bound " +
+          s"$bound times max weight $maxW (or times 85) exceeds Long — " +
+          "lower the scale or the weights")
+    }
     // The one convergence rule of both paths below: tol > 0 stops at the
     // first round whose max |Δrank| <= tol (Iterate WARNs when maxIter
     // runs out first); tol <= 0 runs exactly maxIter rounds and measures
@@ -325,26 +305,24 @@ object GraphOps {
         val d = maxDelta(next, prev)
         Iterate.Superstep(next, Map("max_delta" -> d), converged = d <= tol)
       }.state
-    val fold = foldEdges && nVerts <= foldCap
-    val ranks =
-      if (fold) {
-        val spark = verts.sparkSession
-        import spark.implicits._
-        // decode into PARALLEL PRIMITIVE ARRAYS (the bradleyTerry
-        // ei/ej/en layout), once for both modes: vertex ids, edge
-        // endpoints as vertex indexes, and the mode's cells (r0, w, wdeg)
-        // cast to `cell` and stored by `vertex`/`edge`. Below ~100k rows
-        // a plain collect is one job and the boxed transient is a few MB;
-        // above it, stream partition-at-a-time via toLocalIterator so the
-        // driver peak is the arrays themselves (~32 B/edge) plus one
-        // partition of Rows — never a cap-sized boxed collect; BOTH the
-        // edge list and the vertex set ride this hybrid. Only the round
-        // kernels are typed per mode: their arithmetic genuinely differs.
-        def decodeRows(df: DataFrame, nRows: Long)(f: Row => Unit): Unit =
-          if (nRows <= 100000) df.collect().foreach(f)
-          else df.toLocalIterator().forEachRemaining(r => f(r))
+    val out =
+      if (Iterate.folds(nEdges, driverFoldMaxRows) &&
+          Iterate.folds(nVerts, driverFoldMaxRows)) {
+        // DRIVER FOLD: when the pinned edge list and vertex set both fit
+        // the cap, per-round Spark jobs are pure scheduling overhead, so
+        // the rounds fold over arrays instead. The recurrence is
+        // IDENTICAL: in fixed mode the integer ops are order-free, so the
+        // fold is bit-equal to the distributed loop (and to the unrolled
+        // SQL oracles); in double mode summation order differs only
+        // within the non-order-pinned float semantics the distributed
+        // loop already has. The pins decode into PARALLEL PRIMITIVE
+        // ARRAYS (the bradleyTerry ei/ej/en layout), once for both modes:
+        // vertex uuids and ids, edge endpoints as vertex indexes, and the
+        // mode's cells (r0, w, wdeg) cast to `cell` and stored by
+        // `vertex`/`edge`. Only the round kernels are typed per mode:
+        // their arithmetic genuinely differs.
         val n = nVerts.toInt
-        val vids = new Array[Long](n)
+        val uuids = new Array[Any](n)
         val esi = new Array[Int](nEdges.toInt)
         val edi = new Array[Int](nEdges.toInt)
         // returns the number of edges kept
@@ -353,13 +331,13 @@ object GraphOps {
           val idx = new java.util.HashMap[Long, Integer](
             math.min(nVerts * 2, 1L << 30).toInt)
           var i = 0
-          decodeRows(vr.select(col("vid"), col("_r0").cast(cell)),
-            nVerts) { r =>
-            vids(i) = r.getLong(0); vertex(i, r)
-            idx.put(vids(i), i); i += 1
+          Iterate.decode(vr.select(col("vid"), col("_r0").cast(cell),
+              col("uuid")), nVerts) { r =>
+            uuids(i) = r.get(2); vertex(i, r)
+            idx.put(r.getLong(0), i); i += 1
           }
           var m = 0
-          decodeRows(withDeg.select(col("src"), col("dst"),
+          Iterate.decode(withDeg.select(col("src"), col("dst"),
               col("w").cast(cell), col("_wdeg").cast(cell)), nEdges) { r =>
             val si = idx.get(r.getLong(0))
             val di = idx.get(r.getLong(1))
@@ -381,14 +359,14 @@ object GraphOps {
           }
           dlt
         }
-        if (fixed) {
+        val rank: Array[_] = if (fixed) {
           val r0 = new Array[Long](n)
           val ew = new Array[Long](nEdges.toInt)
           val ewd = new Array[Long](nEdges.toInt)
           val m = decode("long")((i, r) => r0(i) = r.getLong(1)) { (e, r) =>
             ew(e) = r.getLong(2); ewd(e) = r.getLong(3)
           }
-          val rank = iterateRanks(r0)(_ => ()) { rank =>
+          iterateRanks(r0)(_ => ()) { rank =>
             val acc = new Array[Long](n)
             var e = 0
             while (e < m) {
@@ -396,7 +374,6 @@ object GraphOps {
             }
             Array.tabulate(n)(i => r0(i) + 85L * acc(i) / 100L)
           }((next, prev) => maxAbs(i => math.abs(next(i) - prev(i)).toDouble))
-          vids.zip(rank).toSeq.toDF("vid", "pagerank")
         } else {
           val r0 = new Array[Double](n)
           val ew = new Array[Double](nEdges.toInt)
@@ -405,7 +382,7 @@ object GraphOps {
               (e, r) =>
             ew(e) = r.getDouble(2); ewd(e) = r.getDouble(3)
           }
-          val rank = iterateRanks(r0)(_ => ()) { rank =>
+          iterateRanks(r0)(_ => ()) { rank =>
             val acc = new Array[Double](n)
             var e = 0
             while (e < m) {
@@ -413,12 +390,15 @@ object GraphOps {
             }
             Array.tabulate(n)(i => r0(i) + damp * acc(i))
           }((next, prev) => maxAbs(i => math.abs(next(i) - prev(i))))
-          vids.zip(rank).toSeq.toDF("vid", "pagerank")
         }
+        Iterate.local(vr.sparkSession, StructType(Seq(
+            vr.schema("uuid").copy(name = "author_uuid"),
+            StructField("pagerank", if (fixed) LongType else DoubleType))),
+          Seq.tabulate(n)(i => Row(uuids(i), rank(i))))
       } else {
         val init = vr.select(col("vid"), col("_r0").as("pagerank"))
           .localCheckpoint(true)
-        iterateRanks(init)(Pins.release(_)) { ranks =>
+        val ranks = iterateRanks(init)(Pins.release(_)) { ranks =>
           val contribExpr =
             if (fixed) expr("(pagerank * w) DIV _wdeg")
             else col("pagerank") * col("w") / col("_wdeg")
@@ -449,12 +429,13 @@ object GraphOps {
               .cast("double"), lit(0d)))
             .head().getDouble(0)
         }
+        val out = vr.join(ranks, Seq("vid"))
+          .select(col("uuid").as("author_uuid"), col("pagerank"))
+          .localCheckpoint(true)
+        Pins.release(ranks)
+        out
       }
-    val out = verts.join(ranks, Seq("vid"))
-      .select(col("uuid").as("author_uuid"), col("pagerank"))
-      .localCheckpoint(true)
-    Pins.release(withDeg)
-    if (!fold) Pins.release(ranks)
+    Pins.release(withDeg, vr)
     out
   }
 
@@ -464,7 +445,8 @@ object GraphOps {
     * linear edge growth — rank ordering within components is preserved for
     * hub detection while staying skew-proof. For exact co-occurrence
     * weights on moderate hubs see [[authorRankWeighted]]. Sub-cap graphs
-    * take the driver fold — see [[pageRank]]'s note on double-mode
+    * take the driver fold, which pins the vertex set once and joins
+    * nothing back onto it — see [[pageRank]]'s note on double-mode
     * summation-order drift.
     */
   def authorRank(authorOf: DataFrame, tol: Double = 0.001,
@@ -476,13 +458,10 @@ object GraphOps {
       star.select(col("dst").as("src"), col("src").as("dst")))
     val verts = authorOf.select(col("src").as("uuid")).distinct()
       .select(col("uuid"), vid(col("uuid")).as("vid"))
-      .localCheckpoint(true)
     val edges = coedges
       .select(vid(col("src")).as("src"), vid(col("dst")).as("dst"),
         lit(1L).as("w"))
-    val out = powerIterate(verts, edges, tol, maxIter, scale = scale)
-    Pins.release(verts)
-    out
+    powerIterate(verts, edges, tol, maxIter, scale = scale)
   }
 
   /** PageRank with TRUE co-occurrence weights: edge (a, b) carries the
@@ -527,12 +506,9 @@ object GraphOps {
       half.select(col("mb").as("ma"), col("ma").as("mb"), col("w")))
     val verts = authorOf.select(col("src").as("uuid")).distinct()
       .select(col("uuid"), vid(col("uuid")).as("vid"))
-      .localCheckpoint(true)
     val edges = coedges
       .select(vid(col("ma")).as("src"), vid(col("mb")).as("dst"), col("w"))
-    val out = powerIterate(verts, edges, tol, maxIter, scale = scale)
-    Pins.release(verts)
-    out
+    powerIterate(verts, edges, tol, maxIter, scale = scale)
   }
 
   /** Per-vertex triangle counts (Schank–Wagner / Cohen's MapReduce
@@ -617,42 +593,110 @@ object GraphOps {
     * sub-k vertices peel SIMULTANEOUSLY per round, so rounds are
     * bounded by the peeling depth (typically ≪ 20 on real graphs; a
     * worst-case path graph peels two vertices a round — set `maxIter`
-    * accordingly or pre-filter such tendrils).
+    * accordingly or pre-filter such tendrils). An edge set within
+    * [[Iterate.folds]]'s cap peels in the driver fold instead: the same
+    * rounds over the decoded edge list, the result a local frame.
     *
     * @return (vertex, core_degree) — degree WITHIN the k-core; empty
     *         when no k-core exists
+    * @throws IllegalStateException when `maxIter` rounds leave vertices
+    *         to peel
     */
   def kCore(edges: DataFrame, k: Int, srcCol: String = "src",
             dstCol: String = "dst", maxIter: Int = 1000): DataFrame = {
     require(k >= 1 && maxIter >= 1)
     val e0 = Iterate.pin(canonEdges(edges, srcCol, dstCol),
       count(lit(1)).as("kept"))
-    val r = Iterate.fixpoint("kCore",
-        Iterate.Superstep(e0.df, e0.stats, converged = e0.long("kept") == 0),
-        maxIter)(Pins.release(_)) { e =>
-      // peeled vertices are observed on the degree aggregate, inside the
-      // round's own job: a vertex below k loses all of its (>= 1) edges,
-      // so no vertex peeled <=> no edge dropped. The semi-joins keep the
-      // pinned edge set's size estimate from growing round over round.
-      // `kept` is tested first: when nothing is kept, adaptive execution
-      // may prune the empty keep side, observation included.
-      val keep = degreesCanonical(e)
-        .observe("kcore-peeled", count_if(col("_d") < k).as("peeled"))
-        .filter(col("_d") >= k).select("v")
-      val p = Iterate.pin(e
-        .join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
-        .select("a", "b"), count(lit(1)).as("kept"))
-      Iterate.Superstep(p.df, p.stats,
-        converged = p.long("kept") == 0 || p.long("peeled") == 0)
-    }
-    if (!r.converged) {
-      Pins.release(r.state)
-      throw new IllegalStateException(s"kCore: no fixpoint after $maxIter " +
-        s"rounds (${r.stats("kept")} edges live)")
-    }
-    degreesCanonical(r.state)
+    def core(e: DataFrame) = degreesCanonical(e)
       .select(col("v").as("vertex"), col("_d").as("core_degree"))
+    def noFixpoint(stats: Map[String, Any]) = new IllegalStateException(
+      s"kCore: no fixpoint after $maxIter rounds (${stats("kept")} edges live)")
+    val vertexType = e0.df.schema("a").dataType
+    if (Iterate.folds(e0.long("kept")) && driverKeyed(vertexType)) {
+      // DRIVER FOLD: the same simultaneous peel over the decoded edge
+      // list. The state is the live edges' indexes; a round's degrees,
+      // peeled vertices and kept edges are the distributed round's.
+      val vertex = new VertexIndex
+      val m = e0.long("kept").toInt
+      val ea = new Array[Int](m)
+      val eb = new Array[Int](m)
+      var j = 0
+      Iterate.decode(e0.df, m) { r =>
+        ea(j) = vertex(r.get(0)); eb(j) = vertex(r.get(1)); j += 1
+      }
+      val schema = core(e0.df).schema
+      e0.release()
+      def degrees(live: Array[Int]): Array[Long] = {
+        val d = new Array[Long](vertex.size)
+        live.foreach { e => d(ea(e)) += 1; d(eb(e)) += 1 }
+        d
+      }
+      val r = Iterate.fixpoint("kCore",
+          Iterate.Superstep(Array.range(0, m), e0.stats, converged = m == 0),
+          maxIter)(_ => ()) { live =>
+        val d = degrees(live)
+        val peeled = d.count(x => x > 0 && x < k).toLong
+        val kept = live.filter(e => d(ea(e)) >= k && d(eb(e)) >= k)
+        Iterate.Superstep(kept,
+          Map("kept" -> kept.length.toLong, "peeled" -> peeled),
+          converged = kept.isEmpty || peeled == 0)
+      }
+      if (!r.converged) throw noFixpoint(r.stats)
+      val d = degrees(r.state)
+      Iterate.local(edges.sparkSession, schema, (0 until vertex.size)
+        .filter(d(_) > 0).map(v => Row(vertex.values(v), d(v))))
+    } else {
+      val r = Iterate.fixpoint("kCore",
+          Iterate.Superstep(e0.df, e0.stats, converged = e0.long("kept") == 0),
+          maxIter)(Pins.release(_)) { e =>
+        // peeled vertices are observed on the degree aggregate, inside the
+        // round's own job: a vertex below k loses all of its (>= 1) edges,
+        // so no vertex peeled <=> no edge dropped. The semi-joins keep the
+        // pinned edge set's size estimate from growing round over round.
+        // `kept` is tested first: when nothing is kept, adaptive execution
+        // may prune the empty keep side, observation included.
+        val keep = degreesCanonical(e)
+          .observe("kcore-peeled", count_if(col("_d") < k).as("peeled"))
+          .filter(col("_d") >= k).select("v")
+        val p = Iterate.pin(e
+          .join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
+          .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
+          .select("a", "b"), count(lit(1)).as("kept"))
+        Iterate.Superstep(p.df, p.stats,
+          converged = p.long("kept") == 0 || p.long("peeled") == 0)
+      }
+      if (!r.converged) {
+        Pins.release(r.state)
+        throw noFixpoint(r.stats)
+      }
+      core(r.state)
+    }
+  }
+
+  /** Whether a vertex type folds on the driver: the fold keys vertices by
+    * their row values, and a binary value's `equals` is identity, not
+    * content.
+    */
+  private def driverKeyed(t: DataType): Boolean =
+    t match {
+      case BinaryType => false
+      case ArrayType(e, _) => driverKeyed(e)
+      case s: StructType => s.fields.forall(f => driverKeyed(f.dataType))
+      case _ => true
+    }
+
+  /** Dense driver-side indexes of the vertex values a fold decodes, in
+    * first-seen order.
+    */
+  private final class VertexIndex {
+    val values = scala.collection.mutable.ArrayBuffer.empty[Any]
+    private val index = new java.util.HashMap[Any, Integer]()
+    def size: Int = values.size
+    def apply(v: Any): Int = {
+      val i = index.get(v)
+      if (i != null) i.intValue
+      else { index.put(v, values.size); values += v; values.size - 1 }
+    }
   }
 
   /** Local clustering coefficient as an exact integer fraction: per
@@ -710,11 +754,13 @@ object GraphOps {
     * floating-point summation order, so floor-scaled projections (e.g.
     * floor(pagerank*1e6)) of pre-fold baselines can flip on boundary
     * values — last-ulp drift, within the non-order-pinned float
-    * semantics the distributed loop already has. The gate's edge count
-    * is observed by the edge pin; its vertex count is one aggregate job,
-    * run only when the edges fit the cap (and in fixed mode, where it
-    * doubles as the reset-vector guard). Pass driverFoldMaxRows = 0 to
-    * skip the fold.
+    * semantics the distributed loop already has. The fold is
+    * [[Iterate]]'s: its gate reads the edge count observed by the edge
+    * pin and the vertex count observed by the vertex pin (whose job also
+    * checks the fixed-mode reset vector), both pins decode straight into
+    * arrays, and the ranks come back as a local frame keyed by the vertex
+    * values, with no join back onto the vertices. `driverFoldMaxRows`
+    * defaults to [[Iterate.foldMaxRows]]; pass 0 to skip the fold.
     *
     * @param weightCol optional edge-weight column (default: every edge
     *                  weighs 1)
@@ -724,7 +770,7 @@ object GraphOps {
                dstCol: String = "dst", weightCol: Option[String] = None,
                tol: Double = 0.001, maxIter: Int = 30,
                scale: Option[Long] = None,
-               driverFoldMaxRows: Long = RankDriverFoldMaxRows): DataFrame =
+               driverFoldMaxRows: Long = Iterate.foldMaxRows): DataFrame =
     rankUndirected(edges, srcCol, dstCol, weightCol, tol, maxIter, None,
       scale, driverFoldMaxRows)
 
@@ -741,7 +787,7 @@ object GraphOps {
                              tol: Double, maxIter: Int,
                              sources: Option[DataFrame],
                              scale: Option[Long] = None,
-                             driverFoldMaxRows: Long = RankDriverFoldMaxRows
+                             driverFoldMaxRows: Long = Iterate.foldMaxRows
                             ): DataFrame = {
     val w = scale match {
       case Some(_) =>
@@ -781,15 +827,15 @@ object GraphOps {
           .select(col("uuid"), vid(col("uuid")).as("vid"),
             when(col("_isSrc"), resetHit).otherwise(resetMiss)
               .as("_reset"))
-    }).localCheckpoint(true)
+    })
     val wedges = sym.select(vid(col("_a")).as("src"),
       vid(col("_b")).as("dst"), col("w"))
     val out = powerIterate(verts, wedges, tol, maxIter,
       resetCol = sources.map(_ => "_reset"), scale = scale,
       driverFoldMaxRows = driverFoldMaxRows)
       .withColumnRenamed("author_uuid", "vertex")
-    // powerIterate's result is pinned: nothing reads half or verts
-    Pins.release(half, verts)
+    // powerIterate's result reads neither half nor its own pins
+    Pins.release(half)
     out
   }
 
@@ -844,6 +890,8 @@ object GraphOps {
     * number of changed labels is observed by the job that pins the
     * round. Early exit when a round changes no label; at `maxIter`
     * without that, the last labels are returned and the operator WARNs.
+    * An edge list within [[Iterate.folds]]'s cap runs the same rounds in
+    * the driver fold ([[foldLabels]]), and the result is a local frame.
     * Isolated vertices have no edges and are absent, matching
     * [[triangleCounts]] semantics.
     *
@@ -858,41 +906,121 @@ object GraphOps {
     require(maxIter >= 1)
     val e = edges.filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
       col(srcCol) =!= col(dstCol))
-    val sym = e.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .union(e.select(col(dstCol).as("u"), col(srcCol).as("v")))
+    // both directions pinned as one plan, by one job that also counts the
+    // arcs for the fold gate
+    val sp = Iterate.pin(e.select(col(srcCol).as("u"), col(dstCol).as("v"))
+      .union(e.select(col(dstCol).as("u"), col(srcCol).as("v"))),
+      count(lit(1)).as("arcs"))
+    val sym = sp.df
     val labelType = sym.schema("u").dataType
-    val none = lit(null).cast(labelType)
-    // state None = before round 1, every vertex labelled by its own id
-    val r = Iterate.fixpoint("labelPropagation",
-        Iterate.Superstep(Option.empty[DataFrame], Map.empty,
-          converged = false),
-        maxIter)(_.foreach(Pins.release(_))) { state =>
-      val votes = state match {
-        case None => sym.groupBy(col("u").as("vertex")) // dedupes edges
-          .agg(collect_set(col("v")).as("_nbrs"))
-          .select(col("vertex"), col("_nbrs").as("_votes"),
-            col("vertex").as("_prev"), col("_nbrs"))
-        case Some(s) => s
-          .select(explode(col("_nbrs")).as("vertex"),
-            col("community").as("_vote"), none.as("_prev"),
-            lit(null).cast(s.schema("_nbrs").dataType).as("_nbrs"))
-          .union(s.select(col("vertex"), none.as("_vote"),
-            col("community").as("_prev"), col("_nbrs")))
-          .groupBy("vertex")
-          .agg(collect_list(col("_vote")).as("_votes"),
-            max(col("_prev")).as("_prev"), max(col("_nbrs")).as("_nbrs"))
+    val out =
+      if (Iterate.folds(sp.long("arcs")) && driverKeyed(labelType))
+        foldLabels(sym, sp.long("arcs").toInt, labelType, maxIter)
+      else {
+        val none = lit(null).cast(labelType)
+        // state None = before round 1, every vertex labelled by its own id
+        val r = Iterate.fixpoint("labelPropagation",
+            Iterate.Superstep(Option.empty[DataFrame], Map.empty,
+              converged = false),
+            maxIter)(_.foreach(Pins.release(_))) { state =>
+          val votes = state match {
+            case None => sym.groupBy(col("u").as("vertex")) // dedupes edges
+              .agg(collect_set(col("v")).as("_nbrs"))
+              .select(col("vertex"), col("_nbrs").as("_votes"),
+                col("vertex").as("_prev"), col("_nbrs"))
+            case Some(s) => s
+              .select(explode(col("_nbrs")).as("vertex"),
+                col("community").as("_vote"), none.as("_prev"),
+                lit(null).cast(s.schema("_nbrs").dataType).as("_nbrs"))
+              .union(s.select(col("vertex"), none.as("_vote"),
+                col("community").as("_prev"), col("_nbrs")))
+              .groupBy("vertex")
+              .agg(collect_list(col("_vote")).as("_votes"),
+                max(col("_prev")).as("_prev"), max(col("_nbrs")).as("_nbrs"))
+          }
+          val p = Iterate.pinAfter(votes.select(col("vertex"),
+              argmaxVote(array_sort(concat(col("_votes"),
+                array(col("_prev")))), labelType).as("community"),
+              col("_prev"), col("_nbrs")),
+            count_if(col("community") =!= col("_prev")).as("changed"))(
+            _.drop("_prev"))
+          Iterate.Superstep(Option(p.df), p.stats,
+            converged = p.long("changed") == 0)
+        }
+        val state = r.state.get // maxIter >= 1: round 1 always runs
+        try state.select("vertex", "community").localCheckpoint(true)
+        finally Pins.release(state)
       }
-      val p = Iterate.pinAfter(votes.select(col("vertex"),
-          argmaxVote(array_sort(concat(col("_votes"), array(col("_prev")))),
-            labelType).as("community"), col("_prev"), col("_nbrs")),
-        count_if(col("community") =!= col("_prev")).as("changed"))(
-        _.drop("_prev"))
-      Iterate.Superstep(Option(p.df), p.stats,
-        converged = p.long("changed") == 0)
+    sp.release()
+    out
+  }
+
+  /** [[labelPropagation]]'s DRIVER FOLD over the `arcs` pinned arcs
+    * `sym` (u, v), both directions of every edge. The arcs decode sorted
+    * by (u, v) in one task, so vertex indexes follow Spark's ordering of
+    * the label type and a label is the index of the vertex it names: the
+    * smallest label of a tie is the smallest index, for any label type.
+    * The neighbour lists are deduped as `collect_set` dedupes them, and a
+    * round is [[argmaxVote]] over the sorted votes: the vertex's own
+    * label and each neighbour's.
+    */
+  private def foldLabels(sym: DataFrame, arcs: Int, labelType: DataType,
+                         maxIter: Int): DataFrame = {
+    val vertex = new VertexIndex
+    val from = new Array[Int](arcs)
+    val to = new Array[Any](arcs)
+    var a = 0
+    Iterate.decode(sym.coalesce(1).sortWithinPartitions("u", "v"), arcs) {
+        r =>
+      from(a) = vertex(r.get(0)); to(a) = r.get(1); a += 1
     }
-    val state = r.state.get // maxIter >= 1: round 1 always runs
-    try state.select("vertex", "community").localCheckpoint(true)
-    finally Pins.release(state)
+    val n = vertex.size
+    // neighbour lists as offsets into one array; equal neighbours of a
+    // vertex are adjacent in (u, v) order
+    val off = new Array[Int](n + 1)
+    val nbr = new Array[Int](arcs)
+    var m = 0
+    a = 0
+    for (i <- 0 until n) {
+      off(i) = m
+      while (a < arcs && from(a) == i) {
+        val j = vertex(to(a))
+        if (m == off(i) || nbr(m - 1) != j) { nbr(m) = j; m += 1 }
+        a += 1
+      }
+    }
+    off(n) = m
+    val votes = new Array[Int](
+      (0 until n).map(i => off(i + 1) - off(i)).foldLeft(0)(math.max) + 1)
+    val r = Iterate.fixpoint("labelPropagation",
+        Iterate.Superstep(Array.range(0, n), Map.empty, converged = false),
+        maxIter)(_ => ()) { labels =>
+      var changed = 0L
+      val next = Array.tabulate(n) { i =>
+        votes(0) = labels(i)
+        var c = 1
+        var t = off(i)
+        while (t < off(i + 1)) { votes(c) = labels(nbr(t)); c += 1; t += 1 }
+        java.util.Arrays.sort(votes, 0, c)
+        var best = votes(0)
+        var bestRun = 1
+        var run = 1
+        t = 1
+        while (t < c) {
+          run = if (votes(t) == votes(t - 1)) run + 1 else 1
+          if (run > bestRun) { best = votes(t); bestRun = run }
+          t += 1
+        }
+        if (best != labels(i)) changed += 1
+        best
+      }
+      Iterate.Superstep(next, Map("changed" -> changed),
+        converged = changed == 0)
+    }
+    Iterate.local(sym.sparkSession, StructType(Seq(
+        StructField("vertex", labelType), StructField("community", labelType))),
+      Seq.tabulate(n)(i =>
+        Row(vertex.values(i), vertex.values(r.state(i)))))
   }
 
   /** Most frequent label of a SORTED vote array, ties to the smallest:

@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, count, lit}
+import org.apache.spark.sql.types.StructType
 
 /** The superstep primitive shared by the iterative operators (Pregelix's
   * "one fixed dataflow per superstep"): a round is ONE job that both
@@ -22,14 +23,25 @@ import org.apache.spark.sql.functions.{broadcast, count, lit}
   *  - [[rounds]] is the fixed-round entry on top of [[fixpoint]]: exactly
   *    `n` rounds, labelled, released and logged the same way, never a
   *    WARN.
+  *  - The driver fold runs the rounds of a small input on the driver, over
+  *    primitive arrays, with no Spark job per round. Its gate is [[folds]]:
+  *    the input's row count, observed by the job that pins the input, is
+  *    at most [[FoldMaxRows]]. [[decode]] then streams the pinned rows to
+  *    the driver, and [[local]] turns the fold's result back into a frame.
+  *    A folded round still runs through [[fixpoint]] or [[rounds]], so it
+  *    is labelled, logged and WARNed like a distributed one. Each fold
+  *    computes what its distributed loop computes, bit for bit; above the
+  *    cap the distributed loop runs, and [[distributed]] forces it for any
+  *    input (the one seam tests reach it through).
   *
   * [[fixpoint]]'s `while` is the one superstep loop in `graft`. Driven by
   * [[fixpoint]]: `unitHierarchy`, `kCore`, `labelPropagation`,
   * `connectedComponents` and `powerIterate` with `tol > 0` (PageRank,
-  * author rank; its driver fold too, whose rounds run no job but log the
-  * same record). Driven by [[rounds]]: `kmeans` (the Lloyd loop of
+  * author rank). Driven by [[rounds]]: `kmeans` (the Lloyd loop of
   * `kmeansCentroids`, `buildIvfIndex` and `trainPqCodebooks`),
-  * `nswSearch`'s hops and `powerIterate` with `tol <= 0`.
+  * `nswSearch`'s hops and `powerIterate` with `tol <= 0`. Folded below
+  * the cap: `labelPropagation` and `kCore` (edge rows), `powerIterate`
+  * (edge and vertex rows) and the Lloyd loop (vector elements).
   *
   * Observed statistics live in task accumulators. Callers test
   * convergence as a statistic being zero versus non-zero (no label
@@ -102,6 +114,56 @@ object Iterate {
   def gatedBroadcast(df: DataFrame, cap: Long = BroadcastCap): DataFrame = {
     val p = pin(df, count(lit(1)).as("rows"))
     if (p.long("rows") <= cap) broadcast(p.df) else p.df
+  }
+
+  /** Row cap of the driver fold. A folded input lives on the driver as
+    * primitive arrays: an edge or vertex row is two to four of them
+    * (~32 B), a vector element one float, so the cap holds the driver's
+    * fold state near 64 MB — the [[graft.ops.Preference.bradleyTerry]]
+    * `maxPairs` discipline. Word graphs, the co-authorship projections,
+    * the md5 test graphs and IVF corpora of up to a few 10⁴ vectors sit
+    * far below it; corpus-scale inputs exceed it and take the
+    * distributed loop.
+    */
+  val FoldMaxRows: Long = 2L * 1000 * 1000
+
+  private val foldCap = new scala.util.DynamicVariable[Long](FoldMaxRows)
+
+  /** The fold cap in force: [[FoldMaxRows]], or 0 inside [[distributed]]. */
+  def foldMaxRows: Long = foldCap.value
+
+  /** Run `body` with the fold gate shut: every iterative operator it calls
+    * (on this thread, or a thread it starts) takes its distributed loop,
+    * whatever the input's size.
+    */
+  def distributed[A](body: => A): A = foldCap.withValue(0L)(body)
+
+  /** The fold gate: `rows` rows, as counted by the job that pinned them,
+    * fold on the driver when they fit `cap`. A cap of 0 never folds; the
+    * fold's arrays are Int-indexed, so the cap clamps at `Int.MaxValue`.
+    */
+  def folds(rows: Long, cap: Long = foldMaxRows): Boolean =
+    cap > 0 && rows <= math.min(cap, Int.MaxValue.toLong)
+
+  /** Hand each of the `rows` rows of `df` to `f` on the driver, in `df`'s
+    * order. Up to 100k rows it is one `collect`, whose boxed rows are a
+    * few MB; above it `toLocalIterator` streams a partition at a time, so
+    * the driver's peak is the caller's arrays plus one partition of rows,
+    * never a cap-sized collect. No rows, no job.
+    */
+  def decode(df: DataFrame, rows: Long)(f: Row => Unit): Unit =
+    if (rows == 0) ()
+    else if (rows <= 100000) df.collect().foreach(f)
+    else df.toLocalIterator().forEachRemaining(r => f(r))
+
+  /** A fold's result as a frame: `rows` in a local relation of `schema`.
+    * It reads no pin, so it holds none; a caller that must release its
+    * result pins it.
+    */
+  def local(spark: SparkSession, schema: StructType,
+            rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** One superstep's outcome: the next state, the statistics it observed

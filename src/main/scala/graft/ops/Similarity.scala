@@ -3,9 +3,10 @@ package graft.ops
 import graft.Pins
 import graft.functions.CorpusFunctions._
 import graft.graph.Iterate
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** Similarity search over embedding columns (array<float>).
   *
@@ -93,9 +94,11 @@ object Similarity {
     * iterations; init = hash-ordered sample, so runs are reproducible).
     * Assignment is a broadcast join corpus × centroids + window argmin;
     * the update step re-averages element-wise via posexplode — every step
-    * is a plain shuffle/agg, nothing driver-side but the loop counter.
+    * is a plain shuffle/agg, nothing driver-side but the loop counter. A
+    * corpus within [[Iterate.folds]]'s cap runs the same rounds in the
+    * driver fold ([[lloydFold]]).
     *
-    * @return (center_id, centroid: array<float>)
+    * @return (center_id, centroid: array<float>), pinned
     */
   def kmeansCentroids(corpus: DataFrame, nCenters: Int, iters: Int = 3,
                       idCol: String = "vec_id",
@@ -104,43 +107,170 @@ object Similarity {
     // assignment re-read the corpus (iters+1 full scans of the caller's
     // subtree); the classic cache-during-iterations trade — released
     // before returning (the centroid table is the build's artifact)
-    val base = corpus.select(col(idCol).as("_id"), col(vecCol).as("_v"))
-      .localCheckpoint(true)
-    val out = kmeansCentroidsPinned(base, nCenters, iters)
-    Pins.release(base)
+    val base = lloydBase(corpus, idCol, vecCol)
+    val (out, _) = lloyd(base, nCenters, iters, withCells = false)
+    base.release()
     out
   }
 
-  /** The Lloyd loop over an ALREADY-PINNED (_id, _v) frame — shared by
+  /** The corpus pinned as `(_id, _v)` for the Lloyd loop, by one job that
+    * also observes the fold gate: the vectors, their elements (the rows
+    * the fold's arrays hold), null vectors or elements, and the dimension
+    * range. Only a corpus of whole float vectors of one dimension folds.
+    */
+  private def lloydBase(corpus: DataFrame, idCol: String,
+                        vecCol: String): Iterate.Pin =
+    Iterate.pin(corpus.select(col(idCol).as("_id"), col(vecCol).as("_v")),
+      count(lit(1)).as("rows"),
+      coalesce(sum(size(col("_v"))), lit(0L)).as("cells"),
+      count_if(col("_v").isNull || exists(col("_v"), _.isNull)).as("holes"),
+      min(size(col("_v"))).as("min_dim"), max(size(col("_v"))).as("max_dim"))
+
+  /** The Lloyd loop over the pinned `(_id, _v)` corpus — shared by
     * [[kmeansCentroids]] and [[buildIvfIndex]] (which reuses one pin for
     * the loop AND the final cell assignment). `iters` rounds of
     * [[graft.graph.Iterate.rounds]] (`"kmeans superstep <i>"`), each
     * pinning the next centroid table and releasing the previous one.
+    *
+    * @return the pinned centroid table, and with `withCells` the pinned
+    *   cell-assigned corpus `(vec_id, _cv, center_id)`
     */
-  private def kmeansCentroidsPinned(base: DataFrame, nCenters: Int,
-                                    iters: Int): DataFrame = {
-    // center ids via array positions over the (≤ nCenters-row) hash-ordered
-    // sample — no global window (a partition-less WindowExec would both
-    // warn and single-task; collect_list on ≤ nCenters rows is trivial)
-    val init = base
+  private def lloyd(base: Iterate.Pin, nCenters: Int, iters: Int,
+                    withCells: Boolean): (DataFrame, Option[DataFrame]) = {
+    val b = base.df
+    val floats = b.schema("_v").dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+    if (floats && Iterate.folds(base.long("rows")) &&
+        Iterate.folds(base.long("cells")) && base.long("holes") == 0 &&
+        base.long("min_dim") == base.long("max_dim"))
+      lloydFold(base, nCenters, iters, withCells)
+    else {
+      val centroids = Iterate.rounds("kmeans",
+          lloydInit(b, nCenters).localCheckpoint(true), iters)(
+          Pins.release(_))(c => lloydRound(b, c).localCheckpoint(true))
+      (centroids,
+        if (withCells) Some(cellsOf(b, centroids).localCheckpoint(true))
+        else None)
+    }
+  }
+
+  /** The init sample: the `nCenters` vectors of smallest `xxhash64(_id)`,
+    * numbered in (hash, vector) order. Center ids come from array
+    * positions over the (≤ nCenters-row) hash-ordered sample — no global
+    * window (a partition-less WindowExec would both warn and single-task;
+    * collect_list on ≤ nCenters rows is trivial).
+    */
+  private def lloydInit(base: DataFrame, nCenters: Int): DataFrame =
+    base
       .select(struct(xxhash64(col("_id")).as("_h"), col("_v").as("_v"))
         .as("_s"))
       .orderBy(col("_s._h")).limit(nCenters)
       .agg(array_sort(collect_list(col("_s"))).as("_a"))
       .select(posexplode(col("_a")).as(Seq("center_id", "_s")))
       .select(col("center_id"), col("_s._v").as("centroid"))
-      .localCheckpoint(true)
-    Iterate.rounds("kmeans", init, iters)(Pins.release(_)) { centroids =>
-      val assigned = assignToCentroids(base, centroids)
-      assigned
-        .select(col("center_id"), posexplode(col("_v")).as(Seq("_pos", "_x")))
-        .groupBy("center_id", "_pos").agg(avg(col("_x")).as("_m"))
-        .groupBy("center_id")
-        .agg(transform(
-          array_sort(collect_list(struct(col("_pos"), col("_m")))),
-          s => s.getField("_m").cast("float")).as("centroid"))
-        .localCheckpoint(true)
+
+  /** One Lloyd round: assign, then average each center's vectors element
+    * by element (in double, cast back to float). A center no vector
+    * chose drops out.
+    */
+  private def lloydRound(base: DataFrame, centroids: DataFrame): DataFrame =
+    assignToCentroids(base, centroids)
+      .select(col("center_id"), posexplode(col("_v")).as(Seq("_pos", "_x")))
+      .groupBy("center_id", "_pos").agg(avg(col("_x")).as("_m"))
+      .groupBy("center_id")
+      .agg(transform(
+        array_sort(collect_list(struct(col("_pos"), col("_m")))),
+        s => s.getField("_m").cast("float")).as("centroid"))
+
+  private def cellsOf(base: DataFrame, centroids: DataFrame): DataFrame =
+    assignToCentroids(base, centroids)
+      .select(col("_id").as("vec_id"), col("_v").as("_cv"), col("center_id"))
+
+  /** The Lloyd loop's DRIVER FOLD: the pinned corpus decodes into float
+    * arrays (its ids' `xxhash64` computed by the decoding job), and the
+    * rounds run [[lloydRound]]'s arithmetic over them. The init sample
+    * takes the smallest (hash, vector) in Spark's struct order; assignment
+    * is the same cosine kernel, the highest cosine by Spark's double order
+    * (NaN above all, -0.0 = 0.0) winning and a tie going to the smallest
+    * center id; a center's coordinates are averaged in double, then cast
+    * to float. Sums of float values in double are exact at embedding
+    * magnitudes, so the order the fold adds them in matches the
+    * distributed aggregate's. The outputs are pinned, with the
+    * distributed plans' schemas: their callers release them.
+    */
+  private def lloydFold(base: Iterate.Pin, nCenters: Int, iters: Int,
+                        withCells: Boolean): (DataFrame, Option[DataFrame]) = {
+    val b = base.df
+    val n = base.long("rows").toInt
+    val dim = base.long("min_dim").toInt
+    val hash = new Array[Long](n)
+    val ids = new Array[Any](n)
+    val vs = new Array[Array[Float]](n)
+    var i = 0
+    Iterate.decode(b.select(xxhash64(col("_id")), col("_id"), col("_v")),
+        n) { r =>
+      hash(i) = r.getLong(0); ids(i) = r.get(1)
+      vs(i) = r.getSeq[Float](2).toArray; i += 1
     }
+    def cmpFloats(x: Float, y: Float): Int =
+      if (x == y) 0 else java.lang.Float.compare(x, y)
+    def cmpVectors(x: Array[Float], y: Array[Float]): Int = {
+      var d = 0
+      var c = 0
+      while (c == 0 && d < math.min(x.length, y.length)) {
+        c = cmpFloats(x(d), y(d)); d += 1
+      }
+      if (c != 0) c else Integer.compare(x.length, y.length)
+    }
+    val init: Array[(Int, Array[Float])] = (0 until n).sortWith { (x, y) =>
+      val c = java.lang.Long.compare(hash(x), hash(y))
+      (if (c != 0) c else cmpVectors(vs(x), vs(y))) < 0
+    }.take(nCenters).zipWithIndex.map { case (v, c) => (c, vs(v)) }.toArray
+    val slots = init.length
+    // nearest center per vector, -1 when there is no center
+    def assign(cs: Array[(Int, Array[Float])]): Array[Int] = vs.map { v =>
+      var best = -1
+      var bestCos = 0d
+      cs.foreach { case (id, c) =>
+        val cos = graft.functions.CorpusKernels.cosine(v, c)
+        val cmp = if (best < 0) 1
+          else if (cos == bestCos) 0 else java.lang.Double.compare(cos, bestCos)
+        if (cmp > 0 || (cmp == 0 && id < best)) { best = id; bestCos = cos }
+      }
+      best
+    }
+    val last = Iterate.rounds("kmeans", init, iters)(_ => ()) { cs =>
+      val a = assign(cs)
+      val sums = new Array[Double](slots * dim)
+      val counts = new Array[Long](slots)
+      var v = 0
+      while (v < n) {
+        val c = a(v)
+        if (c >= 0) {
+          counts(c) += 1
+          var d = 0
+          while (d < dim) { sums(c * dim + d) += vs(v)(d).toDouble; d += 1 }
+        }
+        v += 1
+      }
+      (0 until slots).filter(counts(_) > 0).map(c => (c, Array.tabulate(dim)(
+        d => (sums(c * dim + d) / counts(c).toDouble).toFloat))).toArray
+    }
+    val spark = b.sparkSession
+    val initPlan = lloydInit(b, nCenters)
+    val centroids = Iterate.local(spark,
+        (if (iters > 0) lloydRound(b, initPlan) else initPlan).schema,
+        last.toSeq.map { case (c, v) => Row(c, v) })
+      .localCheckpoint(true)
+    val cells = if (!withCells) None else {
+      val a = assign(last)
+      Some(Iterate.local(spark, cellsOf(b, initPlan).schema,
+          (0 until n).filter(a(_) >= 0).map(v => Row(ids(v), vs(v), a(v))))
+        .localCheckpoint(true))
+    }
+    (centroids, cells)
   }
 
   /** Nearest-centroid assignment: fold the (small) centroid table into
@@ -210,14 +340,10 @@ object Similarity {
     // ONE pin serves the Lloyd loop's iters+1 corpus reads AND the final
     // cell assignment (previously every one of them re-ran the caller's
     // scan subtree); released once the cells materialize
-    val base = corpus.select(col(corpusIdCol).as("_id"), col(vecCol).as("_v"))
-      .localCheckpoint(true)
-    val centroids = kmeansCentroidsPinned(base, nCenters, iters)
-    val cells = assignToCentroids(base, centroids)
-      .select(col("_id").as("vec_id"), col("_v").as("_cv"), col("center_id"))
-      .localCheckpoint(true)
-    Pins.release(base)
-    IvfIndex(centroids, cells)
+    val base = lloydBase(corpus, corpusIdCol, vecCol)
+    val (centroids, cells) = lloyd(base, nCenters, iters, withCells = true)
+    base.release()
+    IvfIndex(centroids, cells.get)
   }
 
   /** Probe a prebuilt IVF index: rank cells per query against the (tiny)

@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * build-once artifact MUST survive — unpersisting those truncates
   * checkpointed lineage and fails every later probe query with
   * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (observed when the hygiene was
-  * first implemented without the reachability guard).
+  * first implemented without the reachability guard). The per-query job
+  * counts `Bench.runCounted` reports are bounded here too.
   */
 class BenchHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -46,5 +47,23 @@ class BenchHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stray.isEmpty, s"dead pins survived the hygiene: $stray")
     // and the caches really do hold pinned state worth protecting
     assert(live.nonEmpty, "expected cached index pins to be registered live")
+  }
+
+  /** Jobs a Bench pass starts per query at sf0.001 for the queries over
+    * the driver-folded operators ([[graph.Iterate.folds]]), measured at
+    * the fold's introduction: the folded rounds start no job.
+    */
+  test("registry queries over folded operators stay within their job " +
+      "bounds") {
+    val bounds = Map("q_label_propagation" -> 4, "q_k_core" -> 5,
+      "q_ann_ivf_build" -> 11, "q_author_rank" -> 14,
+      "q_author_rank_weighted" -> 19, "q_textrank" -> 13, "q_ppr" -> 10)
+    val (_, errors, jobs) = Bench.runCounted(
+      bounds.keys.map(q => q -> SparkEntry.queries(q)).toMap,
+      spark.newSession(), sfDir, passes = 1)
+    assert(errors.isEmpty, errors)
+    bounds.foreach { case (q, bound) =>
+      assert(jobs(q) <= bound, s"$q: ${jobs(q)} jobs")
+    }
   }
 }

@@ -22,7 +22,9 @@ import scala.util.Random
   * pin observes its own convergence statistic, so no separate
   * count/head/isEmpty job follows it. Every superstep loop is
   * [[Iterate]]'s, so each round's jobs carry its label and only an
-  * unconverged fixpoint WARNs.
+  * unconverged fixpoint WARNs. The per-superstep bounds are the
+  * distributed loops', reached through [[Iterate.distributed]]; a small
+  * input folds on the driver, where a superstep starts no job.
   */
 class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
     with TimeLimits {
@@ -85,8 +87,8 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
   test("labelPropagation: at most 4 jobs per superstep") {
     var out: Array[(Long, Long)] = null
     val descs = jobDescriptions {
-      out = GraphOps.labelPropagation(md5Graph, maxIter = 10).collect()
-        .map(r => r.getLong(0) -> r.getLong(1))
+      out = Iterate.distributed(GraphOps.labelPropagation(md5Graph,
+        maxIter = 10)).collect().map(r => r.getLong(0) -> r.getLong(1))
     }
     val rounds = perSuperstep(descs, "labelPropagation")
     assert(rounds.nonEmpty)
@@ -97,7 +99,7 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
   test("kCore: at most 5 jobs per superstep, result unchanged") {
     var core: Set[(Long, Long)] = null
     val descs = jobDescriptions {
-      core = GraphOps.kCore(md5Graph, k = 5).collect()
+      core = Iterate.distributed(GraphOps.kCore(md5Graph, k = 5)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toSet
     }
     val rounds = perSuperstep(descs, "kCore")
@@ -119,7 +121,7 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
         yield (a, b)
       val path = (5L until 35L).map(i => (i, i + 1))
       val e = (clique ++ path).toDF("src", "dst")
-      val core = GraphOps.kCore(e, k = 2).collect()
+      val core = Iterate.distributed(GraphOps.kCore(e, k = 2)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toSet
       assert(core == referenceKCore(e, 2))
       assert(core.map(_._1) == (0L until 6L).toSet)
@@ -262,7 +264,8 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
       "5 jobs") {
     var centers = 0L
     val descs = jobDescriptions {
-      val idx = Similarity.buildIvfIndex(vectors, nCenters = 4, iters = 3)
+      val idx = Iterate.distributed(
+        Similarity.buildIvfIndex(vectors, nCenters = 4, iters = 3))
       centers = idx.centroids.count()
       idx.release()
     }
@@ -335,6 +338,38 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
     }
   }
 
+  test("an unconverged labelPropagation fold WARNs once") {
+    val warns = iterateWarnings {
+      GraphOps.labelPropagation(md5Graph, maxIter = 1).collect()
+    }
+    assert(warns.size == 1, warns)
+    assert(warns.head.startsWith("labelPropagation: no fixpoint after 1 " +
+      "supersteps (last superstep: changed="), warns.head)
+  }
+
+  test("an unconverged kCore fold throws the distributed loop's message") {
+    import spark.implicits._
+    val clique = for (a <- 0L until 6L; b <- 0L until 6L if a < b)
+      yield (a, b)
+    val e = (clique ++ (5L until 35L).map(i => (i, i + 1))).toDF("src", "dst")
+    val fold = intercept[IllegalStateException](
+      GraphOps.kCore(e, k = 2, maxIter = 3).collect())
+    val dist = intercept[IllegalStateException](
+      Iterate.distributed(GraphOps.kCore(e, k = 2, maxIter = 3)).collect())
+    assert(fold.getMessage == dist.getMessage)
+    assert(fold.getMessage.startsWith("kCore: no fixpoint after 3 rounds ("),
+      fold.getMessage)
+  }
+
+  test("the buildIvfIndex and kmeansCentroids folds log no WARN") {
+    val v = vectors
+    val warns = iterateWarnings {
+      Similarity.buildIvfIndex(v, nCenters = 4, iters = 3).release()
+      Pins.release(Similarity.kmeansCentroids(v, nCenters = 4, iters = 2))
+    }
+    assert(warns.isEmpty, warns)
+  }
+
   test("fixed-round loops log no WARN") {
     val v = vectors
     val warns = iterateWarnings {
@@ -347,6 +382,29 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
         ef = 8, hops = 2).collect()
     }
     assert(warns.isEmpty, warns)
+  }
+
+  /** Jobs measured at the fold's introduction (local[4], 4 shuffle
+    * partitions): the input pin and its decode, plus what each operator
+    * pins around them — kCore's pin is a distinct (two jobs), the Lloyd
+    * fold pins its centroids and cells, and pageRank pins its cleaned
+    * edges, the degree-annotated edges (two jobs) and the vertices (two).
+    */
+  test("a folded operator runs no superstep job, and few jobs in all") {
+    val v = vectors
+    val bounds = Seq[(String, Int, () => Unit)](
+      ("labelPropagation", 2, () =>
+        GraphOps.labelPropagation(md5Graph, maxIter = 10).collect()),
+      ("kCore", 3, () => GraphOps.kCore(md5Graph, k = 5).collect()),
+      ("kmeans", 4, () =>
+        Similarity.buildIvfIndex(v, nCenters = 4, iters = 3).release()),
+      ("powerIterate", 7, () =>
+        GraphOps.pageRank(md5Graph, tol = 1e-6, maxIter = 8).collect()))
+    for ((operator, bound, run) <- bounds) {
+      val descs = jobDescriptions(run())
+      assert(perSuperstep(descs, operator).isEmpty, descs)
+      assert(descs.size <= bound, s"$operator: $descs")
+    }
   }
 
   test("Iterate.rounds runs exactly n rounds and releases every state but " +

@@ -252,23 +252,33 @@ class PinOwnershipSpec extends AnyFunSuite with BeforeAndAfterAll
     val path = (0L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
     val vecs = (0 until 200).map(i => (i.toLong,
       Array.fill(8)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
-    def check(name: String)(result: => Seq[DataFrame]): Unit = {
-      val before = persisted
-      val held = result
-      val grown = persisted -- before
-      val stray = grown -- pinsOf(held: _*)
-      assert(stray.isEmpty, s"$name left pins its result does not hold: " +
-        stray)
-    }
-    check("labelPropagation")(Seq(GraphOps.labelPropagation(graph)))
-    check("kCore")(Seq(GraphOps.kCore(tailed, k = 2)))
-    check("ConnectedComponents.run")(Seq(ConnectedComponents.run(
-      path.select(col("src").as("id")).union(path.select(col("dst"))),
-      path, smallGraphThreshold = 0)))
-    check("unitHierarchy")(Seq(GraphOps.unitHierarchy(chain)))
-    check("buildIvfIndex") {
-      val idx = Similarity.buildIvfIndex(vecs, nCenters = 4, iters = 3)
-      Seq(idx.centroids, idx.cells)
+    val authorOf = (0 until 30).map(i => (s"a${i % 11}", s"o${i % 7}"))
+      .toDF("src", "dst")
+    // small inputs fold on the driver; Iterate.distributed runs the loops
+    for (distributed <- Seq(false, true)) {
+      def check(name: String)(result: => Seq[DataFrame]): Unit = {
+        val before = persisted
+        val held = if (distributed) Iterate.distributed(result) else result
+        val grown = persisted -- before
+        val stray = grown -- pinsOf(held: _*)
+        assert(stray.isEmpty, s"$name (distributed: $distributed) left " +
+          s"pins its result does not hold: $stray")
+      }
+      check("labelPropagation")(Seq(GraphOps.labelPropagation(graph)))
+      check("kCore")(Seq(GraphOps.kCore(tailed, k = 2)))
+      check("ConnectedComponents.run")(Seq(ConnectedComponents.run(
+        path.select(col("src").as("id")).union(path.select(col("dst"))),
+        path, smallGraphThreshold = 0)))
+      check("coauthorComponents")(Seq(GraphOps.coauthorComponents(authorOf)))
+      check("unitHierarchy")(Seq(GraphOps.unitHierarchy(chain)))
+      check("authorRank")(Seq(GraphOps.authorRank(authorOf)))
+      check("pageRank")(Seq(GraphOps.pageRank(graph)))
+      check("buildIvfIndex") {
+        val idx = Similarity.buildIvfIndex(vecs, nCenters = 4, iters = 3)
+        Seq(idx.centroids, idx.cells)
+      }
+      check("kmeansCentroids")(Seq(
+        Similarity.kmeansCentroids(vecs, nCenters = 4, iters = 2)))
     }
   }
 
