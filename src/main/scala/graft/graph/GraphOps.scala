@@ -1,5 +1,7 @@
 package graft.graph
 
+import scala.jdk.CollectionConverters._
+
 import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -391,10 +393,10 @@ object GraphOps {
             Array.tabulate(n)(i => r0(i) + damp * acc(i))
           }((next, prev) => maxAbs(i => math.abs(next(i) - prev(i))))
         }
-        Iterate.local(vr.sparkSession, StructType(Seq(
-            vr.schema("uuid").copy(name = "author_uuid"),
-            StructField("pagerank", if (fixed) LongType else DoubleType))),
-          Seq.tabulate(n)(i => Row(uuids(i), rank(i))))
+        vr.sparkSession.createDataFrame(
+            Seq.tabulate(n)(i => Row(uuids(i), rank(i))).asJava,
+            StructType(Seq(vr.schema("uuid").copy(name = "author_uuid"),
+              StructField("pagerank", if (fixed) LongType else DoubleType))))
       } else {
         val init = vr.select(col("vid"), col("_r0").as("pagerank"))
           .localCheckpoint(true)
@@ -643,8 +645,9 @@ object GraphOps {
       }
       if (!r.converged) throw noFixpoint(r.stats)
       val d = degrees(r.state)
-      Iterate.local(edges.sparkSession, schema, (0 until vertex.size)
-        .filter(d(_) > 0).map(v => Row(vertex.values(v), d(v))))
+      edges.sparkSession.createDataFrame((0 until vertex.size)
+        .filter(d(_) > 0).map(v => Row(vertex.values(v), d(v))).asJava,
+        schema)
     } else {
       val r = Iterate.fixpoint("kCore",
           Iterate.Superstep(e0.df, e0.stats, converged = e0.long("kept") == 0),
@@ -760,7 +763,8 @@ object GraphOps {
     * checks the fixed-mode reset vector), both pins decode straight into
     * arrays, and the ranks come back as a local frame keyed by the vertex
     * values, with no join back onto the vertices. `driverFoldMaxRows`
-    * defaults to [[Iterate.foldMaxRows]]; pass 0 to skip the fold.
+    * defaults to [[Iterate.foldMaxRows]]; pass 0 to skip the fold (or
+    * call inside [[Iterate.distributed]], as every other operator).
     *
     * @param weightCol optional edge-weight column (default: every edge
     *                  weighs 1)
@@ -1017,10 +1021,11 @@ object GraphOps {
       Iterate.Superstep(next, Map("changed" -> changed),
         converged = changed == 0)
     }
-    Iterate.local(sym.sparkSession, StructType(Seq(
-        StructField("vertex", labelType), StructField("community", labelType))),
-      Seq.tabulate(n)(i =>
-        Row(vertex.values(i), vertex.values(r.state(i)))))
+    sym.sparkSession.createDataFrame(
+        Seq.tabulate(n)(i =>
+          Row(vertex.values(i), vertex.values(r.state(i)))).asJava,
+        StructType(Seq(StructField("vertex", labelType),
+          StructField("community", labelType))))
   }
 
   /** Most frequent label of a SORTED vote array, ties to the smallest:

@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, count, lit}
-import org.apache.spark.sql.types.StructType
 
 /** The superstep primitive shared by the iterative operators (Pregelix's
   * "one fixed dataflow per superstep"): a round is ONE job that both
@@ -24,11 +23,12 @@ import org.apache.spark.sql.types.StructType
   *    `n` rounds, labelled, released and logged the same way, never a
   *    WARN.
   *  - The driver fold runs the rounds of a small input on the driver, over
-  *    primitive arrays, with no Spark job per round. Its gate is [[folds]]:
+  *    driver arrays, with no Spark job per round. Its gate is [[folds]]:
   *    the input's row count, observed by the job that pins the input, is
   *    at most [[FoldMaxRows]]. [[decode]] then streams the pinned rows to
-  *    the driver, and [[local]] turns the fold's result back into a frame.
-  *    A folded round still runs through [[fixpoint]] or [[rounds]], so it
+  *    the driver, and the fold's result goes back as a local relation,
+  *    or pinned where its caller releases it. A folded round still runs
+  *    through [[fixpoint]] or [[rounds]], so it
   *    is labelled, logged and WARNed like a distributed one. Each fold
   *    computes what its distributed loop computes, bit for bit; above the
   *    cap the distributed loop runs, and [[distributed]] forces it for any
@@ -116,14 +116,28 @@ object Iterate {
     if (p.long("rows") <= cap) broadcast(p.df) else p.df
   }
 
-  /** Row cap of the driver fold. A folded input lives on the driver as
-    * primitive arrays: an edge or vertex row is two to four of them
-    * (~32 B), a vector element one float, so the cap holds the driver's
-    * fold state near 64 MB — the [[graft.ops.Preference.bradleyTerry]]
-    * `maxPairs` discipline. Word graphs, the co-authorship projections,
-    * the md5 test graphs and IVF corpora of up to a few 10⁴ vectors sit
-    * far below it; corpus-scale inputs exceed it and take the
-    * distributed loop.
+  /** Row cap of the driver fold, set from measurements at the cap
+    * (`FoldProbe` in the test tree; 4 local cores, long vertex ids, hashed
+    * random graphs of 8 arcs a vertex). At 2M rows each fold beats its
+    * distributed loop on wall time and peaks at a few hundred MB of live
+    * heap, fold (two runs) against loop:
+    *
+    *  - `labelPropagation`, 2M arcs, 10 rounds: 4.8–5.1 s against
+    *    17.4 s, 274–278 MB against 667 MB;
+    *  - `kCore`, 2M edges: 4.0–4.5 s against 7.0 s, 179–222 MB against
+    *    562 MB;
+    *  - `pageRank`, 2M arcs, 10 rounds: 5.2–6.8 s against 16.0 s,
+    *    356–365 MB against 516 MB.
+    *
+    * The loop's heap includes its tasks, which share the driver's heap in
+    * local mode. The fold's state is about 90–180 B a row (the decoded
+    * rows and boxed vertex values; string or struct vertex values cost
+    * more), which the cap holds under ~400 MB of driver heap. Its result,
+    * a local relation of up to one row a vertex, is shipped again by
+    * every action on it: two actions on 250k rows took 1.1–1.6 s
+    * against 0.2 s on the loop's pinned result, so a caller that acts on a large
+    * result many times pins it. The Lloyd loop's fold also has a work cap
+    * (`Similarity`): its rounds are cosines, not array passes.
     */
   val FoldMaxRows: Long = 2L * 1000 * 1000
 
@@ -155,16 +169,6 @@ object Iterate {
     if (rows == 0) ()
     else if (rows <= 100000) df.collect().foreach(f)
     else df.toLocalIterator().forEachRemaining(r => f(r))
-
-  /** A fold's result as a frame: `rows` in a local relation of `schema`.
-    * It reads no pin, so it holds none; a caller that must release its
-    * result pins it.
-    */
-  def local(spark: SparkSession, schema: StructType,
-            rows: Seq[Row]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
-  }
 
   /** One superstep's outcome: the next state, the statistics it observed
     * (logged), and whether it reached the fixpoint.

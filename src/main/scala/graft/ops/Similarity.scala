@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import graft.Pins
 import graft.functions.CorpusFunctions._
 import graft.graph.Iterate
@@ -95,8 +97,9 @@ object Similarity {
     * Assignment is a broadcast join corpus × centroids + window argmin;
     * the update step re-averages element-wise via posexplode — every step
     * is a plain shuffle/agg, nothing driver-side but the loop counter. A
-    * corpus within [[Iterate.folds]]'s cap runs the same rounds in the
-    * driver fold ([[lloydFold]]).
+    * corpus within [[Iterate.folds]]'s cap, and within the fold's work
+    * cap of elements × centers, runs the same rounds in the driver fold
+    * ([[lloydFold]]).
     *
     * @return (center_id, centroid: array<float>), pinned
     */
@@ -126,6 +129,20 @@ object Similarity {
       count_if(col("_v").isNull || exists(col("_v"), _.isNull)).as("holes"),
       min(size(col("_v"))).as("min_dim"), max(size(col("_v"))).as("max_dim"))
 
+  /** Work cap of the Lloyd loop's driver fold, in vector elements times
+    * centers: an assignment pass computes `rows × nCenters` cosines of
+    * `dim` elements on one driver thread, at about 2.5 ns an element and
+    * center (`FoldProbe` in the test tree, 125k × 16 vectors: 28.0 s for
+    * 3 rounds with 1250 centers, 5.1 s with 128). At the cap a pass costs
+    * ~0.35 s, about what a distributed round costs in fixed overhead
+    * (~0.3 s over 5 jobs), so no cluster width makes the loop much faster
+    * than the fold. Above it the loop runs: on 4 local cores it is the
+    * slower one (40.2 s against the fold's 28.0 s with 1250 centers; the
+    * fold computes about as fast as 6 executor cores), but its work
+    * spreads over however many cores the cluster has.
+    */
+  private val LloydFoldMaxWork: Long = 1L << 27
+
   /** The Lloyd loop over the pinned `(_id, _v)` corpus — shared by
     * [[kmeansCentroids]] and [[buildIvfIndex]] (which reuses one pin for
     * the loop AND the final cell assignment). `iters` rounds of
@@ -144,7 +161,8 @@ object Similarity {
     }
     if (floats && Iterate.folds(base.long("rows")) &&
         Iterate.folds(base.long("cells")) && base.long("holes") == 0 &&
-        base.long("min_dim") == base.long("max_dim"))
+        base.long("min_dim") == base.long("max_dim") &&
+        base.long("cells") * nCenters <= LloydFoldMaxWork)
       lloydFold(base, nCenters, iters, withCells)
     else {
       val centroids = Iterate.rounds("kmeans",
@@ -260,14 +278,15 @@ object Similarity {
     }
     val spark = b.sparkSession
     val initPlan = lloydInit(b, nCenters)
-    val centroids = Iterate.local(spark,
-        (if (iters > 0) lloydRound(b, initPlan) else initPlan).schema,
-        last.toSeq.map { case (c, v) => Row(c, v) })
+    val centroids = spark.createDataFrame(
+        last.toSeq.map { case (c, v) => Row(c, v) }.asJava,
+        (if (iters > 0) lloydRound(b, initPlan) else initPlan).schema)
       .localCheckpoint(true)
     val cells = if (!withCells) None else {
       val a = assign(last)
-      Some(Iterate.local(spark, cellsOf(b, initPlan).schema,
-          (0 until n).filter(a(_) >= 0).map(v => Row(ids(v), vs(v), a(v))))
+      Some(spark.createDataFrame(
+          (0 until n).filter(a(_) >= 0).map(v => Row(ids(v), vs(v), a(v)))
+            .asJava, cellsOf(b, initPlan).schema)
         .localCheckpoint(true))
     }
     (centroids, cells)

@@ -62,8 +62,8 @@ class BenchHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
       bounds.keys.map(q => q -> SparkEntry.queries(q)).toMap,
       spark.newSession(), sfDir, passes = 1)
     assert(errors.isEmpty, errors)
-    bounds.foreach { case (q, bound) =>
-      assert(jobs(q) <= bound, s"$q: ${jobs(q)} jobs")
-    }
+    val over = bounds.collect { case (q, bound) if jobs(q) > bound =>
+      s"$q: ${jobs(q)} jobs > $bound" }
+    assert(over.isEmpty, over)
   }
 }

@@ -74,6 +74,10 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
       .groupBy(identity).map { case (i, js) => i -> js.size }
   }
 
+  /** `body` on the distributed loops, or as it runs (a small input folds). */
+  private def onPath[A](distributed: Boolean)(body: => A): A =
+    if (distributed) Iterate.distributed(body) else body
+
   /** The q_label_propagation / q_k_core graph: 500 doc ids hashed onto
     * 97 vertices.
     */
@@ -275,6 +279,23 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(centers == 4)
   }
 
+  test("the Lloyd fold's work cap: elements × centers above 2^27 take the " +
+      "distributed loop") {
+    // 2048 vectors of 512 floats: 2^20 elements, so 128 centers sit at
+    // the cap and 129 above it
+    val wide = spark.range(2048).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(511)), d =>
+        (pmod(xxhash64(col("id"), d), lit(2001L)) - 1000).cast("float"))
+        .as("embedding")).localCheckpoint(true)
+    for ((centers, folds) <- Seq(128 -> true, 129 -> false)) {
+      val descs = jobDescriptions(Similarity.buildIvfIndex(wide,
+        nCenters = centers, iters = 1).release())
+      assert(perSuperstep(descs, "kmeans").isEmpty == folds,
+        s"$centers centers: $descs")
+    }
+    Pins.release(wide)
+  }
+
   test("nswSearch: each hop is an nswSearch superstep of at most 9 jobs") {
     val v = vectors
     val idx = Similarity.buildNswGraph(v, m = 4, nCenters = 4)
@@ -293,8 +314,8 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
       "superstep of at most 10 jobs") {
     var ranked = 0L
     val descs = jobDescriptions {
-      ranked = GraphOps.pageRank(md5Graph, tol = 1e-6, maxIter = 8,
-        driverFoldMaxRows = 0).count()
+      ranked = Iterate.distributed(
+        GraphOps.pageRank(md5Graph, tol = 1e-6, maxIter = 8)).count()
     }
     val rounds = perSuperstep(descs, "powerIterate")
     assert(rounds.nonEmpty)
@@ -327,12 +348,12 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
 
   test("an unconverged pageRank WARNs once on the fold and on the " +
       "distributed loop") {
-    for (fold <- Seq(2000000L, 0L)) {
+    for (distributed <- Seq(false, true)) {
       val warns = iterateWarnings {
-        GraphOps.pageRank(pathEdges, tol = 1e-9, maxIter = 2,
-          driverFoldMaxRows = fold).collect()
+        onPath(distributed)(GraphOps.pageRank(pathEdges, tol = 1e-9,
+          maxIter = 2)).collect()
       }
-      assert(warns.size == 1, s"driverFoldMaxRows = $fold: $warns")
+      assert(warns.size == 1, s"distributed: $distributed: $warns")
       assert(warns.head.startsWith("powerIterate: no fixpoint after 2 " +
         "supersteps"), warns.head)
     }
@@ -373,9 +394,9 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
   test("fixed-round loops log no WARN") {
     val v = vectors
     val warns = iterateWarnings {
-      for (fold <- Seq(2000000L, 0L))
-        GraphOps.pageRank(pathEdges, tol = 0.0, maxIter = 2,
-          driverFoldMaxRows = fold).collect()
+      for (distributed <- Seq(false, true))
+        onPath(distributed)(GraphOps.pageRank(pathEdges, tol = 0.0,
+          maxIter = 2)).collect()
       Similarity.buildIvfIndex(v, nCenters = 4, iters = 2).release()
       val idx = Similarity.buildNswGraph(v, m = 4, nCenters = 4)
       Similarity.nswSearch(queriesOf(v), idx, v, k = 3,
@@ -400,11 +421,13 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
         Similarity.buildIvfIndex(v, nCenters = 4, iters = 3).release()),
       ("powerIterate", 7, () =>
         GraphOps.pageRank(md5Graph, tol = 1e-6, maxIter = 8).collect()))
-    for ((operator, bound, run) <- bounds) {
+    val over = bounds.flatMap { case (operator, bound, run) =>
       val descs = jobDescriptions(run())
       assert(perSuperstep(descs, operator).isEmpty, descs)
-      assert(descs.size <= bound, s"$operator: $descs")
+      if (descs.size > bound) Some(s"$operator: ${descs.size} jobs > $bound")
+      else None
     }
+    assert(over.isEmpty, over)
   }
 
   test("Iterate.rounds runs exactly n rounds and releases every state but " +
@@ -454,18 +477,18 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
 
   test("fixed-point rank guards keep their messages on both paths") {
     import spark.implicits._
-    for (fold <- Seq(2000000L, 0L)) {
+    for (distributed <- Seq(false, true)) {
       val frac = intercept[IllegalArgumentException] {
-        GraphOps.pageRank(Seq(("a", "b", 1.5), ("b", "c", 2.0))
-            .toDF("src", "dst", "w"), weightCol = Some("w"), maxIter = 2,
-          scale = Some(1000000L), driverFoldMaxRows = fold).collect()
+        onPath(distributed)(GraphOps.pageRank(Seq(("a", "b", 1.5),
+            ("b", "c", 2.0)).toDF("src", "dst", "w"), weightCol = Some("w"),
+          maxIter = 2, scale = Some(1000000L))).collect()
       }
       assert(frac.getMessage.contains("fixed-point rank mode requires " +
         "integer-valued weights"))
       val neg = intercept[IllegalArgumentException] {
-        GraphOps.pageRank(Seq(("a", "b", -1.0), ("b", "c", 2.0))
-            .toDF("src", "dst", "w"), weightCol = Some("w"), maxIter = 2,
-          scale = Some(1000000L), driverFoldMaxRows = fold).collect()
+        onPath(distributed)(GraphOps.pageRank(Seq(("a", "b", -1.0),
+            ("b", "c", 2.0)).toDF("src", "dst", "w"), weightCol = Some("w"),
+          maxIter = 2, scale = Some(1000000L))).collect()
       }
       assert(neg.getMessage.contains("fixed-point rank mode requires " +
         "non-negative weights (min w = -1.0)"))
