@@ -54,40 +54,50 @@ object ConnectedComponents {
     moved.union(self).filter(col("u") =!= col("v")).distinct()
   }
 
-  /** Small-graph backend: one executor task runs min-root union-find over
-    * the whole edge set (path-compressed; roots stay the component min
-    * because union always hangs the larger root under the smaller). NOT a
-    * driver collect — the data never leaves the cluster, and the caller
-    * gates entry by edge count so the single task's memory is bounded.
-    * Rationale: the alternating-star loop pays ~5 shuffle stages per round
-    * regardless of size; a near-dup pair graph that shrank to thousands of
-    * edges (the common case — pairs over a high threshold are rare
-    * relative to the corpus) resolves in milliseconds one-pass.
+  /** Min-root union-find over long vertex pairs, path-compressed: roots
+    * stay the component min because union always hangs the larger root
+    * under the smaller. Returns every vertex a pair names, mapped to its
+    * component's min id. The one union-find kernel: the small-graph
+    * backend ([[unionFindLabels]]) runs it in one executor task,
+    * `GraphOps.coauthorComponents`' driver fold on the driver.
+    */
+  private[graph] def componentMins(pairs: Iterator[(Long, Long)])
+      : scala.collection.mutable.LongMap[Long] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x // path compression
+      while (parent.getOrElse(c, c) != r) {
+        val n = parent.getOrElse(c, c); parent.update(c, r); c = n
+      }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      if (!parent.contains(a)) parent.update(a, a)
+      if (!parent.contains(b)) parent.update(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent.update(math.max(ra, rb), math.min(ra, rb))
+    }
+    parent.keysIterator.toArray.foreach(k => parent.update(k, find(k)))
+    parent
+  }
+
+  /** Small-graph backend: one executor task runs [[componentMins]] over
+    * the whole edge set. NOT a driver collect — the data never leaves the
+    * cluster, and the caller gates entry by edge count so the single
+    * task's memory is bounded. Rationale: the alternating-star loop pays
+    * ~5 shuffle stages per round regardless of size; a near-dup pair
+    * graph that shrank to thousands of edges (the common case — pairs
+    * over a high threshold are rare relative to the corpus) resolves in
+    * milliseconds one-pass.
     */
   private def unionFindLabels(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
     e.select(col("u"), col("v")).as[(Long, Long)]
       .coalesce(1)
-      .mapPartitions { it =>
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x // path compression
-          while (parent.getOrElse(c, c) != r) {
-            val n = parent.getOrElse(c, c); parent.update(c, r); c = n
-          }
-          r
-        }
-        it.foreach { case (a, b) =>
-          if (!parent.contains(a)) parent.update(a, a)
-          if (!parent.contains(b)) parent.update(b, b)
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) parent.update(math.max(ra, rb), math.min(ra, rb))
-        }
-        parent.keysIterator.toArray.iterator.map(k => (k, find(k)))
-      }
+      .mapPartitions(it => componentMins(it).iterator)
       .toDF("u", "v")
   }
 
@@ -102,14 +112,16 @@ object ConnectedComponents {
     * @param vertices one long column `id` (isolated vertices allowed)
     * @param edges    (src, dst) long pairs, undirected, self-loops ignored
     * @param smallGraphThreshold max distinct edge count routed to the
-    *   single-task backend (~24 B/entry resident: 2M ≈ 50 MB — well under
-    *   any executor sizing; raise/lower to taste, 0 forces the loop)
+    *   single-task backend, by default the driver fold's cap
+    *   ([[Iterate.FoldMaxRows]]: one row cap for both union-find callers;
+    *   ~24 B/entry resident: 2M ≈ 50 MB — well under any executor sizing;
+    *   raise/lower to taste, 0 forces the loop)
     * @return (id, component_id) — component_id is the min id in the
     *   component; singletons label themselves
     */
   def run(vertices: DataFrame, edges: DataFrame,
           maxRounds: Int = 50,
-          smallGraphThreshold: Long = 2000000L): DataFrame = {
+          smallGraphThreshold: Long = Iterate.FoldMaxRows): DataFrame = {
     val verts = vertices.select(col("id").cast("long").as("id"))
     // the edge count (backend choice) is observed by the pinning job
     val e0 = Iterate.pin(edges

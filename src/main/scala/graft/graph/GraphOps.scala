@@ -1,12 +1,14 @@
 package graft.graph
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import graft.Pins
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType,
-  DoubleType, LongType, StructField, StructType}
+  DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Graph-shaped analytics over the property-graph tables, as pure
   * Catalyst dataflows — nothing here leaves Catalyst.
@@ -97,6 +99,82 @@ object GraphOps {
       .distinct()
   }
 
+  /** A membership (src = member, dst = group) decoded on the driver. Per
+    * row: its group, a dense index (-1 for a null group), and its member
+    * vertex, a dense index over the member `vid`s in first-seen order.
+    * Per vertex: its `vid` (`vids.values`) and its member value.
+    */
+  private final class Membership(val group: Array[Int],
+                                 val vertex: Array[Int],
+                                 val vids: VertexIndex,
+                                 val values: ArrayBuffer[Any]) {
+    def vidOf(v: Int): Long = vids.values(v).asInstanceOf[Long]
+  }
+
+  /** Decode the `rows` rows of a pinned (o, m, vid) membership. */
+  private def decodeMembership(df: DataFrame, rows: Long): Membership = {
+    val n = rows.toInt
+    val groups = new VertexIndex
+    val mem = new Membership(new Array[Int](n), new Array[Int](n),
+      new VertexIndex, ArrayBuffer.empty[Any])
+    var i = 0
+    Iterate.decode(df, rows) { r =>
+      mem.group(i) = if (r.isNullAt(0)) -1 else groups(r.get(0))
+      val v = mem.vids(r.getLong(2))
+      if (v == mem.values.size) mem.values += r.get(1)
+      mem.vertex(i) = v; i += 1
+    }
+    mem
+  }
+
+  /** Run a co-membership operator over `authorOf` (src = member uuid, dst
+    * = group) on its membership projection: the group (its `vid` hash
+    * when `hashGroups`), the member and the member's `vid`, as (o, m,
+    * vid). Outside [[Iterate.distributed]], when the members are strings
+    * (the groups too, unless `hashGroups`), the projection is pinned once,
+    * with its rows counted by the pin's own job. Within [[Iterate.folds]]'s
+    * cap it decodes once and `fold` builds the result on the driver, a
+    * local frame, or declines (None) when the graph it would build passes
+    * the cap. Otherwise `distributed` builds the result from the pin, so
+    * the membership is scanned once on either path, and the pin is
+    * released once that result is materialized. Inside
+    * [[Iterate.distributed]], or for other column types, `distributed`
+    * reads the projection unpinned.
+    */
+  private def foldMembership(authorOf: DataFrame, hashGroups: Boolean)
+                            (fold: Membership => Option[DataFrame])
+                            (distributed: DataFrame => DataFrame): DataFrame = {
+    val membership = authorOf.select(
+      (if (hashGroups) vid(col("dst")) else col("dst")).as("o"),
+      col("src").as("m"), vid(col("src")).as("vid"))
+    def strings(c: String) = authorOf.schema(c).dataType == StringType
+    if (Iterate.foldMaxRows == 0 || !strings("src") ||
+        !(hashGroups || strings("dst"))) distributed(membership)
+    else {
+      val p = Iterate.pin(membership, count(lit(1)).as("rows"))
+      try {
+        val rows = p.long("rows")
+        (if (Iterate.folds(rows)) fold(decodeMembership(p.df, rows))
+         else None).getOrElse(distributed(p.df))
+      } finally p.release()
+    }
+  }
+
+  /** Ranks of `values` (strings, or null) in Spark's string order: UTF-8
+    * bytes compared unsigned, the order `min` and `<` follow on a string
+    * column. `String.compareTo` compares UTF-16 units and disagrees with
+    * it above U+FFFF. A null ranks last, at `Int.MaxValue`.
+    */
+  private def stringRanks(values: collection.IndexedSeq[Any]): Array[Int] = {
+    val utf8 = values.map(v =>
+      if (v == null) null else UTF8String.fromString(v.asInstanceOf[String]))
+    val rank = Array.fill(values.size)(Int.MaxValue)
+    values.indices.filter(utf8(_) != null)
+      .sortWith((a, b) => utf8(a).binaryCompare(utf8(b)) < 0)
+      .zipWithIndex.foreach { case (v, r) => rank(v) = r }
+    rank
+  }
+
   /** Connected components of the co-authorship graph: two authors are
     * linked when they share an output. Star-edge construction (see
     * [[starEdges]]) keeps the edge list linear in |author_of| — no k² hub
@@ -106,22 +184,37 @@ object GraphOps {
     * MEMBER UUID per component, which is deterministic, hash-free, and
     * reproducible by a plain min-label fixpoint (oracle-checkable).
     *
+    * Groups and members are keyed by their `vid` hashes, so a null output
+    * is a group like any other (`xxhash64(null)` is 42: the authors of
+    * null outputs are linked to each other), and a null author is a
+    * vertex whose component is labelled by its least non-null member
+    * (null when it has none). A membership within [[Iterate.folds]]'s cap
+    * takes the driver fold ([[foldMembership]]): one pin of the hashed
+    * membership, then [[ConnectedComponents.componentMins]]' union-find
+    * over the member `vid`s on the driver; the result is a local frame.
+    *
     * @param authorOf edge table (src = author uuid, dst = output uuid)
     * @return (author_uuid, component_id) — component_id is the min author
     *   uuid in the component
     */
-  def coauthorComponents(authorOf: DataFrame): DataFrame = {
-    // hash BOTH keys to longs ONCE up front: every downstream shuffle —
-    // including the big membership groupBy — moves 8-byte keys, not
-    // strings (group identity by hash rests on the same 64-bit
-    // no-collision assumption as vid itself). Star edges come out of a
-    // SINGLE aggregation: collect_set dedupes members per group with
-    // map-side partial aggregation, the set-min is the hub — no
+  def coauthorComponents(authorOf: DataFrame): DataFrame =
+    foldMembership(authorOf, hashGroups = true)(mem =>
+      Some(foldComponents(mem, authorOf.sparkSession)))(componentsLoop)
+
+  /** [[coauthorComponents]]' distributed build over the (o, m, vid)
+    * membership: star edges by one aggregation,
+    * [[ConnectedComponents.run]], then the label window.
+    */
+  private def componentsLoop(membership: DataFrame): DataFrame = {
+    // both keys are hashed to longs ONCE, in the membership projection:
+    // every downstream shuffle — including the big membership groupBy —
+    // moves 8-byte keys, not strings (group identity by hash rests on the
+    // same 64-bit no-collision assumption as vid itself). Star edges come
+    // out of a SINGLE aggregation: collect_set dedupes members per group
+    // with map-side partial aggregation, the set-min is the hub — no
     // membership-dedup shuffle, no hub join. Caveat: one group's member
     // set is one row, so beyond ~10^6 members per group prefer a
     // groupBy-min + join.
-    val membership = authorOf
-      .select(vid(col("dst")).as("o"), vid(col("src")).as("vid"))
     val star = membership.groupBy("o")
       .agg(collect_set(col("vid")).as("_vs"))
       .select(array_min(col("_vs")).as("src"), explode(col("_vs")).as("dst"))
@@ -129,7 +222,7 @@ object GraphOps {
     // the vertex map is reused on both sides of the label normalization;
     // pin it once, release it and the components' pin after the (small)
     // result is materialized
-    val verts = authorOf.select(col("src").as("m")).distinct()
+    val verts = membership.select(col("m")).distinct()
       .select(vid(col("m")).as("vid"), col("m"))
       .localCheckpoint(true)
     val cc = graft.graph.ConnectedComponents.run(
@@ -150,6 +243,181 @@ object GraphOps {
     out
   }
 
+  /** [[coauthorComponents]]' DRIVER FOLD: each member joins the first
+    * member of its group in [[ConnectedComponents.componentMins]] (the
+    * small-graph backend's union-find, keyed by the member `vid`s), and
+    * each component is labelled by its least non-null member in Spark's
+    * string order, as the distributed window's `min` labels it.
+    */
+  private def foldComponents(mem: Membership,
+                             spark: SparkSession): DataFrame = {
+    val first = new java.util.HashMap[Int, java.lang.Long]()
+    val root = ConnectedComponents.componentMins(
+      mem.vertex.indices.iterator.map { i =>
+        val v = mem.vidOf(mem.vertex(i))
+        val f = first.putIfAbsent(mem.group(i), v)
+        (v, if (f == null) v else f.longValue)
+      })
+    val rank = stringRanks(mem.values)
+    val least = scala.collection.mutable.LongMap.empty[Int] // per root
+    for (v <- mem.values.indices if mem.values(v) != null) {
+      val r = root(mem.vidOf(v))
+      if (least.get(r).forall(l => rank(v) < rank(l))) least(r) = v
+    }
+    spark.createDataFrame(mem.values.indices.map { v =>
+        Row(mem.values(v),
+          least.get(root(mem.vidOf(v))).map(mem.values).orNull)
+      }.asJava,
+      StructType(Seq(StructField("author_uuid", StringType),
+        StructField("component_id", StringType))))
+  }
+
+  /** A rank graph on the driver, decoded from [[powerIterate]]'s pins or
+    * built from a membership: the vertex values (`uuid` field) with their
+    * reset cells `r0`, and per directed edge (the first `edges` slots) its
+    * endpoints as vertex indexes, its weight and its source's weighted
+    * out-degree. The cells are Long arrays in fixed mode, Double arrays
+    * otherwise.
+    */
+  private final case class RankGraph(uuid: StructField, uuids: Array[Any],
+                                     r0: Array[_], esi: Array[Int],
+                                     edi: Array[Int], w: Array[_],
+                                     wdeg: Array[_], edges: Int)
+
+  private def requireScale(scale: Option[Long]): Unit =
+    scale.foreach(s => require(s >= 20 && s % 20 == 0,
+      "scale must be a positive multiple of 20 (0.15·S must be integral)"))
+
+  /** Fixed-mode guard 1 over the weights (as doubles) and the sources'
+    * weighted out-degrees; returns the max weight. Weights must be
+    * integral (checked in double space, so also < 2^53 where that check
+    * is itself exact) and non-negative. The division hazard is NOT a zero
+    * weight per se (a zero edge alongside positive siblings contributes 0
+    * and cannot zero the source's out-degree) — it is an ALL-zero
+    * out-degree source, so that is what's guarded: min per-source
+    * weighted out-degree must be strictly positive (min over the edge
+    * rows = min over sources, every source owning ≥ 1 edge row; exact in
+    * long given integrality, which is validated first).
+    */
+  private def weightGuard(minW: Double, maxW: Double, fracW: Double,
+                          minWdeg: Double): Long = {
+    require(minW >= 0d, "fixed-point rank mode requires " +
+      s"non-negative weights (min w = $minW)")
+    require(maxW < 9007199254740992d, // 2^53
+      s"fixed-point rank mode requires weights < 2^53 (max w = $maxW)")
+    require(fracW == 0d, "fixed-point rank mode requires " +
+      "integer-valued weights (a fractional weight would be " +
+      "silently truncated by the long cast) — scale the weights " +
+      "onto the integer lattice first")
+    require(minWdeg > 0d, "fixed-point rank mode requires " +
+      "every source's weighted out-degree > 0 (min out-degree = " +
+      s"$minWdeg — an all-zero-out-degree source would divide by zero)")
+    maxW.toLong
+  }
+
+  /** Fixed-mode guard 2 over the reset vector: Long headroom. Total damped
+    * mass is bounded by sum(r0)/0.15 (per-source contributions never
+    * exceed the source's rank, and integer DIV only shrinks them), so the
+    * two per-round products — rank·w per edge and 85·Σcontribs per vertex
+    * — stay inside Long iff the bound does; checked in BigInt so the
+    * check itself cannot wrap. The DuckDB oracles compute in HUGEINT, so
+    * past this bound op and oracle would silently diverge — hence the
+    * loud failure here. Like the weights, a caller-supplied reset vector
+    * must already be the scaled LONG lattice — fractional values are
+    * caught loudly instead of letting cast("long") truncate them.
+    */
+  private def resetGuard(r0Min: Double, r0Frac: Double, r0Abs: Double,
+                         r0Sum: BigInt, maxW: Long): Unit = {
+    require(r0Min >= 0d, "fixed-point reset vector must be non-negative")
+    require(r0Frac == 0d, "fixed-point rank mode requires " +
+      "an integer-valued reset vector (a fractional reset would be " +
+      "silently truncated by the long cast) — pre-scale it onto " +
+      "the integer lattice")
+    require(r0Abs < 9007199254740992d, // 2^53
+      "fixed-point reset values must stay below 2^53")
+    val bound = r0Sum * 100 / 15 + 1
+    require(bound * maxW <= BigInt(Long.MaxValue) &&
+        bound * 85 <= BigInt(Long.MaxValue),
+      s"fixed-point overflow precondition failed: damped-mass bound " +
+        s"$bound times max weight $maxW (or times 85) exceeds Long — " +
+        "lower the scale or the weights")
+  }
+
+  /** The one convergence rule of [[powerIterate]]'s fold and distributed
+    * loop: tol > 0 stops at the first round whose max |Δrank| <= tol
+    * (Iterate WARNs when maxIter runs out first); tol <= 0 runs exactly
+    * maxIter rounds and measures no delta — when the round budget binds
+    * (bounded-round snapshots) the convergence test is pure per-round
+    * overhead (on the distributed loop, a separate delta query every
+    * round).
+    */
+  private def iterateRanks[S](tol: Double, maxIter: Int, init: S)
+                             (release: S => Unit)(step: S => S)
+                             (maxDelta: (S, S) => Double): S =
+    if (tol <= 0)
+      Iterate.rounds("powerIterate", init, maxIter)(release)(step)
+    else Iterate.fixpoint("powerIterate",
+        Iterate.Superstep(init, Map.empty, converged = false),
+        maxIter)(release) { prev =>
+      val next = step(prev)
+      val d = maxDelta(next, prev)
+      Iterate.Superstep(next, Map("max_delta" -> d), converged = d <= tol)
+    }.state
+
+  /** [[powerIterate]]'s DRIVER FOLD: its rounds over a [[RankGraph]],
+    * whether decoded from its pins or built from a membership. The
+    * recurrence is IDENTICAL to the distributed loop's: in fixed mode the
+    * integer ops are order-free, so the fold is bit-equal to the
+    * distributed loop (and to the unrolled SQL oracles); in double mode
+    * summation order differs only within the non-order-pinned float
+    * semantics the distributed loop already has. The graph is PARALLEL
+    * PRIMITIVE ARRAYS (the bradleyTerry ei/ej/en layout); only the round
+    * kernels are typed per mode: their arithmetic genuinely differs.
+    * Returns (author_uuid, pagerank), a local frame.
+    */
+  private def foldRanks(g: RankGraph, tol: Double, maxIter: Int,
+                        spark: SparkSession): DataFrame = {
+    val n = g.uuids.length
+    val (esi, edi, m) = (g.esi, g.edi, g.edges)
+    def maxAbs(d: Int => Double): Double = {
+      var dlt = 0d
+      var i = 0
+      while (i < n) {
+        val d0 = d(i)
+        if (d0 > dlt) dlt = d0
+        i += 1
+      }
+      dlt
+    }
+    val rank: Array[_] = (g.r0, g.w, g.wdeg) match {
+      case (r0: Array[Long], ew: Array[Long], ewd: Array[Long]) =>
+        iterateRanks(tol, maxIter, r0)(_ => ()) { rank =>
+          val acc = new Array[Long](n)
+          var e = 0
+          while (e < m) {
+            acc(edi(e)) += rank(esi(e)) * ew(e) / ewd(e); e += 1
+          }
+          Array.tabulate(n)(i => r0(i) + 85L * acc(i) / 100L)
+        }((next, prev) => maxAbs(i => math.abs(next(i) - prev(i)).toDouble))
+      case (r0: Array[Double], ew: Array[Double], ewd: Array[Double]) =>
+        iterateRanks(tol, maxIter, r0)(_ => ()) { rank =>
+          val acc = new Array[Double](n)
+          var e = 0
+          while (e < m) {
+            acc(edi(e)) += rank(esi(e)) * ew(e) / ewd(e); e += 1
+          }
+          Array.tabulate(n)(i => r0(i) + 0.85 * acc(i))
+        }((next, prev) => maxAbs(i => math.abs(next(i) - prev(i))))
+    }
+    spark.createDataFrame(
+      Seq.tabulate(n)(i => Row(g.uuids(i), rank(i))).asJava,
+      StructType(Seq(g.uuid.copy(name = "author_uuid"),
+        StructField("pagerank", rank match {
+          case _: Array[Long] => LongType
+          case _ => DoubleType
+        }))))
+  }
+
   /** Weighted-PageRank power iteration as a pure dataflow: per round, one
     * join of the (vid-hashed, weighted-degree-annotated) edge list to
     * current ranks, one contribution aggregation, one left join back onto
@@ -160,8 +428,8 @@ object GraphOps {
     * ≥ 1 and dangling mass cannot occur. Unweighted PageRank is the w=1
     * special case (weighted out-degree = plain out-degree). The edge list
     * and the vertex set are pinned here, each by one job that also counts
-    * its rows; when both counts pass [[Iterate.folds]] the rounds run in
-    * the driver fold instead, and the result is a local frame.
+    * its rows; when both counts pass [[Iterate.folds]] the pins decode
+    * into a [[RankGraph]] and the rounds run in [[foldRanks]] instead.
     *
     * @param verts  (uuid, vid), unpinned: pinned here once
     * @param wedges (src, dst, w) with vid-hashed endpoints, symmetrized
@@ -170,9 +438,7 @@ object GraphOps {
   private def powerIterate(verts: DataFrame, wedges: DataFrame,
                            tol: Double, maxIter: Int,
                            resetCol: Option[String] = None,
-                           scale: Option[Long] = None,
-                           driverFoldMaxRows: Long = Iterate.foldMaxRows
-                          ): DataFrame = {
+                           scale: Option[Long] = None): DataFrame = {
     // scale = Some(S) switches the cell arithmetic to FIXED-POINT LONGS
     // (rank in units of 1/S): per-edge contribution (rank·w) DIV wdeg,
     // damp as (85·Σ) DIV 100 — exact integer ops that are associative
@@ -184,17 +450,15 @@ object GraphOps {
     // the edge pin's own job, guard 2 by the vertex pin's), failing
     // loudly instead of silently truncating on the long cast or wrapping
     // on overflow.
-    scale.foreach(s => require(s >= 20 && s % 20 == 0,
-      "scale must be a positive multiple of 20 (0.15·S must be integral)"))
+    requireScale(scale)
     val fixed = scale.isDefined
     // The per-source weighted out-degree rides a src-partitioned WINDOW
     // over the edge frame, not a groupBy + self-join: the caller's edge
-    // subtree (which can be an expensive construction — the k² pair join
-    // of authorRankWeighted) then executes exactly ONCE into the pin,
-    // where the join shape ran it once per join side plus once per guard
-    // pass. One exchange on src (the sort-merge join needed the same
-    // sort anyway). The edge count (the fold gate) and, in fixed mode,
-    // the guard-1 statistics are observed by the job that writes the pin.
+    // subtree then executes exactly ONCE into the pin, where the join
+    // shape ran it once per join side plus once per guard pass. One
+    // exchange on src (the sort-merge join needed the same sort anyway).
+    // The edge count (the fold gate) and, in fixed mode, the guard-1
+    // statistics are observed by the job that writes the pin.
     val wsrc = org.apache.spark.sql.expressions.Window.partitionBy("src")
     val wd = Iterate.pin((if (fixed)
         // the long cast is validated by guard 1 on the pinned rows: if a
@@ -210,53 +474,21 @@ object GraphOps {
         min(col("_wdeg").cast("double")).as("min_wdeg"))): _*)
     val withDeg = wd.df
     val nEdges = wd.long("edges")
-    // guard 1: weights integral (checked in double space, so also < 2^53
-    // where that check is itself exact) and non-negative. The division
-    // hazard is NOT a zero weight per se (a zero edge alongside positive
-    // siblings contributes 0 and cannot zero the source's out-degree) —
-    // it is an ALL-zero out-degree source, so that is what's guarded:
-    // min per-source weighted out-degree must be strictly positive
-    // (min over the window-annotated edge rows = min over sources, every
-    // source owning ≥ 1 edge row; exact in long given integrality, which
-    // is validated first).
     val maxW: Long =
       if (!fixed || nEdges == 0) 1L // empty edge list: nothing to overflow
       else {
         def g(name: String) = wd.stats(name).asInstanceOf[Double]
-        require(g("min_w") >= 0d, "fixed-point rank mode requires " +
-          s"non-negative weights (min w = ${g("min_w")})")
-        require(g("max_w") < 9007199254740992d, // 2^53
-          s"fixed-point rank mode requires weights < 2^53 " +
-            s"(max w = ${g("max_w")})")
-        require(g("frac_w") == 0d, "fixed-point rank mode requires " +
-          "integer-valued weights (a fractional weight would be " +
-          "silently truncated by the long cast) — scale the weights " +
-          "onto the integer lattice first")
-        require(g("min_wdeg") > 0d, "fixed-point rank mode requires " +
-          "every source's weighted out-degree > 0 (min out-degree = " +
-          s"${g("min_wdeg")} — an all-zero-out-degree source would " +
-          "divide by zero)")
-        g("max_w").toLong
+        weightGuard(g("min_w"), g("max_w"), g("frac_w"), g("min_wdeg"))
       }
-    val damp = 0.85
     // uniform 0.15 reset (classic PageRank) or a per-vertex reset
     // vector (personalized PageRank — teleport mass only onto the
     // topic set); the vector rides the vertex pin so each round's
     // rebuild stays one narrow join. In fixed mode a caller-supplied
-    // reset column must already be the scaled LONG vector.
-    // guard 2: Long headroom. Total damped mass is bounded by
-    // sum(_r0)/0.15 (per-source contributions never exceed the source's
-    // rank, and integer DIV only shrinks them), so the two per-round
-    // products — rank·w per edge and 85·Σcontribs per vertex — stay
-    // inside Long iff the bound does; checked in BigInt so the check
-    // itself cannot wrap. The DuckDB oracles compute in HUGEINT, so past
-    // this bound op and oracle would silently diverge — hence the loud
-    // failure here. Like the weights, a caller-supplied reset vector must
-    // already be the scaled LONG lattice — fractional values are caught
-    // loudly instead of letting cast("long") truncate them; the mass sum
-    // runs in DECIMAL so the precondition check itself cannot wrap. The
-    // job that pins the vertex set observes these statistics and the
-    // vertex count of the fold gate: no separate pass over the vertices.
+    // reset column must already be the scaled LONG vector; the mass sum
+    // of guard 2 runs in DECIMAL so the precondition check itself cannot
+    // wrap. The job that pins the vertex set observes guard 2's
+    // statistics and the vertex count of the fold gate: no separate pass
+    // over the vertices.
     val vp = Iterate.pin(resetCol.map(rc => verts.withColumn("_r0", col(rc)))
       .getOrElse(verts.withColumn("_r0",
         scale.map(s => lit(3L * (s / 20)).cast("long") // 0.15·S, integrally
@@ -273,134 +505,52 @@ object GraphOps {
     val nVerts = vp.long("verts")
     if (fixed) {
       def g(name: String) = vp.stats(name).asInstanceOf[Double]
-      require(g("r0_min") >= 0d,
-        "fixed-point reset vector must be non-negative")
-      require(g("r0_frac") == 0d, "fixed-point rank mode requires " +
-        "an integer-valued reset vector (a fractional reset would be " +
-        "silently truncated by the long cast) — pre-scale it onto " +
-        "the integer lattice")
-      require(g("r0_abs") < 9007199254740992d, // 2^53
-        "fixed-point reset values must stay below 2^53")
-      val sumR0 = BigInt(vp.stats("r0_sum").asInstanceOf[java.math.BigDecimal]
-        .toBigInteger)
-      val bound = sumR0 * 100 / 15 + 1
-      require(bound * maxW <= BigInt(Long.MaxValue) &&
-          bound * 85 <= BigInt(Long.MaxValue),
-        s"fixed-point overflow precondition failed: damped-mass bound " +
-          s"$bound times max weight $maxW (or times 85) exceeds Long — " +
-          "lower the scale or the weights")
+      resetGuard(g("r0_min"), g("r0_frac"), g("r0_abs"),
+        BigInt(vp.stats("r0_sum").asInstanceOf[java.math.BigDecimal]
+          .toBigInteger), maxW)
     }
-    // The one convergence rule of both paths below: tol > 0 stops at the
-    // first round whose max |Δrank| <= tol (Iterate WARNs when maxIter
-    // runs out first); tol <= 0 runs exactly maxIter rounds and measures
-    // no delta — when the round budget binds (bounded-round snapshots)
-    // the convergence test is pure per-round overhead (on the
-    // distributed loop, a separate delta query every round).
-    def iterateRanks[S](init: S)(release: S => Unit)(step: S => S)
-                       (maxDelta: (S, S) => Double): S =
-      if (tol <= 0)
-        Iterate.rounds("powerIterate", init, maxIter)(release)(step)
-      else Iterate.fixpoint("powerIterate",
-          Iterate.Superstep(init, Map.empty, converged = false),
-          maxIter)(release) { prev =>
-        val next = step(prev)
-        val d = maxDelta(next, prev)
-        Iterate.Superstep(next, Map("max_delta" -> d), converged = d <= tol)
-      }.state
     val out =
-      if (Iterate.folds(nEdges, driverFoldMaxRows) &&
-          Iterate.folds(nVerts, driverFoldMaxRows)) {
-        // DRIVER FOLD: when the pinned edge list and vertex set both fit
-        // the cap, per-round Spark jobs are pure scheduling overhead, so
-        // the rounds fold over arrays instead. The recurrence is
-        // IDENTICAL: in fixed mode the integer ops are order-free, so the
-        // fold is bit-equal to the distributed loop (and to the unrolled
-        // SQL oracles); in double mode summation order differs only
-        // within the non-order-pinned float semantics the distributed
-        // loop already has. The pins decode into PARALLEL PRIMITIVE
-        // ARRAYS (the bradleyTerry ei/ej/en layout), once for both modes:
-        // vertex uuids and ids, edge endpoints as vertex indexes, and the
-        // mode's cells (r0, w, wdeg) cast to `cell` and stored by
-        // `vertex`/`edge`. Only the round kernels are typed per mode:
-        // their arithmetic genuinely differs.
-        val n = nVerts.toInt
-        val uuids = new Array[Any](n)
-        val esi = new Array[Int](nEdges.toInt)
-        val edi = new Array[Int](nEdges.toInt)
-        // returns the number of edges kept
-        def decode(cell: String)(vertex: (Int, Row) => Unit)
-                  (edge: (Int, Row) => Unit): Int = {
-          val idx = new java.util.HashMap[Long, Integer](
-            math.min(nVerts * 2, 1L << 30).toInt)
-          var i = 0
-          Iterate.decode(vr.select(col("vid"), col("_r0").cast(cell),
-              col("uuid")), nVerts) { r =>
-            uuids(i) = r.get(2); vertex(i, r)
-            idx.put(r.getLong(0), i); i += 1
-          }
-          var m = 0
-          Iterate.decode(withDeg.select(col("src"), col("dst"),
-              col("w").cast(cell), col("_wdeg").cast(cell)), nEdges) { r =>
-            val si = idx.get(r.getLong(0))
-            val di = idx.get(r.getLong(1))
-            if (si != null && di != null) { // outside verts: dropped,
-              esi(m) = si.intValue         // like the joins
-              edi(m) = di.intValue
-              edge(m, r); m += 1
-            }
-          }
-          m
+      if (Iterate.folds(nEdges) && Iterate.folds(nVerts)) {
+        // the pins decode once for both modes: vertex values and ids,
+        // edge endpoints as vertex indexes, and the mode's cells cast to
+        // `cell`; an edge with an endpoint outside the vertex set drops,
+        // like the joins drop it
+        val cell = if (fixed) "long" else "double"
+        def cells(k: Long): Array[_] =
+          if (fixed) new Array[Long](k.toInt) else new Array[Double](k.toInt)
+        def set(a: Array[_], i: Int, r: Row, c: Int): Unit = a match {
+          case a: Array[Long] => a(i) = r.getLong(c)
+          case a: Array[Double] => a(i) = r.getDouble(c)
         }
-        def maxAbs(d: Int => Double): Double = {
-          var dlt = 0d
-          var i = 0
-          while (i < n) {
-            val d0 = d(i)
-            if (d0 > dlt) dlt = d0
-            i += 1
-          }
-          dlt
+        val (uuids, r0) = (new Array[Any](nVerts.toInt), cells(nVerts))
+        val (esi, edi) =
+          (new Array[Int](nEdges.toInt), new Array[Int](nEdges.toInt))
+        val (ew, ewd) = (cells(nEdges), cells(nEdges))
+        val idx = new java.util.HashMap[Long, Integer](
+          math.min(nVerts * 2, 1L << 30).toInt)
+        var i = 0
+        Iterate.decode(vr.select(col("vid"), col("_r0").cast(cell),
+            col("uuid")), nVerts) { r =>
+          uuids(i) = r.get(2); set(r0, i, r, 1)
+          idx.put(r.getLong(0), i); i += 1
         }
-        val rank: Array[_] = if (fixed) {
-          val r0 = new Array[Long](n)
-          val ew = new Array[Long](nEdges.toInt)
-          val ewd = new Array[Long](nEdges.toInt)
-          val m = decode("long")((i, r) => r0(i) = r.getLong(1)) { (e, r) =>
-            ew(e) = r.getLong(2); ewd(e) = r.getLong(3)
+        var m = 0
+        Iterate.decode(withDeg.select(col("src"), col("dst"),
+            col("w").cast(cell), col("_wdeg").cast(cell)), nEdges) { r =>
+          val si = idx.get(r.getLong(0))
+          val di = idx.get(r.getLong(1))
+          if (si != null && di != null) {
+            esi(m) = si.intValue; edi(m) = di.intValue
+            set(ew, m, r, 2); set(ewd, m, r, 3); m += 1
           }
-          iterateRanks(r0)(_ => ()) { rank =>
-            val acc = new Array[Long](n)
-            var e = 0
-            while (e < m) {
-              acc(edi(e)) += rank(esi(e)) * ew(e) / ewd(e); e += 1
-            }
-            Array.tabulate(n)(i => r0(i) + 85L * acc(i) / 100L)
-          }((next, prev) => maxAbs(i => math.abs(next(i) - prev(i)).toDouble))
-        } else {
-          val r0 = new Array[Double](n)
-          val ew = new Array[Double](nEdges.toInt)
-          val ewd = new Array[Double](nEdges.toInt)
-          val m = decode("double")((i, r) => r0(i) = r.getDouble(1)) {
-              (e, r) =>
-            ew(e) = r.getDouble(2); ewd(e) = r.getDouble(3)
-          }
-          iterateRanks(r0)(_ => ()) { rank =>
-            val acc = new Array[Double](n)
-            var e = 0
-            while (e < m) {
-              acc(edi(e)) += rank(esi(e)) * ew(e) / ewd(e); e += 1
-            }
-            Array.tabulate(n)(i => r0(i) + damp * acc(i))
-          }((next, prev) => maxAbs(i => math.abs(next(i) - prev(i))))
         }
-        vr.sparkSession.createDataFrame(
-            Seq.tabulate(n)(i => Row(uuids(i), rank(i))).asJava,
-            StructType(Seq(vr.schema("uuid").copy(name = "author_uuid"),
-              StructField("pagerank", if (fixed) LongType else DoubleType))))
+        foldRanks(RankGraph(vr.schema("uuid"), uuids, r0, esi, edi, ew, ewd,
+          m), tol, maxIter, vr.sparkSession)
       } else {
         val init = vr.select(col("vid"), col("_r0").as("pagerank"))
           .localCheckpoint(true)
-        val ranks = iterateRanks(init)(Pins.release(_)) { ranks =>
+        val ranks = iterateRanks(tol, maxIter, init)(Pins.release(_)) {
+            ranks =>
           val contribExpr =
             if (fixed) expr("(pagerank * w) DIV _wdeg")
             else col("pagerank") * col("w") / col("_wdeg")
@@ -419,7 +569,7 @@ object GraphOps {
           val dampTerm =
             if (fixed)
               expr("(85 * coalesce(_csum, CAST(0 AS BIGINT))) DIV 100")
-            else lit(damp) * coalesce(col("_csum"), lit(0d))
+            else lit(0.85) * coalesce(col("_csum"), lit(0d))
           vr.select(col("vid"), col("_r0"))
             .join(contribs, Seq("vid"), "left_outer")
             .select(col("vid"), (col("_r0") + dampTerm).as("pagerank"))
@@ -441,24 +591,153 @@ object GraphOps {
     out
   }
 
+  /** [[authorRank]] / [[authorRankWeighted]]'s DRIVER FOLD: the
+    * co-membership graph built on the driver from the decoded membership,
+    * then [[foldRanks]]. A member `vid` is a vertex (a null member's too,
+    * isolated as in the distributed vertex set); groups are the non-null
+    * group values, since a null key joins nothing on the distributed path.
+    * `half` gets each group's distinct members as ranks in Spark's string
+    * order ([[stringRanks]], ascending, null last) and returns one
+    * direction of the edges as (a, b, w) rank triples, or None when both
+    * directions would pass [[Iterate.folds]]'s cap. Both directions are
+    * the edges, w the weight and the per-source sum of w the weighted
+    * out-degree, so the fixed-mode guards run on the same statistics as
+    * the edge and vertex pins observe.
+    */
+  private def rankMembership(mem: Membership, spark: SparkSession,
+                             tol: Double, maxIter: Int, scale: Option[Long])
+                            (half: Array[Array[Int]] =>
+                              Option[(Array[Int], Array[Int], Array[Long])]
+                            ): Option[DataFrame] = {
+    requireScale(scale)
+    val rank = stringRanks(mem.values)
+    // (group << 32 | member rank), sorted and deduplicated in place: each
+    // group's distinct members are one run, ascending
+    val keys = Array.newBuilder[Long]
+    for (i <- mem.group.indices if mem.group(i) >= 0)
+      keys += mem.group(i).toLong << 32 | rank(mem.vertex(i))
+    val sorted = keys.result()
+    java.util.Arrays.sort(sorted)
+    var d = 0
+    for (k <- sorted if d == 0 || sorted(d - 1) != k) { sorted(d) = k; d += 1 }
+    val groups = Array.newBuilder[Array[Int]]
+    var i = 0
+    while (i < d) {
+      var j = i + 1
+      while (j < d && sorted(j) >>> 32 == sorted(i) >>> 32) j += 1
+      groups += Array.tabulate(j - i)(x => sorted(i + x).toInt)
+      i = j
+    }
+    half(groups.result()).map { case (a, b, w) =>
+      val n = mem.values.size
+      val byRank = new Array[Int](n)
+      for (j <- 0 until n if rank(j) != Int.MaxValue) byRank(rank(j)) = j
+      val h = a.length
+      val esi = Array.tabulate(2 * h)(e =>
+        byRank(if (e < h) a(e) else b(e - h)))
+      val edi = Array.tabulate(2 * h)(e =>
+        byRank(if (e < h) b(e) else a(e - h)))
+      val ew = Array.tabulate(2 * h)(e => w(e % h))
+      val deg = new Array[Long](n)
+      for (e <- 0 until 2 * h) deg(esi(e)) += ew(e)
+      val ewd = esi.map(deg)
+      val uuid = StructField("uuid", StringType)
+      val g = scale match {
+        case Some(s) =>
+          val maxW =
+            if (h == 0) 1L
+            else weightGuard(ew.min.toDouble, ew.max.toDouble, 0d,
+              ewd.min.toDouble)
+          val r0 = 3L * (s / 20) // 0.15·S, integrally
+          resetGuard(if (n == 0) 0d else r0.toDouble, 0d,
+            if (n == 0) 0d else math.abs(r0).toDouble, BigInt(r0) * n, maxW)
+          RankGraph(uuid, mem.values.toArray, Array.fill(n)(r0), esi, edi,
+            ew, ewd, 2 * h)
+        case None =>
+          RankGraph(uuid, mem.values.toArray, Array.fill(n)(0.15), esi,
+            edi, ew.map(_.toDouble), ewd.map(_.toDouble), 2 * h)
+      }
+      foldRanks(g, tol, maxIter, spark)
+    }
+  }
+
+  /** Packed (a << 32 | b) rank pairs, sorted, as (a, b, count) triples. */
+  private def countPairs(pairs: Array[Long])
+      : (Array[Int], Array[Int], Array[Long]) = {
+    java.util.Arrays.sort(pairs)
+    val (a, b, w) = (Array.newBuilder[Int], Array.newBuilder[Int],
+      Array.newBuilder[Long])
+    var i = 0
+    while (i < pairs.length) {
+      var j = i + 1
+      while (j < pairs.length && pairs(j) == pairs(i)) j += 1
+      a += (pairs(i) >>> 32).toInt; b += pairs(i).toInt; w += j - i
+      i = j
+    }
+    (a.result(), b.result(), w.result())
+  }
+
+  /** Non-null members of a group of ranks (ascending, null last). */
+  private def nonNull(g: Array[Int]): Int =
+    if (g.last == Int.MaxValue) g.length - 1 else g.length
+
+  /** Star edges of `groups` (member ranks, ascending, null last): per
+    * group, one less than its non-null members. */
+  private def starCount(groups: Array[Array[Int]]): Long =
+    groups.map(g => math.max(nonNull(g) - 1, 0).toLong).sum
+
+  /** [[starEdges]] over groups of member ranks (ascending, null last):
+    * each group's least non-null member links to its other non-null
+    * members, as packed (hub << 32 | member) pairs.
+    */
+  private def starPairs(groups: Array[Array[Int]]): Array[Long] = {
+    val out = new Array[Long](starCount(groups).toInt)
+    var p = 0
+    for (g <- groups; x <- 1 until nonNull(g)) {
+      out(p) = g(0).toLong << 32 | g(x); p += 1
+    }
+    out
+  }
+
   /** PageRank over the co-authorship graph (centrality of authors). The
     * co-edge list uses the same star construction as
     * [[coauthorComponents]] (symmetrized), trading exact clique weights for
     * linear edge growth — rank ordering within components is preserved for
     * hub detection while staying skew-proof. For exact co-occurrence
-    * weights on moderate hubs see [[authorRankWeighted]]. Sub-cap graphs
-    * take the driver fold, which pins the vertex set once and joins
-    * nothing back onto it — see [[pageRank]]'s note on double-mode
-    * summation-order drift.
+    * weights on moderate hubs see [[authorRankWeighted]].
+    *
+    * Groups and hubs are the distributed path's: output strings, the
+    * least member in Spark's string order (UTF-8 bytes, not
+    * `String.compareTo`), and a row with a null output joins nothing, so
+    * it adds its author as a vertex and no edge. A membership within
+    * [[Iterate.folds]]'s cap, whose star edges both ways fit it too,
+    * builds the graph on the driver and runs [[powerIterate]]'s fold
+    * rounds ([[rankMembership]]): one pin, one decode, a local result —
+    * see [[pageRank]]'s note on double-mode summation-order drift. Above
+    * the cap the star edges are built as DataFrames from the same pin.
     */
   def authorRank(authorOf: DataFrame, tol: Double = 0.001,
                  maxIter: Int = 30,
-                 scale: Option[Long] = None): DataFrame = {
-    val membership = authorOf.select(col("dst").as("o"), col("src").as("m"))
-    val star = starEdges(membership)
+                 scale: Option[Long] = None): DataFrame =
+    foldMembership(authorOf, hashGroups = false)(mem =>
+      rankMembership(mem, authorOf.sparkSession, tol, maxIter, scale) {
+        groups =>
+          if (!Iterate.folds(2 * starCount(groups))) None
+          else {
+            val (a, b, w) = countPairs(starPairs(groups))
+            Some((a, b, w.map(_ => 1L)))
+          }
+      })(authorRankLoop(_, tol, maxIter, scale))
+
+  /** [[authorRank]]'s distributed build over the (o, m, vid) membership:
+    * star edges as DataFrames, then [[powerIterate]].
+    */
+  private def authorRankLoop(membership: DataFrame, tol: Double,
+                             maxIter: Int, scale: Option[Long]): DataFrame = {
+    val star = starEdges(membership.select(col("o"), col("m")))
     val coedges = star.union(
       star.select(col("dst").as("src"), col("src").as("dst")))
-    val verts = authorOf.select(col("src").as("uuid")).distinct()
+    val verts = membership.select(col("m").as("uuid")).distinct()
       .select(col("uuid"), vid(col("uuid")).as("vid"))
     val edges = coedges
       .select(vid(col("src")).as("src"), vid(col("dst")).as("dst"),
@@ -479,6 +758,15 @@ object GraphOps {
     * centrality is exact; authors appearing only in capped groups keep
     * star connectivity rather than dropping to the reset rank.
     *
+    * Memberships are distinct (output, author) strings; a null author
+    * counts toward its group's size but pairs with no one, a null output
+    * joins nothing, and pairs and hubs follow Spark's string order. A
+    * membership within [[Iterate.folds]]'s cap, whose pair and star edges
+    * both ways fit it too, builds the graph on the driver and runs
+    * [[powerIterate]]'s fold rounds ([[rankMembership]]). Otherwise the
+    * pairs are built as DataFrames from the same pin; a decline on the
+    * pair count has already paid the membership's decode.
+    *
     * @param authorOf edge table (src = author uuid, dst = output uuid)
     * @return (author_uuid, pagerank), unnormalized (reset + damp·contribs)
     */
@@ -487,10 +775,37 @@ object GraphOps {
                          maxGroupSize: Int = 1000,
                          scale: Option[Long] = None): DataFrame = {
     require(maxGroupSize >= 2, "maxGroupSize must allow at least one pair")
-    val membership = authorOf
-      .select(col("dst").as("o"), col("src").as("m")).distinct()
-    val sizes = membership.groupBy("o").agg(count(lit(1)).as("_k"))
-    val small = membership.join(sizes.filter(col("_k") <= maxGroupSize)
+    foldMembership(authorOf, hashGroups = false)(mem =>
+      rankMembership(mem, authorOf.sparkSession, tol, maxIter, scale) {
+        groups =>
+          val (small, big) = groups.partition(_.length <= maxGroupSize)
+          val pairCount =
+            small.map(g => nonNull(g).toLong * (nonNull(g) - 1) / 2).sum
+          if (!Iterate.folds(2 * (pairCount + starCount(big)))) None
+          else {
+            val pairs = new Array[Long](pairCount.toInt)
+            var p = 0
+            for (g <- small; x <- 0 until nonNull(g);
+                 y <- x + 1 until nonNull(g)) {
+              pairs(p) = g(x).toLong << 32 | g(y); p += 1
+            }
+            val (pa, pb, pw) = countPairs(pairs)
+            val (sa, sb, _) = countPairs(starPairs(big))
+            Some((pa ++ sa, pb ++ sb, pw ++ sa.map(_ => 1L)))
+          }
+      })(authorRankWeightedLoop(_, tol, maxIter, maxGroupSize, scale))
+  }
+
+  /** [[authorRankWeighted]]'s distributed build over the (o, m, vid)
+    * membership: the capped pair join and star fallback as DataFrames,
+    * then [[powerIterate]].
+    */
+  private def authorRankWeightedLoop(membership: DataFrame, tol: Double,
+                                     maxIter: Int, maxGroupSize: Int,
+                                     scale: Option[Long]): DataFrame = {
+    val distinctMembers = membership.select(col("o"), col("m")).distinct()
+    val sizes = distinctMembers.groupBy("o").agg(count(lit(1)).as("_k"))
+    val small = distinctMembers.join(sizes.filter(col("_k") <= maxGroupSize)
       .select("o"), Seq("o"))
     // k² pair join runs only under the cap; weight = #shared outputs
     val pairs = small.select(col("o"), col("m").as("ma"))
@@ -499,14 +814,14 @@ object GraphOps {
       .groupBy("ma", "mb").agg(count(lit(1)).cast("double").as("w"))
     // capped-out groups fall back to weight-1 star edges (connectivity
     // without the quadratic term)
-    val big = membership.join(sizes.filter(col("_k") > maxGroupSize)
+    val big = distinctMembers.join(sizes.filter(col("_k") > maxGroupSize)
       .select("o"), Seq("o"))
     val bigStar = starEdges(big)
       .select(col("src").as("ma"), col("dst").as("mb"), lit(1d).as("w"))
     val half = pairs.union(bigStar)
     val coedges = half.union(
       half.select(col("mb").as("ma"), col("ma").as("mb"), col("w")))
-    val verts = authorOf.select(col("src").as("uuid")).distinct()
+    val verts = membership.select(col("m").as("uuid")).distinct()
       .select(col("uuid"), vid(col("uuid")).as("vid"))
     val edges = coedges
       .select(vid(col("ma")).as("src"), vid(col("mb")).as("dst"), col("w"))
@@ -692,7 +1007,7 @@ object GraphOps {
     * first-seen order.
     */
   private final class VertexIndex {
-    val values = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val values = ArrayBuffer.empty[Any]
     private val index = new java.util.HashMap[Any, Integer]()
     def size: Int = values.size
     def apply(v: Any): Int = {
@@ -751,8 +1066,8 @@ object GraphOps {
     * join per round; tol <= 0 = run-exactly-maxIter mode that skips the
     * per-round convergence query).
     *
-    * Sub-cap graphs (<= driverFoldMaxRows edges AND vertices) fold the
-    * rounds driver-side. In fixed-point mode the fold is provably
+    * Sub-cap graphs (edges AND vertices within [[Iterate.folds]]'s cap)
+    * fold the rounds driver-side. In fixed-point mode the fold is provably
     * bit-equal to the distributed loop; in DOUBLE mode it changes the
     * floating-point summation order, so floor-scaled projections (e.g.
     * floor(pagerank*1e6)) of pre-fold baselines can flip on boundary
@@ -762,9 +1077,8 @@ object GraphOps {
     * pin and the vertex count observed by the vertex pin (whose job also
     * checks the fixed-mode reset vector), both pins decode straight into
     * arrays, and the ranks come back as a local frame keyed by the vertex
-    * values, with no join back onto the vertices. `driverFoldMaxRows`
-    * defaults to [[Iterate.foldMaxRows]]; pass 0 to skip the fold (or
-    * call inside [[Iterate.distributed]], as every other operator).
+    * values, with no join back onto the vertices. Inside
+    * [[Iterate.distributed]] the distributed loop runs on any input.
     *
     * @param weightCol optional edge-weight column (default: every edge
     *                  weighs 1)
@@ -773,10 +1087,9 @@ object GraphOps {
   def pageRank(edges: DataFrame, srcCol: String = "src",
                dstCol: String = "dst", weightCol: Option[String] = None,
                tol: Double = 0.001, maxIter: Int = 30,
-               scale: Option[Long] = None,
-               driverFoldMaxRows: Long = Iterate.foldMaxRows): DataFrame =
+               scale: Option[Long] = None): DataFrame =
     rankUndirected(edges, srcCol, dstCol, weightCol, tol, maxIter, None,
-      scale, driverFoldMaxRows)
+      scale)
 
   /** Shared scaffolding of [[pageRank]] / [[pageRankPersonalized]]:
     * clean + pin the edge list once (sym/verts/withDeg would otherwise
@@ -790,9 +1103,7 @@ object GraphOps {
                              dstCol: String, weightCol: Option[String],
                              tol: Double, maxIter: Int,
                              sources: Option[DataFrame],
-                             scale: Option[Long] = None,
-                             driverFoldMaxRows: Long = Iterate.foldMaxRows
-                            ): DataFrame = {
+                             scale: Option[Long] = None): DataFrame = {
     val w = scale match {
       case Some(_) =>
         // fixed-point mode: integer-valued weights required — pass the
@@ -835,8 +1146,7 @@ object GraphOps {
     val wedges = sym.select(vid(col("_a")).as("src"),
       vid(col("_b")).as("dst"), col("w"))
     val out = powerIterate(verts, wedges, tol, maxIter,
-      resetCol = sources.map(_ => "_reset"), scale = scale,
-      driverFoldMaxRows = driverFoldMaxRows)
+      resetCol = sources.map(_ => "_reset"), scale = scale)
       .withColumnRenamed("author_uuid", "vertex")
     // powerIterate's result reads neither half nor its own pins
     Pins.release(half)

@@ -47,8 +47,8 @@ import org.apache.spark.sql.functions._
   * duplicate survivors, budget-bounded packs).
   *
   * Returns the curated CHUNK table plus a per-stage row-count report for
-  * the run log (computed with one count per stage boundary; counts are
-  * actions, so the 100 TB invocation passes `audit = false` to skip them —
+  * the run log (each count observed by the job that pins its stage
+  * boundary; the 100 TB invocation passes `audit = false` to skip them —
   * stage boundaries stay pinned either way, the report comes back empty).
   */
 object Pipelines {
@@ -70,6 +70,12 @@ object Pipelines {
           .cast("double"))
     case None => df
   }
+
+  /** Pin a stage's rows; with `audit` the pin's own job also counts them
+    * (`rows`), observed at the top of the pinned plan.
+    */
+  private def pinStage(df: DataFrame, audit: Boolean): Iterate.Pin =
+    if (audit) Iterate.pin(df, count(lit(1)).as("rows")) else Iterate.pin(df)
 
   def curateCorpus(docs: DataFrame, eval: DataFrame,
                    urlCol: Option[String] = None,
@@ -109,8 +115,10 @@ object Pipelines {
     // pin each stage boundary (the eager checkpoint is the materializing
     // action), then release the PREVIOUS boundary's blocks: only one
     // intermediate is ever resident, and the final stage stays pinned for
-    // the caller. The audit count is an EXTRA action per boundary — the
-    // run-log row counts — skipped when audit=false (the 100 TB mode).
+    // the caller. The audit row count — the run-log — is observed by the
+    // pin's own job, at the top of the pinned plan where each partition
+    // counts once (no extra action); audit=false (the 100 TB mode)
+    // observes nothing.
     //
     // Unlike curateBatch (whose no-audit mode pins only fan-out stages),
     // the pins here stay UNCONDITIONAL by design: in the full-rerun
@@ -124,14 +132,15 @@ object Pipelines {
     // the PREBUILT CorpusState indexes, leaving most of its stages
     // single-read anti-joins.
     var prevPinned: Option[DataFrame] = None
-    def stage(name: String, df: DataFrame): DataFrame = {
-      // label the stage's jobs (guide §1.5 practice): the pin + count +
-      // any broadcast builds they trigger show up attributable in the
-      // UI / listener instead of as anonymous future lambdas
+    def stage(name: String, df: => DataFrame): DataFrame = {
+      // label the stage's jobs (guide §1.5 practice): the stage body is
+      // built inside the label, so its pin, the pins of the operators it
+      // calls and any broadcast builds they trigger show up attributable
+      // in the UI / listener instead of as anonymous future lambdas
       val pinned = Iterate.described(s"curate: $name") {
-        val p = df.localCheckpoint(true)
-        if (audit) stages += name -> p.count()
-        p
+        val p = pinStage(df, audit)
+        if (audit) stages += name -> p.long("rows")
+        p.df
       }
       prevPinned.foreach(Pins.release(_))
       prevPinned = Some(pinned)
@@ -434,20 +443,20 @@ object Pipelines {
     // I/O. The previous pin is released only when the NEXT pin has
     // materialized (localCheckpoint(true) is eager), so lazy spans
     // between pins never read released blocks.
-    def stage(name: String, df: DataFrame,
+    def stage(name: String, df: => DataFrame,
               fanout: Boolean = false): DataFrame =
-      if (audit || fanout) {
-        // labeled as in curateCorpus (guide §1.5): pins/counts and the
-        // broadcast builds they trigger are attributable per stage
-        val pinned = Iterate.described(s"curate-batch: $name") {
-          val p = df.localCheckpoint(true)
-          if (audit) stages += name -> p.count()
-          p
-        }
-        prevPinned.foreach(Pins.release(_))
-        prevPinned = Some(pinned)
-        pinned
-      } else df
+      // labeled as in curateCorpus (guide §1.5): the body's operator
+      // pins, the stage pin with its observed row count and the
+      // broadcast builds they trigger are attributable per stage
+      Iterate.described(s"curate-batch: $name") {
+        if (audit || fanout) {
+          val p = pinStage(df, audit)
+          if (audit) stages += name -> p.long("rows")
+          prevPinned.foreach(Pins.release(_))
+          prevPinned = Some(p.df)
+          p.df
+        } else df
+      }
 
     // optional URL dedup, both axes: within-batch canonical winners,
     // then anti-join against the corpus canonical-URL index — a page

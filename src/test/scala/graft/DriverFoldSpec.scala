@@ -121,6 +121,79 @@ class DriverFoldSpec extends AnyFunSuite with BeforeAndAfterAll {
       scale = s))
   }
 
+  /** An author_of table for the co-membership builds: 80 memberships
+    * over 13 outputs (o0 and o1 have 7 authors, the rest 6), duplicated
+    * rows, null authors and null outputs, a group "oz" of 6 authors and a
+    * null one, and a group "oe" of 7 authors whose Spark string order
+    * (UTF-8 bytes: "\uFFFF" < "\uD83D\uDE00") is not Java's.
+    */
+  private def comembers: DataFrame = {
+    import spark.implicits._
+    val odd = Seq("\uFFFF", "\uD83D\uDE00", "\uFFFFb", "\uD83D\uDE00b",
+      "\uFFFFc", "\uD83D\uDE00c", "\uFFFE\uD83D\uDE00")
+    ((0 until 80).map(i => (s"a${i * 7 % 23}", s"o${i % 13}")) ++
+      Seq(("a1", "o1"), ("a1", "o1"), ("a2", "o3"), ("a2", "o3")) ++
+      (0 until 6).map(i => (s"z$i", "oz")) ++ Seq((null, "oz")) ++
+      odd.map((_, "oe")) ++ Seq(("\uFFFF", "oe"), (null, "o5"), (null, null),
+        ("a1", null), ("y1", null), ("y2", null), ("y3", "oy")))
+      .toDF("src", "dst")
+  }
+
+  /** Rank rows by author, on the fold and on the distributed loop, equal
+    * to 1e-12 relatively (double mode: summation order differs).
+    */
+  private def assertCloseRanks(what: String)(run: => DataFrame): Unit = {
+    val (fold, dist) = bothPaths(run)
+    def ranks(rows: Set[Row]) = rows.map(r => r.get(0) -> r.getDouble(1)).toMap
+    val (f, d) = (ranks(fold), ranks(dist))
+    assert(f.keySet == d.keySet && f.size == fold.size, what)
+    for ((k, v) <- f)
+      assert(math.abs(v - d(k)) <= 1e-12 * math.max(1d, math.abs(d(k))),
+        s"$what: $k: $v against ${d(k)}")
+  }
+
+  test("co-membership builds: the fold equals the distributed build on " +
+      "null keys, duplicate rows, a capped group and Spark's string order") {
+    val s = Some(1000000L)
+    val star = assertSamePaths("authorRank")(GraphOps.authorRank(comembers,
+      tol = 0.0, maxIter = 6, scale = s))
+    assert(star.exists(_.get(0) == null), "a null author is a vertex")
+    for (maxGroupSize <- Seq(2, 6, 1000))
+      assertSamePaths(s"authorRankWeighted, maxGroupSize $maxGroupSize")(
+        GraphOps.authorRankWeighted(comembers, tol = 0.0, maxIter = 6,
+          maxGroupSize = maxGroupSize, scale = s))
+    assertCloseRanks("authorRank, double")(GraphOps.authorRank(comembers,
+      tol = 1e-9, maxIter = 50))
+    assertCloseRanks("authorRankWeighted, double")(
+      GraphOps.authorRankWeighted(comembers, tol = 1e-9, maxIter = 50,
+        maxGroupSize = 6))
+    val cc = assertSamePaths("coauthorComponents")(
+      GraphOps.coauthorComponents(comembers))
+    assert(cc.contains(Row("\uD83D\uDE00", "\uFFFE\uD83D\uDE00")))
+    // null outputs hash to one group: a1 and y1 share a component
+    val label = cc.map(r => r.get(0) -> r.get(1)).toMap
+    assert(label("y1") == label("a1") && label("y3") == "y3")
+  }
+
+  test("a weighted membership whose pairs pass the cap builds them from " +
+      "its membership pin and releases it") {
+    import spark.implicits._
+    // one output of 1,500 authors: 1,124,250 pairs, 2,248,500 edges both
+    // ways, past the 2M-row cap although the membership is 1,500 rows
+    val clique = (0 until 1500).map(i => (f"a$i%04d", "o")).toDF("src", "dst")
+    val (ranks, pins) = Pins.track(spark.sparkContext)(
+      GraphOps.authorRankWeighted(clique, tol = 0.0, maxIter = 2,
+        maxGroupSize = 2000))
+    assert(pins.size == 1, "only the result's pin is kept")
+    // every author: 0.15 reset, then 0.15 + 0.85·0.15, then once more
+    val expected = 0.15 + 0.85 * (0.15 + 0.85 * 0.15)
+    val rows = ranks.collect()
+    Pins.release(spark.sparkContext, pins)
+    assert(rows.length == 1500)
+    assert(rows.forall(r => math.abs(r.getDouble(1) - expected) <= 1e-12),
+      rows.take(3).mkString(", "))
+  }
+
   /** 100 Gaussian vectors and, under ids 100-199, their doubles: a vector
     * and its double tie on every cosine, so when both are init centers the
     * larger center id ends up with no vector.

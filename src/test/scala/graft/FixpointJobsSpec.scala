@@ -410,9 +410,14 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
     * pins around them — kCore's pin is a distinct (two jobs), the Lloyd
     * fold pins its centroids and cells, and pageRank pins its cleaned
     * edges, the degree-annotated edges (two jobs) and the vertices (two).
+    * The co-membership builds (authorRank, authorRankWeighted,
+    * coauthorComponents) pin their membership and decode it, nothing more.
     */
   test("a folded operator runs no superstep job, and few jobs in all") {
+    import spark.implicits._
     val v = vectors
+    val authorOf = (0 until 80).map(i => (s"a${i * 7 % 23}", s"o${i % 13}"))
+      .toDF("src", "dst")
     val bounds = Seq[(String, Int, () => Unit)](
       ("labelPropagation", 2, () =>
         GraphOps.labelPropagation(md5Graph, maxIter = 10).collect()),
@@ -420,7 +425,14 @@ class FixpointJobsSpec extends AnyFunSuite with BeforeAndAfterAll
       ("kmeans", 4, () =>
         Similarity.buildIvfIndex(v, nCenters = 4, iters = 3).release()),
       ("powerIterate", 7, () =>
-        GraphOps.pageRank(md5Graph, tol = 1e-6, maxIter = 8).collect()))
+        GraphOps.pageRank(md5Graph, tol = 1e-6, maxIter = 8).collect()),
+      ("powerIterate", 2, () => GraphOps.authorRank(authorOf, tol = 0.0,
+        maxIter = 8, scale = Some(1000000L)).collect()),
+      ("powerIterate", 2, () => GraphOps.authorRankWeighted(authorOf,
+        tol = 0.0, maxIter = 8, maxGroupSize = 5,
+        scale = Some(1000000L)).collect()),
+      ("connectedComponents", 2, () =>
+        GraphOps.coauthorComponents(authorOf).collect()))
     val over = bounds.flatMap { case (operator, bound, run) =>
       val descs = jobDescriptions(run())
       assert(perSuperstep(descs, operator).isEmpty, descs)

@@ -26,9 +26,13 @@ import org.apache.spark.sql.functions._
   *
   * Run by hand (not part of `sbt test`):
   *   SPARK_DRIVER_MEM=3g sbt "Test/runMain graft.FoldProbe rows [ops] [modes]"
-  * `ops`: comma-separated of label_propagation, k_core, page_rank, lloyd
-  * (default all); `modes`: fold, distributed (default both). The graphs
-  * hash `rows` arcs or edges onto rows/8 vertices; `lloyd` builds an IVF
+  * `ops`: comma-separated of label_propagation, k_core, page_rank, lloyd,
+  * coauthor_components, author_rank, author_rank_weighted (default all);
+  * `modes`: fold, distributed (default both). The graphs hash `rows`
+  * arcs or edges onto rows/8 vertices; the three co-membership operators
+  * read `rows` memberships of 36-character author strings, hashed onto
+  * rows/8 authors, in outputs of two authors each (so the weighted
+  * build's pairs both ways are `rows` edges too); `lloyd` builds an IVF
   * index over rows/dim vectors of `dim` floats (4th argument, default 16)
   * with `nCenters` centers (5th argument, default 64: at 2M elements the
   * most the Lloyd fold's work cap lets fold).
@@ -38,7 +42,8 @@ object FoldProbe {
     val rows = args.headOption.map(_.toLong).getOrElse(2000000L)
     def set(i: Int) = args.lift(i).map(_.split(",").toSet)
     val ops = set(1).getOrElse(
-      Set("label_propagation", "k_core", "page_rank", "lloyd"))
+      Set("label_propagation", "k_core", "page_rank", "lloyd",
+        "coauthor_components", "author_rank", "author_rank_weighted"))
     val modes = set(2).getOrElse(Set("fold", "distributed"))
     val dim = args.lift(3).map(_.toInt).getOrElse(16)
     val nCenters = args.lift(4).map(_.toInt).getOrElse(64)
@@ -81,6 +86,12 @@ object FoldProbe {
         (pmod(xxhash64(col("id"), d), lit(2001L)) - 1000).cast("float") /
           lit(1000f)).cast("array<float>").as("embedding")))
 
+    def membership = pinned(spark.range(rows).select(
+      substring(sha2(pmod(xxhash64(col("id")), lit(nv)).cast("string"), 256),
+        1, 36).as("src"),
+      concat(lit("output-"), (col("id") / 2).cast("long").cast("string"))
+        .as("dst")))
+
     def probe(op: String)(input: => DataFrame)(run: DataFrame => DataFrame)
         : Unit =
       if (ops(op)) {
@@ -100,7 +111,7 @@ object FoldProbe {
           val base = usedAfterFullGc()
           val ((out2, pins2), top) = sampled(call())
           val held = usedAfterFullGc() - base
-          println(f"FOLDPROBE op=$op%-17s mode=$mode%-11s rows=$rows " +
+          println(f"FOLDPROBE op=$op%-20s mode=$mode%-11s rows=$rows " +
             f"op_s=${(t1 - t0) / 1e9}%.2f sink_s=${(t2 - t1) / 1e9}%.2f " +
             f"peak_mb=${mb(top - base)}%.0f held_mb=${mb(held)}%.0f " +
             s"result_rows=${out2.count()}")
@@ -116,6 +127,11 @@ object FoldProbe {
     probe("k_core")(graph(rows))(GraphOps.kCore(_, k = 3))
     // the gate counts the symmetrized edges and the vertices
     probe("page_rank")(graph(rows / 2))(GraphOps.pageRank(_, maxIter = 10))
+    // the gate counts membership rows
+    probe("coauthor_components")(membership)(GraphOps.coauthorComponents)
+    probe("author_rank")(membership)(GraphOps.authorRank(_, maxIter = 10))
+    probe("author_rank_weighted")(membership)(
+      GraphOps.authorRankWeighted(_, maxIter = 10))
     // the gate counts vector elements
     probe("lloyd")(corpus) { c =>
       val idx = Similarity.buildIvfIndex(c, nCenters = nCenters)

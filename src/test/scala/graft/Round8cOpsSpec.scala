@@ -176,15 +176,17 @@ class Round8cOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fold = graft.graph.GraphOps.pageRank(plantedEdges, tol = 0.0,
         maxIter = 12, scale = Some(S))
       .as[(String, Long)].collect().toMap
-    val dist = graft.graph.GraphOps.pageRank(plantedEdges, tol = 0.0,
-        maxIter = 12, scale = Some(S), driverFoldMaxRows = 0)
+    val dist = graft.graph.Iterate.distributed(
+        graft.graph.GraphOps.pageRank(plantedEdges, tol = 0.0,
+          maxIter = 12, scale = Some(S)))
       .as[(String, Long)].collect().toMap
     assert(fold === dist) // integer ops are order-free: exact equality
     val foldD = graft.graph.GraphOps.pageRank(plantedEdges, tol = 0.0,
         maxIter = 12)
       .as[(String, Double)].collect().toMap
-    val distD = graft.graph.GraphOps.pageRank(plantedEdges, tol = 0.0,
-        maxIter = 12, driverFoldMaxRows = 0)
+    val distD = graft.graph.Iterate.distributed(
+        graft.graph.GraphOps.pageRank(plantedEdges, tol = 0.0,
+          maxIter = 12))
       .as[(String, Double)].collect().toMap
     foldD.foreach { case (v, r) =>
       assert(math.abs(r - distD(v)) < 1e-12, s"vertex $v")

@@ -13,10 +13,12 @@ sentinel drift and the raw comparable-total ratio point in opposite
 directions (a suite-wide change moved the sentinels too), the ratios are
 reported raw instead; the `normalization` line says which was used.
 
-When both artifacts carry Bench's per-query Spark job counts (`"jobs"`),
-the job-count deltas print first: at a fixed scale factor and core count
+When both artifacts carry Bench's per-query Spark job counts, the
+job-count deltas print first: at a fixed scale factor and core count
 they do not drift with the host, so they show what changed before any
-wall-time ratio is read.
+wall-time ratio is read. `"jobs"` is the fewest jobs a pass started;
+`"jobs_first"` is the first pass's, the only one that builds a session
+artifact (an IVF, PQ or NSW index), so its delta shows a build.
 
 Usage:
   python3 tools/bench_compare.py OLD NEW [--threshold 1.5]
@@ -41,9 +43,9 @@ KV = re.compile(r'"(q_[a-z0-9_]+)":\s*([0-9][0-9.eE+-]*)')
 
 
 DISC = re.compile(r'"discontinuities"\s*:\s*\{([^}]*)\}')
-# a "jobs" object (possibly cut off by a truncated tail): its integer
-# entries would otherwise read as seconds
-JOBS = re.compile(r'"jobs"\s*:\s*\{([^}]*)\}?')
+# a "jobs" or "jobs_first" object (possibly cut off by a truncated
+# tail): its integer entries would otherwise read as seconds
+JOBS = re.compile(r'"(jobs|jobs_first)"\s*:\s*\{([^}]*)\}?')
 DISC_KEY = re.compile(r'"(q_[a-z0-9_]+)"\s*:')
 
 
@@ -59,7 +61,8 @@ def load_discontinuities(raw):
 
 
 def load_queries(path):
-    """(seconds per query, discontinuous names, job counts per query)"""
+    """(seconds per query, discontinuous names, job counts per query by
+    kind: "jobs" and "jobs_first")"""
     raw = open(path).read()
     disc = load_discontinuities(raw)
     try:
@@ -68,10 +71,11 @@ def load_queries(path):
             if isinstance(doc.get("discontinuities"), dict):
                 disc = set(doc["discontinuities"])  # exact, not regex
             if isinstance(doc.get("queries"), dict):
-                jobs = doc.get("jobs") if isinstance(doc.get("jobs"), dict) else {}
+                jobs = {kind: {k: int(v) for k, v in doc[kind].items()}
+                        for kind in ("jobs", "jobs_first")
+                        if isinstance(doc.get(kind), dict)}
                 return ({k: float(v) for k, v in doc["queries"].items()
-                         if not isinstance(v, dict)}, disc,
-                        {k: int(v) for k, v in jobs.items()})
+                         if not isinstance(v, dict)}, disc, jobs)
             raw = str(doc.get("tail", "")) + raw  # driver wrapper
     except json.JSONDecodeError:
         pass  # raw stdout capture — scan it directly
@@ -79,8 +83,8 @@ def load_queries(path):
     # pass is the one the summary line reports)
     jobs = {}
     for m in JOBS.finditer(raw):
-        for k in KV.finditer(m.group(1)):
-            jobs[k.group(1)] = int(float(k.group(2)))
+        for k in KV.finditer(m.group(2)):
+            jobs.setdefault(m.group(1), {})[k.group(1)] = int(float(k.group(2)))
     out = {}
     for m in KV.finditer(JOBS.sub("", raw)):
         out[m.group(1)] = float(m.group(2))
@@ -89,7 +93,7 @@ def load_queries(path):
     return out, disc, jobs
 
 
-def report_jobs(old, new):
+def report_jobs(old, new, label="spark jobs"):
     """Per-query job-count deltas; returns False when either side has none."""
     shared = sorted(set(old) & set(new))
     if not shared:
@@ -97,7 +101,7 @@ def report_jobs(old, new):
     moved = [(new[q] - old[q], q) for q in shared if new[q] != old[q]]
     tot_o = sum(old[q] for q in shared)
     tot_n = sum(new[q] for q in shared)
-    print(f"spark jobs     : {tot_o} -> {tot_n} over {len(shared)} queries "
+    print(f"{label:<15}: {tot_o} -> {tot_n} over {len(shared)} queries "
           f"({len(moved)} changed)")
     for d, q in sorted(moved, key=lambda m: (-abs(m[0]), m[1])):
         print(f"  {q:<32} {old[q]:5d} -> {new[q]:5d}  ({d:+d})")
@@ -123,7 +127,9 @@ def main():
     (old, disc_o, jobs_o), (new, disc_n, jobs_n) = (load_queries(args[0]),
                                                     load_queries(args[1]))
     disc = disc_o | disc_n
-    report_jobs(jobs_o, jobs_n)
+    report_jobs(jobs_o.get("jobs", {}), jobs_n.get("jobs", {}))
+    report_jobs(jobs_o.get("jobs_first", {}), jobs_n.get("jobs_first", {}),
+                "first-pass jobs")
     shared = sorted(set(old) & set(new))
     if not shared:
         sys.exit("no shared queries between the two artifacts")
