@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -434,13 +434,4 @@ object CorpusFunctions {
     column(AcMaskPhrases(expression(c), patterns, mask))
   def ac_hit_positions(c: Column, patterns: Seq[String]): Column =
     column(AcHitPositions(expression(c), patterns))
-
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("doc_fingerprint", es => DocFingerprint(es.head), "built-in")
-    reg.createOrReplaceTempFunction("lang_id", es => LangId(es.head), "built-in")
-    reg.createOrReplaceTempFunction("token_count_bpeish", es => TokenCountBpeIsh(es.head), "built-in")
-    reg.createOrReplaceTempFunction("deflate_len", es => DeflateLen(es.head), "built-in")
-  }
 }

@@ -72,14 +72,6 @@ object TextKernels {
     s.replace("https://doi.org/", "").replace("doi.org/", "")
   }
 
-  /** Crossref DOI pattern used by the reference (`doi.py:31`), applied with
-    * `search` semantics, case-insensitive. Java regex supports the lookahead.
-    */
-  val DoiPattern = "(?i)10\\.\\d{4,9}/(?=.*\\d)[-._;()/:A-Z0-9]+$".r.pattern
-
-  def isValidDoi(doi: String): Boolean =
-    doi != null && DoiPattern.matcher(doi).find()
-
   /** Python str.title(): capitalize the first letter of every run of cased
     * characters, lowercase the rest. (NOT Spark initcap — Python titles on
     * ANY non-letter boundary: "plazas-nino" -> "Plazas-Nino".)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.Bridge.{column, expression}
@@ -87,7 +87,9 @@ case class NameSimilarityUpper(left: Expression, right: Expression)
   override def prettyName: String = "name_similarity_upper"
 }
 
-/** Column-level API + SQL registration for the custom expressions. */
+/** Column-level API for the custom expressions; `GraftExtensions` injects
+  * their SQL names.
+  */
 object TextFunctions {
   def clean_html(c: Column): Column = column(CleanHtml(expression(c)))
   def normalize_doi(c: Column): Column = column(NormalizeDoi(expression(c)))
@@ -103,13 +105,4 @@ object TextFunctions {
     */
   def valid_doi(c: Column): Column =
     c.isNotNull && c.rlike("(?i)10\\.\\d{4,9}/(?=.*\\d)[-._;()/:A-Z0-9]+$")
-
-  /** Register SQL-callable names (clean_html, normalize_doi, ...). */
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("clean_html", es => CleanHtml(es.head), "built-in")
-    reg.createOrReplaceTempFunction("normalize_doi", es => NormalizeDoi(es.head), "built-in")
-    reg.createOrReplaceTempFunction("python_title", es => PythonTitle(es.head), "built-in")
-    reg.createOrReplaceTempFunction("name_similarity", es => NameSimilarity(es(0), es(1)), "built-in")
-  }
 }

@@ -159,16 +159,14 @@ object EntityResolution {
         lit(null).cast("string").as("openalex"))
   }
 
-  /** Output (article) dedup by DOI (J7): returns only articles whose DOI is
-    * not yet in the outputs table, with a deterministic uuid minted from the
-    * DOI. Reference models.py:165-168 skips creation on DOI match.
+  /** Output (article) node rows: one per DOI, with a deterministic uuid
+    * minted from the DOI. The dedup against stored outputs (J7; reference
+    * models.py:165-168 skips creation on DOI match) is the store's:
+    * `GraphStore.upsertNodes` anti-joins on `doi`.
     */
-  def newOutputs(parsed: DataFrame, outputs: DataFrame): DataFrame = {
-    parsed
-      .join(outputs.select("doi"), Seq("doi"), "left_anti")
-      .dropDuplicates("doi")
+  def outputRows(parsed: DataFrame): DataFrame =
+    parsed.dropDuplicates("doi")
       .withColumn("uuid", mintUuid(concat(lit("output:"), col("doi"))))
-  }
 
   /** author_of edge rows (J2): resolved mentions × new outputs, with rank.
     * MERGE semantics = dropDuplicates on the full edge key (S8).

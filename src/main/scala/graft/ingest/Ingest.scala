@@ -78,10 +78,7 @@ object Ingest {
     // 3. outputs: deterministic uuid from the DOI; insert-if-absent, or in
     //    update mode a merge-on-key property refresh (doi.py:215-250)
     val newOut = described("ingest: outputs") {
-      val newOut = parsed.dropDuplicates("doi")
-        .withColumn("uuid",
-          EntityResolution.mintUuid(concat(lit("output:"), col("doi"))))
-        .localCheckpoint(true)
+      val newOut = EntityResolution.outputRows(parsed).localCheckpoint(true)
       if (update) store.mergeNodes("outputs", newOut, key = "doi")
       else store.upsertNodes("outputs", newOut, key = "doi")
       newOut

@@ -279,10 +279,8 @@ object Dedup {
   }
 
   /** MinHash LSH index of a corpus, for INCREMENTAL near-dup
-    * ([[nearDupAgainstIndex]]) — the batch twin of the streaming band-state
-    * matcher ([[graft.streaming.Streams]]). Two tables, mirroring the
-    * streaming state-size lesson (a signature must not be replicated per
-    * band):
+    * ([[nearDupAgainstIndex]]). Two tables, so that a signature is not
+    * replicated per band:
     *
     *  - `buckets` (band, bucket, doc_id): 16 bytes + id per band-doc — at
     *    100 TB persist bucketed by (band, bucket)

@@ -4,19 +4,19 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Persistence for the build-once/probe-many index artifacts
   * ([[Dedup.MinHashIndex]], [[Similarity.IvfIndex]]/[[Similarity.IvfIndexQ]],
-  * [[Similarity.PqCodebooks]], [[TextAnalysis.PostingsIndex]],
-  * [[TextAnalysis.NbModel]]) — the session-pinned (`localCheckpoint`)
-  * builders become durable artifacts a deployment writes ONCE and probes
-  * from every later job/day, exactly the layout each builder's docstring
-  * promises:
+  * [[Similarity.NswIndex]], [[Similarity.PqCodebooks]],
+  * [[TextAnalysis.PostingsIndex]], [[Pipelines.CorpusState]]) — the
+  * session-pinned (`localCheckpoint`) builders become durable artifacts a
+  * deployment writes ONCE and probes from every later job/day, exactly the
+  * layout each builder's docstring promises:
   *
   *  - corpus-sized tables land BUCKETED on their probe-join key
   *    (minhash buckets on (band, bucket); IVF cells on center_id; postings
   *    on term; doc lengths on the doc id), so every subsequent probe join
   *    shuffles ONLY the query/batch side — the bucketed side reads
   *    pre-shuffled, zero Exchange (asserted in IndexStoreSpec).
-  *  - dimension-sized tables (centroids, codebooks, df table, stats, NB
-  *    model) land as plain tables; they broadcast at probe time anyway.
+  *  - dimension-sized tables (centroids, codebooks, df table, stats)
+  *    land as plain tables; they broadcast at probe time anyway.
   *  - artifact scalars (PQ's m/subDim, the postings id column) ride a
   *    1-row `<prefix>_meta` table so `read*` restores the exact object.
   *
@@ -958,63 +958,4 @@ object IndexStore {
       hwNew
     }
   }
-
-  // --- tokenizer models --------------------------------------------------
-
-  /** Persist a trained BPE merge table (vocab-sized — plain table; it
-    * rides the encode closure, never a join).
-    */
-  def writeBpeModel(spark: SparkSession, merges: Seq[(String, String)],
-                    prefix: String, path: Option[String] = None): Unit =
-    writeSmallTable(Tokenize.mergesDf(spark, merges),
-      s"${prefix}_merges", path)
-
-  def readBpeModel(spark: SparkSession, prefix: String): Seq[(String, String)] =
-    spark.table(s"${prefix}_merges").orderBy("rank")
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-
-  /** Persist a trained unigram-LM piece table (vocab-sized). */
-  def writeUnigramModel(spark: SparkSession, pieces: Seq[(String, Double)],
-                        prefix: String, path: Option[String] = None): Unit =
-    writeSmallTable(Tokenize.piecesDf(spark, pieces),
-      s"${prefix}_pieces", path)
-
-  def readUnigramModel(spark: SparkSession,
-                       prefix: String): Seq[(String, Double)] =
-    spark.table(s"${prefix}_pieces")
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-      .sortBy { case (p, l) => (-l, p) }
-
-  // --- Naive Bayes model -------------------------------------------------
-
-  /** Persist a [[TextAnalysis.NbModel]] (both tables are
-    * vocabulary/label-sized — plain tables; they broadcast at score time).
-    */
-  def writeNbModel(model: TextAnalysis.NbModel, prefix: String,
-                   path: Option[String] = None): Unit = {
-    writeSmallTable(model.classes, s"${prefix}_classes", path)
-    writeSmallTable(model.terms, s"${prefix}_terms", path)
-  }
-
-  def readNbModel(spark: SparkSession, prefix: String): TextAnalysis.NbModel =
-    TextAnalysis.NbModel(spark.table(s"${prefix}_classes"),
-      spark.table(s"${prefix}_terms"))
-
-  // --- decontamination eval-shingle index ---------------------------------
-
-  /** Persist a [[Dedup.evalShingleIndex]] — the decontamination state a
-    * release pipeline (and [[graft.streaming.Streams
-    * .decontaminationGatedIngest]]) probes every batch against: bucketed
-    * on `_shingle`, the probe-join key, so each batch's join shuffles
-    * only the batch side. Benchmarks change rarely; write once per
-    * benchmark revision.
-    */
-  def writeEvalShingleIndex(index: DataFrame, prefix: String,
-                            buckets: Int = 8,
-                            path: Option[String] = None): Unit =
-    writeBucketedTable(index, s"${prefix}_evalshingles",
-      Seq("_shingle"), buckets, path)
-
-  def readEvalShingleIndex(spark: SparkSession, prefix: String): DataFrame =
-    spark.table(s"${prefix}_evalshingles")
 }

@@ -6,9 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
 /** Batch sessionization: split each key's event stream into sessions at
-  * inactivity gaps — the batch twin of the streaming
-  * `Streams.sessionize` (mapGroupsWithState) path, for backfills and
-  * reprocessing over historical data.
+  * inactivity gaps, over historical data.
   *
   * Shape: ONE shuffle on the keys, then two window passes over the same
   * (keys, ts) sort order — Catalyst reuses the single sort for both: a lag

@@ -129,8 +129,8 @@ object Sketches {
     *                       estimator answers); else the Beyer et al.
     *                       estimator floor((k−1)·2⁶⁰ / kth_hash60),
     *                       computed in DECIMAL so it cannot overflow,
-    *                       with the streaming twin's kth == 0 guard
-    *                       (degenerate all-zero-hash sketch → k_eff).
+    *                       with a kth == 0 guard (degenerate
+    *                       all-zero-hash sketch → k_eff).
     *
     * 60-bit hashing keeps collision odds negligible below ~10⁹ distinct
     * keys ([[overlapEstimate]]'s convention); null values are skipped on

@@ -20,7 +20,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => RangeJoinRewrite)
     // SQL-callable kernel expressions, injected at session build so every
     // extension-configured session (including thrift/connect ones that
-    // never touch the Scala API) gets them without a registerAll call
+    // never touch the Scala API) gets them
     def info(name: String, clazz: Class[_]) =
       new ExpressionInfo(clazz.getName, name)
     ext.injectFunction((FunctionIdentifier("clean_html"),

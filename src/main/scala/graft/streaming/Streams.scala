@@ -1,377 +1,33 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import graft.Pins
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 
 /** Structured Streaming surface.
   *
   * The reference is a batch CLI — its only "stream" is the sequential
-  * per-DOI ingest loop (SURVEY.md §2.10). Two streaming capabilities:
+  * per-DOI ingest loop (SURVEY.md §2.10). Every stream here is an
+  * AvailableNow `foreachBatch` query that runs already-certified batch
+  * operators on each micro-batch:
   *
   *  1. [[doiLandingIngest]] — the reference ingest loop as an incremental
-  *     pipeline: DOI-list files land in a directory; each micro-batch runs
-  *     the same batch dataflow. Idempotent by construction (the dedup
-  *     anti-joins J1/J7 make redelivery safe), Trigger.AvailableNow for
-  *     catch-up-then-stop semantics.
-  *  2. [[tumblingCounts]] / [[sessionize]] — event-stream analytics for
-  *     the training-data pipeline: watermarked tumbling-window aggregates
-  *     and gap-based sessionization with typed state
-  *     (flatMapGroupsWithState), the canonical stateful-op shapes.
+  *     pipeline: DOI-list files land in a directory and each micro-batch
+  *     runs `Ingest.run`.
+  *  2. [[decontaminationGatedIngest]] — the eval-leakage gate at landing.
+  *  3. index maintenance: [[ivfAppendIngest]], [[ivfQAppendIngest]],
+  *     [[ivfPqAppendIngest]], [[bm25AppendIngest]] and
+  *     [[nswAppendIngest]] land each batch as a delta partition of a
+  *     persisted index plus a drift-audit row set.
+  *  4. curated landing: [[curatedLandingIngest]] and
+  *     [[curatedDeltaLandingIngest]] run `Pipelines.curateBatch` per
+  *     batch against the persisted state of everything admitted before.
+  *
+  * Streams 2-4 write their per-batch parquet sinks through
+  * [[writeBatchIdempotent]].
   */
 object Streams {
-
-  /** Watermarked tumbling-window counts per event type — streaming
-    * equivalent of SparkEntry q_tumbling_window.
-    */
-  def tumblingCounts(events: DataFrame, window_ : String = "1 hour",
-                     watermark: String = "2 hours"): DataFrame = {
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")), 2).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_events"), col("sum_value"))
-  }
-
-  /** Watermarked HOPPING-window counts (overlapping windows: width >
-    * slide) — streaming equivalent of SparkEntry q_sliding_window. Same
-    * bounded state as tumbling: the per-event fan-out (width/slide rows)
-    * happens before the stateful agg, and the watermark retires whole
-    * windows as event time passes window.end + watermark.
-    */
-  def hoppingCounts(events: DataFrame, window_ : String = "10 minutes",
-                    slide: String = "5 minutes",
-                    watermark: String = "2 hours"): DataFrame = {
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_, slide), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")), 2).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_events"), col("sum_value"))
-  }
-
-  case class Event(event_id: Long, ts: Timestamp, user_id: Long,
-                   event_type: String, value: Double)
-  case class SessionState(start: Long, lastSeen: Long, nEvents: Int,
-                          totalValue: Double)
-  case class Session(user_id: Long, session_start: Timestamp,
-                     session_end: Timestamp, n_events: Int,
-                     total_value: Double)
-
-  /** Gap-based sessionization: a user's session closes after `gapMs` of
-    * inactivity (event-time, driven by the watermark). Typed state via
-    * flatMapGroupsWithState — the custom-state shape that windowed aggs
-    * can't express.
-    */
-  def sessionize(events: Dataset[Event], gapMs: Long = 30 * 60 * 1000L,
-                 watermark: String = "2 hours"): Dataset[Session] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[SessionState]) =>
-          if (batch.isEmpty && state.hasTimedOut) {
-            // session closed by watermark passing the gap
-            val s = state.get
-            state.remove()
-            Iterator.single(Session(userId, new Timestamp(s.start),
-              new Timestamp(s.lastSeen), s.nEvents, s.totalValue))
-          } else {
-            val sorted = batch.toSeq.sortBy(_.ts.getTime)
-            var closed = List.empty[Session]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.lastSeen <= gapMs =>
-                  cur = Some(s.copy(lastSeen = math.max(s.lastSeen, t),
-                    nEvents = s.nEvents + 1,
-                    totalValue = s.totalValue + e.value))
-                case Some(s) =>
-                  closed ::= Session(userId, new Timestamp(s.start),
-                    new Timestamp(s.lastSeen), s.nEvents, s.totalValue)
-                  cur = Some(SessionState(t, t, 1, e.value))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, e.value))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.lastSeen + gapMs)
-            }
-            closed.reverseIterator
-          }
-      }
-  }
-
-  case class DocEvent(doc_id: Long, ts: Timestamp, text: String)
-  case class NearDupMatch(doc_id: Long, matched_id: Long,
-                          est_jaccard: Double, band: Int)
-  /** Bucket entries hold a 1-byte-per-hash SKETCH of the signature, not
-    * the signature itself: each doc's state footprint is bands×numHashes
-    * bytes (16×128 = 2 KB at the defaults) instead of bands×numHashes
-    * longs (16 KB) — the full signature only rides the transient shuffle,
-    * never the state store.
-    */
-  case class BucketState(entries: List[(Long, Array[Byte], Long)])
-
-  /** Streaming NEAR-duplicate detection: the incremental form of
-    * [[graft.ops.Dedup.minhashLsh]] — arriving documents are checked
-    * against everything previously seen in their MinHash band buckets,
-    * with bucket state evicted by event-time TTL.
-    *
-    * Shape: one narrow pass computes the signature, band keys fan out
-    * (`bands` rows per doc), and each (band, bucket) group holds a
-    * byte-per-hash sketch of the signatures previously routed to it
-    * (`flatMapGroupsWithState` — see [[BucketState]] for the state-size
-    * math). A new doc emits one match row per bucket entry whose estimated
-    * signature agreement ≥ threshold; the estimate compares the arrival's
-    * full signature against the stored low-byte sketch and debiases the
-    * 1/256 accidental-collision term, so `est_jaccard` carries ≤ 0.4%
-    * sketch bias on top of the usual minhash estimator noise. A doc
-    * matching in several bands emits per band (an at-least-once candidate
-    * stream; collapse downstream with `dropDuplicatesWithinWatermark` if
-    * exactly-once candidates matter).
-    *
-    * State is bounded two ways: event-time timeout drops buckets idle past
-    * `stateTtl`, and `maxEntries` caps a pathological hot bucket (oldest
-    * entries evicted first — boilerplate-heavy buckets degrade recall
-    * before they degrade the cluster, the same trade the batch df-cap
-    * makes).
-    */
-  def nearDupMatches(docs: Dataset[DocEvent], threshold: Double = 0.8,
-                     shingleK: Int = 5, numHashes: Int = 128,
-                     bands: Int = 16, watermark: String = "2 hours",
-                     stateTtlMs: Long = 24L * 3600 * 1000,
-                     maxEntries: Int = 1000): Dataset[NearDupMatch] = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-    val spark = docs.sparkSession
-    import graft.functions.CorpusFunctions.minhash_sig
-    import spark.implicits._
-    val sig = docs.toDF()
-      .withWatermark("ts", watermark)
-      .select(col("doc_id"), col("ts"),
-        minhash_sig(col("text"), shingleK, numHashes).as("sig"))
-    val bandKeys = array((0 until bands).map(b =>
-      hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))): _*)
-    sig
-      .select(col("doc_id"), col("ts"), col("sig"),
-        posexplode(bandKeys).as(Seq("band", "bucket")))
-      .as[(Long, Timestamp, Seq[Long], Int, Int)]
-      .groupByKey(r => (r._4, r._5))
-      .flatMapGroupsWithState[BucketState, NearDupMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Int, Int), batch: Iterator[(Long, Timestamp, Seq[Long], Int, Int)],
-         state: GroupState[BucketState]) =>
-          if (batch.isEmpty && state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // deterministic replay order inside the micro-batch
-            val arrivals = batch.toSeq.sortBy(r => (r._2.getTime, r._1))
-            var entries = state.getOption.map(_.entries).getOrElse(Nil)
-            val out = List.newBuilder[NearDupMatch]
-            arrivals.foreach { case (id, ts, s, band, _) =>
-              entries.foreach { case (seenId, seenSketch, _) =>
-                if (seenId != id) {
-                  // arrival's full signature vs the stored low-byte
-                  // sketch; debias the 1/256 accidental byte collisions
-                  val obs = s.iterator.zip(seenSketch.iterator)
-                    .count { case (a, b) => (a & 0xffL).toByte == b }
-                    .toDouble / numHashes
-                  val agree = math.max(0.0, (obs - 1.0 / 256) / (1 - 1.0 / 256))
-                  if (agree >= threshold)
-                    out += NearDupMatch(id, seenId, agree, band)
-                }
-              }
-              val sketch = s.iterator.map(v => (v & 0xffL).toByte).toArray
-              entries = ((id, sketch, ts.getTime) :: entries).take(maxEntries)
-            }
-            val latest = entries.map(_._3).max
-            state.update(BucketState(entries))
-            state.setTimeoutTimestamp(latest + stateTtlMs)
-            out.result().iterator
-          }
-      }
-  }
-
-  case class ImageEvent(asset_id: Long, ts: Timestamp, bytes: Array[Byte])
-  case class ImageNearDup(asset_id: Long, matched_id: Long, hamming: Int,
-                          band: Int)
-  /** Per-(band, key) state of [[imageNearDupMatches]]: (id, hash64, ts)
-    * entries — 24 bytes each, the whole 64-bit hash (unlike the MinHash
-    * sketch there is nothing to slim; the hash IS 8 bytes).
-    */
-  case class HashBucketState(entries: List[(Long, Long, Long)])
-
-  /** Streaming IMAGE near-duplicate detection — the incremental form of
-    * [[graft.ops.Multimodal.imageNearDups]]: arriving images are decoded
-    * (real ImageIO → dHash, per micro-batch, embarrassingly parallel),
-    * their 64-bit hash fans out to the Manku pigeonhole bands
-    * (`maxHamming`+1 bands — any qualifying pair agrees on ≥ 1 full
-    * band), and each (band, key) group holds the hashes previously routed
-    * to it. A new image emits one match row per stored entry within
-    * `maxHamming` bits (exact `bitCount`, not an estimate — unlike the
-    * MinHash matcher there is no sketch error). Matching in several bands
-    * emits per band: an at-least-once candidate stream, collapse with
-    * `dropDuplicatesWithinWatermark` downstream if needed.
-    *
-    * Undecodable payloads are dropped before the stateful stage (null
-    * hash — no pixel signal, same policy as the batch operator). State is
-    * bounded by event-time TTL + the `maxEntries` hot-bucket cap,
-    * mirroring [[nearDupMatches]].
-    */
-  def imageNearDupMatches(images: Dataset[ImageEvent], maxHamming: Int = 6,
-                          watermark: String = "2 hours",
-                          stateTtlMs: Long = 24L * 3600 * 1000,
-                          maxEntries: Int = 1000): Dataset[ImageNearDup] = {
-    require(maxHamming >= 0 && maxHamming < 32)
-    val nBands = maxHamming + 1
-    val bandBits = 64 / nBands
-    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
-    val spark = images.sparkSession
-    import spark.implicits._
-    images
-      .mapPartitions { it => // codec init amortizes per partition-batch
-        it.flatMap { e =>
-          graft.ops.Multimodal.tryDecodeImage(e.bytes)
-            .map(img => (e.asset_id, e.ts,
-              graft.ops.Multimodal.dHash64(img)))
-        }
-      }
-      .toDF("asset_id", "ts", "hash64")
-      .withWatermark("ts", watermark)
-      .select(col("asset_id"), col("ts"), col("hash64"),
-        posexplode(array((0 until nBands).map(b =>
-          shiftrightunsigned(col("hash64"), b * bandBits)
-            .bitwiseAND(lit(mask))): _*)).as(Seq("band", "key")))
-      .as[(Long, Timestamp, Long, Int, Long)]
-      .groupByKey(r => (r._4, r._5))
-      .flatMapGroupsWithState[HashBucketState, ImageNearDup](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Int, Long), batch: Iterator[(Long, Timestamp, Long, Int, Long)],
-         state: GroupState[HashBucketState]) =>
-          if (batch.isEmpty && state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val arrivals = batch.toSeq.sortBy(r => (r._2.getTime, r._1))
-            var entries = state.getOption.map(_.entries).getOrElse(Nil)
-            val out = List.newBuilder[ImageNearDup]
-            arrivals.foreach { case (id, ts, h, band, _) =>
-              entries.foreach { case (seenId, seenHash, _) =>
-                if (seenId != id) {
-                  val d = java.lang.Long.bitCount(h ^ seenHash)
-                  if (d <= maxHamming) out += ImageNearDup(id, seenId, d, band)
-                }
-              }
-              entries = ((id, h, ts.getTime) :: entries).take(maxEntries)
-            }
-            val latest = entries.map(_._3).max
-            state.update(HashBucketState(entries))
-            state.setTimeoutTimestamp(latest + stateTtlMs)
-            out.result().iterator
-          }
-      }
-  }
-
-  /** Stream-static enrichment join: a streaming event feed joined to a
-    * (slowly-changing) dimension table. Catalyst broadcasts the static
-    * side per micro-batch when small — the standard shape for decorating
-    * a 100 TB/day event stream with reference data without stateful
-    * stream-stream joins.
-    */
-  def enrichedEvents(events: DataFrame, dim: DataFrame,
-                     key: String): DataFrame =
-    events.join(dim, Seq(key), "left_outer")
-
-  /** Stream-STREAM interval join: clicks attributed to the view (same
-    * user) they followed within `attributionWindow`. Both sides carry
-    * watermarks and the join condition bounds event-time from both ends,
-    * so Spark derives a state-retention horizon for each side — state is
-    * evicted as the watermark advances instead of growing forever (the
-    * condition every production stream-stream join must satisfy).
-    *
-    * Inner join: a click emits once per qualifying view; unmatched clicks
-    * drop (left-outer would emit them after the watermark horizon).
-    */
-  def attributedClicks(clicks: DataFrame, views: DataFrame,
-                       watermark: String = "1 hour",
-                       attributionWindow: String = "30 minutes"): DataFrame = {
-    val c = clicks
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", watermark)
-    val v = views
-      .select(col("event_id").as("view_id"),
-        col("user_id").as("view_user_id"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", watermark)
-    c.join(v,
-      col("user_id") === col("view_user_id") &&
-        col("click_ts") >= col("view_ts") &&
-        col("click_ts") <= col("view_ts") + expr(s"INTERVAL $attributionWindow"))
-      .select("click_id", "view_id", "user_id", "click_ts", "view_ts")
-  }
-
-  /** Streaming exact dedup within the watermark: drop redelivered events
-    * by key, state expiring with the watermark (bounded state — the
-    * at-least-once -> effectively-once repair stage in front of any
-    * downstream aggregation).
-    */
-  def dedupedEvents(events: DataFrame, watermark: String = "2 hours",
-                    keys: Seq[String] = Seq("event_id")): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keys)
-
-  /** Incremental DOI ingest: watch a landing directory of DOI-list files,
-    * run the batch dataflow per micro-batch. AvailableNow processes the
-    * backlog and stops — the streaming re-expression of the reference CLI
-    * loop (create_graph_from_doi.py:218-254) with exactly-once-per-DOI
-    * effects via the pipeline's own dedup joins.
-    */
-  /** Streaming classifier gate: score each arriving document micro-batch
-    * against a PRE-TRAINED Naive Bayes model (the train-once/score-forever
-    * deployment of [[graft.ops.TextAnalysis.classifyNaiveBayes]]) and
-    * append the scored rows to a parquet tree. The per-doc explode +
-    * aggregate is not expressible as a bounded-state unbounded stream
-    * aggregation — and doesn't need to be: every doc is whole within its
-    * micro-batch, so `foreachBatch` applies the already-certified BATCH
-    * operator per batch (the standard pattern for batch-certified
-    * transforms in a stream; same shape as [[doiLandingIngest]]). The
-    * model tables are pinned once and re-read by every batch — zero
-    * retrain cost on the stream path.
-    *
-    * Output is partitioned by `batch_id` and written with
-    * [[writeBatchIdempotent]], so a replayed micro-batch rewrites its own
-    * partition — exactly-once output under the checkpoint.
-    */
-  def classifiedDocsIngest(docs: DataFrame,
-                           model: graft.ops.TextAnalysis.NbModel,
-                           outPath: String, checkpoint: String,
-                           idCol: String = "doc_id",
-                           textCol: String = "text"): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          writeBatchIdempotent(
-            graft.ops.TextAnalysis.classifyNaiveBayes(batch, model,
-              idCol, textCol), batchId, outPath)
-        }
-      }
-      .start()
 
   /** Idempotent per-micro-batch parquet sink: stamp `batch_id`, partition
     * by it, and DYNAMICALLY overwrite — only the partitions present in
@@ -390,33 +46,6 @@ object Streams {
       .partitionBy("batch_id")
       .parquet(outPath)
   }
-
-  /** Streaming BLOCKLIST gate: arriving documents containing any listed
-    * word ([[graft.ops.CorpusOps.flagBlocklisted]] — word-level,
-    * broadcast list) are dropped per micro-batch and the survivors
-    * appended — the C4 filter as a landing gate. foreachBatch because
-    * the gate is per-document (no cross-batch state at all); survivors
-    * land via [[writeBatchIdempotent]] (dynamic overwrite of this batch's
-    * `batch_id` partition), so replayed batches rewrite rather than
-    * duplicate — exactly-once output under the checkpoint.
-    */
-  def blocklistGatedIngest(docs: DataFrame, blocklist: DataFrame,
-                           outPath: String, checkpoint: String,
-                           idCol: String = "doc_id",
-                           textCol: String = "text"): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          writeBatchIdempotent(
-            batch.join(
-              graft.ops.CorpusOps.flagBlocklisted(batch, blocklist,
-                idCol, textCol).select(idCol),
-              Seq(idCol), "left_anti"), batchId, outPath)
-        }
-      }
-      .start()
 
   /** Streaming DECONTAMINATION gate: arriving documents sharing at least
     * `minSharedShingles` word-n-grams with ANY eval/benchmark document
@@ -482,8 +111,8 @@ object Streams {
   }
 
   /** Streaming ANN INDEX MAINTENANCE — the IVF append path run
-    * continuously as vectors land (the 14th streaming op; the
-    * [[curatedLandingIngest]] discipline applied to the vector tier):
+    * continuously as vectors land (the [[curatedLandingIngest]]
+    * discipline applied to the vector tier):
     * every micro-batch routes against the PERSISTED index's frozen
     * centroids ([[graft.ops.Similarity.ivfAssign]] — the real append
     * path, no Lloyd re-run) and lands two sinks, both via
@@ -745,169 +374,6 @@ object Streams {
       }
       .start()
 
-  /** Streaming DRIFT MONITOR: score every arriving micro-batch against a
-    * STATIC reference snapshot with the binned KS gate
-    * ([[graft.ops.CorpusOps.ksDrift]]) and append one audit row per
-    * batch — the admit-or-hold check run continuously as data lands
-    * (alert when `max_cross_diff` exceeds `threshold × n_a × n_b` in
-    * exact integer arithmetic; the appended table IS the drift log).
-    * foreachBatch because the statistic needs the whole batch against
-    * the whole reference — not expressible as bounded keyed state — and
-    * batches are complete units by construction. One audit row per
-    * batch, written via [[writeBatchIdempotent]] — a replayed batch
-    * rewrites its own `batch_id` partition, so the drift log stays
-    * duplicate-free.
-    */
-  def driftMonitor(stream: DataFrame, reference: DataFrame,
-                   valueCol: String, outPath: String, checkpoint: String,
-                   bins: Int = 64): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          writeBatchIdempotent(
-            graft.ops.CorpusOps.ksDrift(batch, reference, valueCol, bins),
-            batchId, outPath)
-        }
-      }
-      .start()
-
-  case class KeyedValue(group: String, value: String)
-  case class KmvState(hashes: Array[Long])
-  /** `expired = true` marks the TTL's final emission ("state dropped —
-    * a later redelivery restarts this group's count"); normal updates
-    * are false, so the deliberate forget is OBSERVABLE in the sink
-    * instead of schema-identical to a live row.
-    */
-  case class KmvEstimate(group: String, k_eff: Int, kth_hash60: Long,
-                         approx_distinct: Long, expired: Boolean = false)
-
-  /** Streaming DISTINCT-COUNT monitor — the KMV bottom-k sketch
-    * ([[graft.ops.Sketches.kmvDistinct]]) as typed streaming state:
-    * per group the state is the k smallest distinct 60-bit md5 hashes
-    * seen so far (O(k) longs, bounded FOREVER — the reason a bottom-k
-    * beats `dropDuplicates` for "how many distinct users/urls/ids so
-    * far", whose state grows with the true cardinality), and every
-    * trigger emits the group's refreshed integer estimate: EXACT while
-    * distinct ≤ k, the Beyer et al. estimator beyond. Bottom-k is a
-    * semilattice, so the state merge is lossless and arrival
-    * order/redelivery cannot change it (idempotent under replay).
-    * mapGroupsWithState, Update output mode — the state-store twin of
-    * the batch partials → merge path, sharing its hash lattice
-    * (first 15 md5 hex digits = md5Hash64 >>> 4).
-    *
-    * Per-group state is O(k) but the GROUP COUNT is unbounded — a
-    * monitor over a high-cardinality key (urls, session ids) would grow
-    * the state store forever. `idleTimeoutMs` bounds it: a group that
-    * receives no rows for that long EXPIRES — it emits one final
-    * estimate flagged `expired = true` (so a consumer can tell the
-    * deliberate forget from a live update) and its state is dropped
-    * (processing-time timeout). A
-    * value redelivered AFTER expiry restarts the group's count from
-    * zero — the documented trade of the TTL (idempotence holds within a
-    * group's lifetime; expiry is a deliberate forget). Default: no
-    * timeout, the prior semantics exactly. With a TTL set, pair the
-    * query with a processing-time trigger interval: timeout sweeps run
-    * as no-data batches on the trigger cadence (and starve
-    * `processAllAvailable`-style quiescence waits, which is why the
-    * spec polls the sink instead).
-    */
-  def distinctMonitor(rows: Dataset[KeyedValue], k: Int = 1024,
-                      idleTimeoutMs: Option[Long] = None): Dataset[KmvEstimate] = {
-    require(k > 0, s"k must be > 0, got $k")
-    require(idleTimeoutMs.forall(_ > 0),
-      s"idleTimeoutMs must be positive, got $idleTimeoutMs")
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val timeoutConf = idleTimeoutMs
-      .map(_ => GroupStateTimeout.ProcessingTimeTimeout)
-      .getOrElse(GroupStateTimeout.NoTimeout)
-    rows.groupByKey(_.group)
-      .mapGroupsWithState[KmvState, KmvEstimate](timeoutConf) {
-        (group: String, batch: Iterator[KeyedValue],
-         state: GroupState[KmvState]) =>
-          def estimate(merged: Array[Long],
-                       expired: Boolean = false): KmvEstimate = {
-            val kEff = merged.length
-            val kth = if (kEff == 0) 0L else merged(kEff - 1)
-            val est =
-              if (kEff < k || kth == 0L) kEff.toLong
-              else (BigInt(k - 1) * BigInt(1152921504606846976L) / kth)
-                .toLong
-            KmvEstimate(group, kEff, kth, est, expired)
-          }
-          if (state.hasTimedOut) {
-            // idle group: publish the final estimate FLAGGED as the
-            // TTL's deliberate forget, drop the state
-            val last = state.getOption.map(_.hashes)
-              .getOrElse(Array.empty[Long])
-            state.remove()
-            estimate(last, expired = true)
-          } else {
-            // bounded merge (the MinKAgg discipline): a capped TreeSet
-            // insert keeps per-trigger work O(batch log k) and memory
-            // O(k) — never materialize/sort the whole batch, that's the
-            // state blowup this sketch exists to avoid
-            val set = scala.collection.mutable.TreeSet.empty[Long]
-            state.getOption.foreach(_.hashes.foreach(set.add))
-            batch.foreach { r =>
-              if (r.value != null) {
-                val h = graft.functions.CorpusKernels.md5Hash64(r.value) >>> 4
-                if (set.size < k) set.add(h)
-                else if (h < set.last && set.add(h)) set.remove(set.last)
-              }
-            }
-            val merged = set.toArray
-            state.update(KmvState(merged))
-            idleTimeoutMs.foreach(ms => state.setTimeoutDuration(ms))
-            estimate(merged)
-          }
-      }
-  }
-
-  /** Streaming DATA-QUALITY gate: every arriving micro-batch is
-    * evaluated against a declarative expectation suite
-    * ([[graft.ops.Profile.checkExpectations]] — the Deequ shape) and
-    * routed whole: a batch with ZERO violations lands in `outPath`, a
-    * failing batch is QUARANTINED intact in `rejectPath` (admission is
-    * all-or-nothing per batch — the production contract for corpus
-    * promotion: never promote a partially-bad drop, never lose the
-    * evidence), and the per-check report (n_rows, n_violations) appends
-    * to `auditPath` either way — the audit log IS the quality history.
-    *
-    * foreachBatch because the suite aggregates whole batches (batches
-    * are complete drops by construction, as [[driftMonitor]]); the
-    * routing decision reads the checks-many report rows on the driver
-    * (bounded by the suite size, never by data). All three sinks write
-    * via [[writeBatchIdempotent]] — a replayed batch rewrites its own
-    * `batch_id` partition in whichever sink it routes to, so output
-    * stays exactly-once under the checkpoint even though the decision
-    * re-runs.
-    */
-  def expectationGatedIngest(docs: DataFrame,
-                             checks: Seq[graft.ops.Profile.Expectation],
-                             outPath: String, rejectPath: String,
-                             auditPath: String, checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checks.nonEmpty, "empty expectation suite")
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val report = graft.ops.Profile.checkExpectations(batch, checks)
-            .localCheckpoint(true) // evaluated once, read twice below
-          val bad = report.agg(sum(col("n_violations")))
-            .head().getLong(0) > 0L
-          writeBatchIdempotent(report, batchId, auditPath)
-          writeBatchIdempotent(batch, batchId,
-            if (bad) rejectPath else outPath)
-          Pins.release(report)
-        }
-      }
-      .start()
-  }
-
   /** Newest persisted [[graft.ops.Pipelines.CorpusState]] generation
     * strictly BEFORE `batchId` (None when no prior generation exists).
     * Generations are the catalog tables `<prefix>_g<N>_…` written by
@@ -1079,6 +545,19 @@ object Streams {
       }
       .start()
 
+  /** Incremental DOI ingest: watch a landing directory of DOI-list files,
+    * run the batch dataflow (`Ingest.run`) per micro-batch. AvailableNow
+    * processes the backlog and stops — the streaming re-expression of the
+    * reference CLI loop (create_graph_from_doi.py:218-254).
+    *
+    * Replay is safe only after a complete batch: the dedup anti-joins
+    * then find every DOI stored, so a replay creates nothing. It is not
+    * idempotent under partial writes: `foreachBatch` replays a batch that
+    * failed part-way, and if the outputs were appended but not the
+    * authors, the replay marks those DOIs existing and never creates
+    * their authors or edges (ROADMAP.md, the crash-consistent warehouse
+    * item).
+    */
   def doiLandingIngest(spark: SparkSession, landingDir: String,
                        payloads: DataFrame, store: graft.graph.GraphStore,
                        checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {

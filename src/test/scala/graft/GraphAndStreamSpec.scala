@@ -1,15 +1,11 @@
 package graft
 
 import java.nio.file.Files
-import java.sql.Timestamp
 
 import graft.graph.{GraphOps, GraphStore}
 import graft.ingest.InitialLoad
 import graft.streaming.Streams
-import graft.streaming.Streams.Event
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -155,138 +151,6 @@ class GraphAndStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(store.edgeTable("member_of").count() == 3)
   }
 
-  test("streaming tumbling counts with watermark (MemoryStream)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val q = Streams.tumblingCounts(mem.toDF(), "10 minutes", "20 minutes")
-      .writeStream.format("memory").queryName("tumbling")
-      .outputMode("append").start()
-    def ts(min: Int) = new Timestamp(3600_000L + min * 60_000L)
-    mem.addData(
-      Event(1, ts(0), 1, "click", 1.0),
-      Event(2, ts(5), 1, "click", 2.0),
-      Event(3, ts(12), 2, "view", 3.0))
-    q.processAllAvailable()
-    // advance watermark far enough to close the first windows
-    mem.addData(Event(4, ts(60), 1, "click", 1.0))
-    q.processAllAvailable()
-    val rows = spark.table("tumbling").collect()
-    q.stop()
-    val byKey = rows.map(r => (r.getTimestamp(0).getTime, r.getString(1)) ->
-      (r.getLong(2), r.getDouble(3))).toMap
-    assert(byKey((ts(0).getTime, "click")) == ((2L, 3.0)))
-    assert(byKey((ts(10).getTime, "view")) == ((1L, 3.0)))
-  }
-
-  test("streaming hopping counts fan each event into overlapping windows") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val q = Streams.hoppingCounts(mem.toDF(), "10 minutes", "5 minutes",
-      "20 minutes")
-      .writeStream.format("memory").queryName("hopping")
-      .outputMode("append").start()
-    def ts(min: Int) = new Timestamp(3600_000L + min * 60_000L)
-    mem.addData(
-      Event(1, ts(2), 1, "click", 1.0),  // windows [55,05) and [00,10)
-      Event(2, ts(7), 1, "click", 2.0))  // windows [00,10) and [05,15)
-    q.processAllAvailable()
-    mem.addData(Event(3, ts(90), 1, "click", 1.0)) // advance watermark
-    q.processAllAvailable()
-    val rows = spark.table("hopping").collect()
-    q.stop()
-    val byStart = rows.filter(_.getString(1) == "click")
-      .map(r => r.getTimestamp(0).getTime -> ((r.getLong(2), r.getDouble(3))))
-      .toMap
-    assert(byStart(ts(-5).getTime) == ((1L, 1.0)))
-    assert(byStart(ts(0).getTime) == ((2L, 3.0)))  // both events overlap here
-    assert(byStart(ts(5).getTime) == ((1L, 2.0)))
-  }
-
-  test("streaming sessionization closes sessions after the gap") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val q = Streams.sessionize(mem.toDS(), gapMs = 10 * 60_000L,
-      watermark = "5 minutes")
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
-    def ts(min: Int) = new Timestamp(3600_000L + min * 60_000L)
-    // user 1: two events 5 min apart (one session), then silence
-    mem.addData(Event(1, ts(0), 1, "click", 1.0), Event(2, ts(5), 1, "click", 2.0))
-    q.processAllAvailable()
-    // an event far in the future moves the watermark past the gap
-    mem.addData(Event(3, ts(120), 2, "click", 9.0))
-    q.processAllAvailable()
-    mem.addData(Event(4, ts(240), 2, "click", 9.0))
-    q.processAllAvailable()
-    val sessions = spark.table("sessions").as[Streams.Session].collect()
-    q.stop()
-    val u1 = sessions.filter(_.user_id == 1)
-    assert(u1.length == 1)
-    assert(u1.head.n_events == 2 && u1.head.total_value == 3.0)
-    assert(u1.head.session_start == ts(0) && u1.head.session_end == ts(5))
-  }
-
-  test("stream-static enrichment join decorates events per micro-batch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "tier")
-    val q = Streams.enrichedEvents(mem.toDF(), dim, "user_id")
-      .writeStream.format("memory").queryName("enriched")
-      .outputMode("append").start()
-    def ts(min: Int) = new Timestamp(3600_000L + min * 60_000L)
-    mem.addData(Event(1, ts(0), 1, "click", 1.0), Event(2, ts(1), 3, "view", 2.0))
-    q.processAllAvailable()
-    val rows = spark.table("enriched")
-      .select("event_id", "tier").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    q.stop()
-    assert(rows(1L) == "gold")
-    assert(rows(2L) == null) // unmatched key survives (left outer)
-  }
-
-  test("stream-stream interval join attributes clicks to views") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[Event]
-    val views = MemoryStream[Event]
-    val q = Streams.attributedClicks(clicks.toDF(), views.toDF())
-      .writeStream.format("memory").queryName("attrib")
-      .outputMode("append").start()
-    def ts(min: Int) = new Timestamp(3600_000L + min * 60_000L)
-    views.addData(Event(10, ts(0), 1, "view", 0.0))
-    clicks.addData(
-      Event(100, ts(10), 1, "click", 1.0), // within 30 min -> attributed
-      Event(101, ts(40), 1, "click", 1.0), // past the window -> dropped
-      Event(102, ts(10), 2, "click", 1.0)) // other user -> dropped
-    q.processAllAvailable()
-    val rows = spark.table("attrib").collect()
-    q.stop()
-    assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSet ==
-      Set((100L, 10L)))
-  }
-
-  test("streaming dedup within watermark drops redelivered events") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val q = Streams.dedupedEvents(mem.toDF(), "10 minutes")
-      .writeStream.format("memory").queryName("deduped")
-      .outputMode("append").start()
-    def ts(min: Int) = new Timestamp(3600_000L + min * 60_000L)
-    mem.addData(Event(1, ts(0), 1, "click", 1.0))
-    q.processAllAvailable()
-    // redelivery of event 1 (same key) plus a fresh event
-    mem.addData(Event(1, ts(1), 1, "click", 1.0), Event(2, ts(2), 1, "view", 2.0))
-    q.processAllAvailable()
-    val ids = spark.table("deduped").collect().map(_.getLong(0)).sorted
-    q.stop()
-    assert(ids.sameElements(Array(1L, 2L)))
-  }
-
   test("doi landing-dir streaming ingest (AvailableNow)") {
     import spark.implicits._
     val landing = Files.createTempDirectory("landing").toString
@@ -333,104 +197,5 @@ class GraphAndStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     // make room for one this run left
     val left = persisted -- before
     assert(left.isEmpty, s"${left.size} pins left by 5 micro-batches")
-  }
-
-  test("streaming near-dup matching flags arrivals against bucket state") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Streams.DocEvent]
-    val q = Streams.nearDupMatches(mem.toDS(), threshold = 0.7,
-      shingleK = 3, numHashes = 64, bands = 16, watermark = "10 minutes")
-      .writeStream.format("memory").queryName("neardup")
-      .outputMode("append").start()
-    def ts(min: Int) = new Timestamp(3600_000L + min * 60_000L)
-    val base = "the quick brown fox jumps over the lazy dog and then " +
-      "runs far away into the deep dark forest tonight"
-    mem.addData(
-      Streams.DocEvent(1L, ts(0), base),
-      Streams.DocEvent(2L, ts(1), "completely different text about " +
-        "spark catalyst optimizer rules and physical plans here"))
-    q.processAllAvailable()
-    // batch 1: nothing previously in state -> no matches yet
-    assert(spark.table("neardup").count() == 0)
-    // batch 2: a near-copy of doc 1 and a fresh unrelated doc
-    mem.addData(
-      Streams.DocEvent(3L, ts(5), base + " extra"),
-      Streams.DocEvent(4L, ts(6), "yet another unrelated document about " +
-        "benchmarks and oracles and parquet files entirely"))
-    q.processAllAvailable()
-    val rows = spark.table("neardup").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    q.stop()
-    // doc 3 matched doc 1 (possibly in several bands), nobody else matched
-    assert(rows.nonEmpty)
-    assert(rows.forall { case (id, m, est) =>
-      id == 3L && m == 1L && est >= 0.7 })
-  }
-
-  test("near-dup bucket state survives a checkpointed restart") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val checkpoint = Files.createTempDirectory("neardup-ck").toString
-    val out = Files.createTempDirectory("neardup-out").toString
-    val mem = MemoryStream[Streams.DocEvent]
-    // a fault-tolerant sink (parquet) — the memory sink cannot recover
-    // from a checkpoint, which is precisely what this test exercises
-    def start() = Streams.nearDupMatches(mem.toDS(), threshold = 0.7,
-      shingleK = 3, numHashes = 64, bands = 16, watermark = "10 minutes")
-      .writeStream.format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append").start()
-    def ts(min: Int) = new Timestamp(3600_000L + min * 60_000L)
-    val base = "the quick brown fox jumps over the lazy dog and then " +
-      "runs far away into the deep dark forest tonight"
-    val q1 = start()
-    mem.addData(Streams.DocEvent(1L, ts(0), base))
-    q1.processAllAvailable()
-    q1.stop() // kill the query; doc 1 lives only in the state store now
-    val q2 = start()
-    mem.addData(Streams.DocEvent(2L, ts(5), base + " extra"))
-    q2.processAllAvailable()
-    val rows = spark.read.parquet(out).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    q2.stop()
-    // the restarted query still matched against pre-restart state
-    assert(rows.nonEmpty && rows.forall(_ == ((2L, 1L))))
-  }
-
-  test("streaming classifier gate scores micro-batches like the batch op") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val train = Seq(
-      (1L, "news", "election senate policy election"),
-      (2L, "news", "senate policy minister"),
-      (3L, "code", "compiler pointer stack compiler"),
-      (4L, "code", "pointer syntax stack")
-    ).toDF("doc_id", "label", "text")
-    val model = graft.ops.TextAnalysis.trainNaiveBayes(train, "label",
-      minCount = 2L)
-    val arrivals = Seq((10L, "election policy stack"),
-      (11L, "compiler compiler pointer"), (12L, "senate minister policy"))
-
-    val mem = MemoryStream[(Long, String)]
-    val out = Files.createTempDirectory("nbout").toString
-    val ckpt = Files.createTempDirectory("nbckpt").toString
-    mem.addData(arrivals: _*)
-    val q = Streams.classifiedDocsIngest(
-      mem.toDS().toDF("doc_id", "text"), model, out, ckpt)
-    q.awaitTermination(240000)
-
-    val streamed = spark.read.parquet(out).collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        ((r.getAs[String]("pred_class"), r.getAs[Double]("log_likelihood"))))
-      .toMap
-    val batch = graft.ops.TextAnalysis.classifyNaiveBayes(
-      arrivals.toDF("doc_id", "text"), model).collect()
-      .map(r => r.getLong(0) -> ((r.getString(2), r.getDouble(3)))).toMap
-    assert(streamed == batch,
-      "per-micro-batch scoring must equal the batch operator")
-    assert(streamed(11L)._1 == "code" && streamed(12L)._1 == "news")
-    model.release()
   }
 }

@@ -109,52 +109,6 @@ class ImageHashSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("streaming image near-dup matches across micro-batches (MemoryStream)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.Streams
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def png(seed: Int, tweak: Int = -1) =
-      Multimodal.pngBytes(9, 8, (x, y) => {
-        val c = y * 9 + x
-        val x0 = seed.toLong * 0x9E3779B97F4A7C15L + (c + 1) * 0xBF58476D1CE4E5B9L
-        val x1 = (x0 ^ (x0 >>> 31)) * 0x94D049BB133111EBL
-        val base = ((x1 ^ (x1 >>> 29)) & 0xff).toInt
-        val v = if (c == tweak) (base + 128) % 256 else base
-        (v << 16) | (v << 8) | v
-      })
-    def ts(min: Int) = new java.sql.Timestamp(3600_000L + min * 60_000L)
-    val mem = MemoryStream[Streams.ImageEvent]
-    val q = Streams.imageNearDupMatches(mem.toDS(), maxHamming = 6,
-      watermark = "10 minutes")
-      .writeStream.format("memory").queryName("imgdup")
-      .outputMode("append").start()
-    mem.addData(
-      Streams.ImageEvent(1L, ts(0), png(7)),
-      Streams.ImageEvent(2L, ts(1), png(99)), // unrelated pattern
-      Streams.ImageEvent(5L, ts(1), "not an image".getBytes)) // dropped
-    q.processAllAvailable()
-    assert(spark.table("imgdup").count() == 0) // nothing in state yet
-    mem.addData(
-      Streams.ImageEvent(3L, ts(5), png(7, tweak = 20)), // near-copy of 1
-      Streams.ImageEvent(4L, ts(6), png(1234)))          // fresh unrelated
-    q.processAllAvailable()
-    val rows = spark.table("imgdup").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    q.stop()
-    assert(rows.nonEmpty)
-    assert(rows.forall { case (id, m, d) => id == 3L && m == 1L && d <= 6 })
-    // the streaming verdict agrees with the batch operator on the same set
-    val batchPairs = Multimodal.imageNearDups(
-      Seq(Multimodal.Asset(1L, "image", png(7), "image/png", 9, 8, 0L),
-        Multimodal.Asset(2L, "image", png(99), "image/png", 9, 8, 0L),
-        Multimodal.Asset(3L, "image", png(7, tweak = 20), "image/png", 9, 8, 0L),
-        Multimodal.Asset(4L, "image", png(1234), "image/png", 9, 8, 0L))
-        .toDS(), maxHamming = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(batchPairs == Set((1L, 3L)))
-  }
-
   test("simhashPairs delegates to hammingPairs unchanged") {
     import spark.implicits._
     val docs = Seq(

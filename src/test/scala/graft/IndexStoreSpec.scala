@@ -262,19 +262,6 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       == Some(Seq("https://example.com/a?a=1&b=2")))
   }
 
-  test("tokenizer models round-trip; encode identical on reload") {
-    import graft.ops.Tokenize
-    val merges = Tokenize.trainBpe(docs, numMerges = 30)
-    IndexStore.writeBpeModel(spark, merges, "bpe_model")
-    assert(IndexStore.readBpeModel(spark, "bpe_model") == merges)
-    val pieces = Tokenize.trainUnigram(docs, vocabSize = 60)
-    IndexStore.writeUnigramModel(spark, pieces, "uni_model")
-    val back = IndexStore.readUnigramModel(spark, "uni_model")
-    assert(back == pieces)
-    assert(rowsOf(Tokenize.encodeUnigram(docs, back))
-      == rowsOf(Tokenize.encodeUnigram(docs, pieces)))
-  }
-
   test("curatedLandingIngest: cross-batch gating via persisted state generations") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -408,44 +395,5 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       col("oov_u6") > 100000L).count() === 2,
       "disjoint-family batches must recommend rebuild via OOV")
     full.release(); merged.release()
-  }
-
-  test("NB model round-trips; classify identical on reload") {
-    import spark.implicits._
-    val labeled = docs.withColumn("label",
-      (col("doc_id") % 3).cast("string"))
-    val m = TextAnalysis.trainNaiveBayes(labeled, "label", minCount = 1L)
-    IndexStore.writeNbModel(m, "nb_model")
-    val reloaded = IndexStore.readNbModel(spark, "nb_model")
-    val live = rowsOf(TextAnalysis.classifyNaiveBayes(docs, m))
-    val back = rowsOf(TextAnalysis.classifyNaiveBayes(docs, reloaded))
-    assert(live == back)
-    m.release()
-  }
-
-  test("eval shingle index round-trips; decontaminateAgainstIndex " +
-      "identical; eval side reads pre-shuffled") {
-    import spark.implicits._
-    val eval = docs.filter(col("doc_id") < 16)
-    val train = docs.filter(col("doc_id") >= 16)
-    val idx = Dedup.evalShingleIndex(eval)
-    IndexStore.writeEvalShingleIndex(idx, "dc_idx", buckets = 4)
-    val reloaded = IndexStore.readEvalShingleIndex(spark, "dc_idx")
-    val live = rowsOf(Dedup.decontaminateAgainstIndex(train, idx))
-    val back = rowsOf(Dedup.decontaminateAgainstIndex(train, reloaded))
-    assert(live.nonEmpty && live == back)
-    // the reloaded eval side must read pre-shuffled: no Exchange between
-    // the shingle join and the bucketed scan
-    val probe = Dedup.decontaminateAgainstIndex(train, reloaded)
-    probe.write.format("noop").mode("overwrite").save()
-    val plan = probe.queryExecution.executedPlan.toString
-    val scanIdx = plan.indexOf("dc_idx_evalshingles")
-    assert(scanIdx > 0, s"expected the bucketed scan in:\n$plan")
-    val joinIdx = plan.indexOf("SortMergeJoin")
-    if (joinIdx >= 0 && joinIdx < scanIdx) {
-      val between = plan.substring(joinIdx, scanIdx)
-      assert(!between.contains("Exchange hashpartitioning"),
-        s"eval side must read pre-shuffled:\n$plan")
-    }
   }
 }

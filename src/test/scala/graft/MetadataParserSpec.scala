@@ -165,12 +165,10 @@ class MetadataParserSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("doi", "payload")
     val parsed = MetadataParser.parseEnvelope(raw, citedByCountYear = Some(2024))
 
-    val emptyOutputs = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], graft.model.Schemas.output)
     val emptyAuthors = spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], graft.model.Schemas.author)
 
-    val newOut = EntityResolution.newOutputs(parsed, emptyOutputs)
+    val newOut = EntityResolution.outputRows(parsed)
     val mentions = newOut
       .select($"doi", $"uuid".as("output_uuid"),
         posexplode($"authors").as(Seq("mention_order", "a")))

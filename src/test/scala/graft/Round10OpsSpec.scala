@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * division hazard (all-zero out-degree sources, not any zero weight),
   * and the KMV estimate regimes at the NDV == k boundary match the
   * documented contract (exact strictly below k; estimator at and above,
-  * kth == 0 guarded like the streaming twin).
+  * kth == 0 guarded).
   */
 class Round10OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -138,57 +138,6 @@ class Round10OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a pre-seam index (no _md5 column) reads as production murmur
     assert(Dedup.decontaminateAgainstIndex(train, murmurIdx.drop("_md5"))
       .count() === 1)
-  }
-
-  test("distinctMonitor idle-TTL: an expired group emits a final " +
-      "estimate, drops its state, and a redelivery after expiry " +
-      "restarts from zero") {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Streams.KeyedValue]
-    val q = Streams.distinctMonitor(mem.toDS(), k = 8,
-        idleTimeoutMs = Some(1L))
-      .writeStream.format("memory").queryName("kmv_ttl")
-      .outputMode("update").start()
-    def rowsFor(g: String): Seq[(Int, Long)] =
-      spark.table("kmv_ttl").filter(col("group") === g)
-        .select("k_eff", "approx_distinct")
-        .as[(Int, Long)].collect().toSeq
-    def expiredFor(g: String): Seq[Boolean] =
-      spark.table("kmv_ttl").filter(col("group") === g)
-        .select("expired").as[Boolean].collect().toSeq
-    // processAllAvailable STARVES under a processing-time TTL (the
-    // engine keeps scheduling no-data batches to sweep timeouts, so the
-    // quiescent point never arrives) — poll the sink with a deadline
-    def await(cond: => Boolean): Unit = {
-      val end = System.currentTimeMillis() + 60000
-      while (!cond && System.currentTimeMillis() < end) Thread.sleep(100)
-      assert(cond)
-    }
-    // batch 1: group a sees 3 distinct values
-    mem.addData((0 until 3).map(i => Streams.KeyedValue("a", s"u$i")): _*)
-    await(rowsFor("a").headOption.contains((3, 3L)))
-    // the 1 ms idle timeout then fires on a no-data sweep batch: one
-    // FINAL estimate for a (unchanged count), then its state drops —
-    // exactly one expiry row (a removed state cannot time out again)
-    await(rowsFor("a").count(_ == ((3, 3L))) == 2)
-    Thread.sleep(300)
-    assert(rowsFor("a").count(_ == ((3, 3L))) === 2)
-    // the forget is OBSERVABLE: exactly the expiry row carries
-    // expired = true, the live update false
-    assert(expiredFor("a").sorted === Seq(false, true))
-    // a redelivery AFTER expiry restarts the count at 1 (expiry is a
-    // deliberate forget — idempotence held while the group lived)
-    mem.addData(Streams.KeyedValue("a", "u0"))
-    await(rowsFor("a").contains((1, 1L)))
-    // the restart row is a LIVE update (expired = false); the restarted
-    // group's own 1 ms TTL may already have appended a second, FLAGGED
-    // expiry row for it — exactly one live k_eff = 1 row either way
-    assert(spark.table("kmv_ttl").filter(col("group") === "a" &&
-      col("k_eff") === 1 && !col("expired")).count() === 1)
-    q.stop()
   }
 
   test("indexDriftReport: an identically-distributed batch reports zero " +

@@ -178,60 +178,6 @@ class Round5fOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(deg.getLong(2) == 0L)
   }
 
-  test("driftMonitor appends one KS audit row per micro-batch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("drift-ck").toString
-    val out = java.nio.file.Files.createTempDirectory("drift-out").toString
-    val reference = (1 to 100).map(_ => 0.0).toDF("value")
-    val mem = MemoryStream[Double]
-    def runOnce() = graft.streaming.Streams.driftMonitor(
-      mem.toDF().withColumnRenamed("value", "value"),
-      reference, "value", out, ckpt, bins = 4).awaitTermination()
-    // AvailableNow drains all pending data per run: two runs = the
-    // catch-up deployment cadence, checkpoint advances the batch id
-    mem.addData(Seq.fill(50)(0.0): _*)  // batch 0: same distribution
-    runOnce()
-    mem.addData(Seq.fill(50)(10.0): _*) // batch 1: total separation
-    runOnce()
-    // batch_id is now a PARTITION column (idempotent dynamic-overwrite
-    // sink) — partition inference reads it back as int
-    val rows = spark.read.parquet(out).collect()
-      .map(r => r.getAs[Number]("batch_id").longValue ->
-        ((r.getAs[Long]("n_a"), r.getAs[Long]("n_b"),
-          r.getAs[Long]("max_cross_diff")))).toMap
-    assert(rows.size == 2)
-    assert(rows(0L) == ((50L, 100L, 0L)))      // no drift
-    assert(rows(1L) == ((50L, 100L, 5000L)))   // KS = 1.0
-  }
-
-  test("blocklistGatedIngest drops flagged docs per micro-batch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("bl-ck").toString
-    val out = java.nio.file.Files.createTempDirectory("bl-out").toString
-    val bl = Seq("casino").toDF("term")
-    val mem = MemoryStream[(Long, String)]
-    mem.addData((1L, "a clean document"), (2L, "visit the casino now"),
-      (3L, "another clean one"))
-    graft.streaming.Streams.blocklistGatedIngest(
-      mem.toDF().toDF("doc_id", "text"), bl, out, ckpt)
-      .awaitTermination()
-    val kept = spark.read.parquet(out).collect()
-      .map(_.getAs[Long]("doc_id")).toSet
-    assert(kept == Set(1L, 3L))
-    // batch == stream verdict on the same rows
-    val batchKept = Seq((1L, "a clean document"),
-      (2L, "visit the casino now"), (3L, "another clean one"))
-      .toDF("doc_id", "text")
-    val flagged = graft.ops.CorpusOps.flagBlocklisted(batchKept, bl)
-      .select("doc_id")
-    assert(batchKept.join(flagged, Seq("doc_id"), "left_anti")
-      .collect().map(_.getLong(0)).toSet == kept)
-  }
-
   test("assignRowIds: dense 0-based ids in sort order, schema preserved") {
     import spark.implicits._
     val df = Seq(("b", 2L), ("a", 9L), ("b", 1L), ("a", 3L))

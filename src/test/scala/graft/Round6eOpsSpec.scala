@@ -6,7 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-6 batch 7: k-fold assignment, n-per-group sampling, blocked
-  * fuzzy join, streaming expectation gate.
+  * fuzzy join.
   */
 class Round6eOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -91,40 +91,5 @@ class Round6eOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.ops.Joins.blockedFuzzyJoin(l,
         r.withColumnRenamed("id2", "id"), Seq("b" -> "b2"), "nm", "nm2")
     }
-  }
-
-  test("expectationGatedIngest: clean batch lands, dirty batch " +
-      "quarantined, audit logs both") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    import graft.ops.Profile.Expectation._
-    implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("eg-ck").toString
-    val out = java.nio.file.Files.createTempDirectory("eg-out").toString
-    val rej = java.nio.file.Files.createTempDirectory("eg-rej").toString
-    val aud = java.nio.file.Files.createTempDirectory("eg-aud").toString
-    val checks = Seq(NotNull("lang"), InSet("lang", Seq("en", "de")))
-    val mem = MemoryStream[(Long, String)]
-    def run(): Unit =
-      graft.streaming.Streams.expectationGatedIngest(
-        mem.toDF().toDF("doc_id", "lang"), checks, out, rej, aud, ckpt)
-        .awaitTermination()
-    mem.addData((1L, "en"), (2L, "de")) // batch 0: clean
-    run()
-    mem.addData((3L, "en"), (4L, "zz")) // batch 1: in_set violation
-    run()
-    val landed = spark.read.parquet(out).collect()
-      .map(_.getAs[Long]("doc_id")).toSet
-    val quarantined = spark.read.parquet(rej).collect()
-      .map(_.getAs[Long]("doc_id")).toSet
-    assert(landed == Set(1L, 2L))
-    assert(quarantined == Set(3L, 4L)) // whole batch, evidence intact
-    val audit = spark.read.parquet(aud).collect()
-      .map(r => (r.getAs[Number]("batch_id").longValue,
-        r.getAs[String]("check"), r.getAs[Long]("n_violations")))
-    assert(audit.length == 4) // 2 checks x 2 batches
-    assert(audit.filter(_._1 == 0L).forall(_._3 == 0L))
-    assert(audit.exists(a => a._1 == 1L && a._2 == "in_set(lang)" &&
-      a._3 == 1L))
   }
 }

@@ -163,44 +163,4 @@ class Round9cOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.graph.GraphOps.pageRank(ok, weightCol = Some("w"),
       maxIter = 2, scale = Some(1000000L)).count() > 0)
   }
-
-  test("streaming distinctMonitor: per-trigger estimates equal the batch " +
-      "KMV sketch over the stream prefix, exact and estimator regimes") {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val k = 8
-    val mem = MemoryStream[Streams.KeyedValue]
-    val q = Streams.distinctMonitor(mem.toDS(), k = k)
-      .writeStream.format("memory").queryName("kmv_monitor")
-      .outputMode("update").start()
-    def batchEquiv(prefix: Seq[(String, String)]): Map[String, (Int, Long, Long)] =
-      graft.ops.Sketches.kmvDistinct(
-        prefix.toDF("g", "v"), Seq("g"), "v", k = k)
-        .select("g", "k_eff", "kth_hash60", "approx_distinct")
-        .as[(String, Int, Long, Long)].collect()
-        .map(t => t._1 -> ((t._2, t._3, t._4))).toMap
-    def latest(): Map[String, (Int, Long, Long)] =
-      spark.table("kmv_monitor")
-        .select("group", "k_eff", "kth_hash60", "approx_distinct")
-        .as[(String, Int, Long, Long)].collect()
-        .zipWithIndex.groupBy(_._1._1).view
-        .mapValues(_.maxBy(_._2)._1).toMap
-        .map { case (g, t) => g -> ((t._2, t._3, t._4)) }
-    // batch 1: g1 stays below k (exact regime), g2 blows past it
-    val b1 = (0 until 5).map(i => ("g1", s"u$i")) ++
-      (0 until 40).map(i => ("g2", s"v$i"))
-    mem.addData(b1.map { case (g, v) => Streams.KeyedValue(g, v) }: _*)
-    q.processAllAvailable()
-    assert(latest() === batchEquiv(b1))
-    // batch 2: growth + redelivered duplicates (must not change g1's
-    // exact count beyond the new distinct values)
-    val b2 = (3 until 7).map(i => ("g1", s"u$i")) ++
-      (30 until 60).map(i => ("g2", s"v$i"))
-    mem.addData(b2.map { case (g, v) => Streams.KeyedValue(g, v) }: _*)
-    q.processAllAvailable()
-    assert(latest() === batchEquiv(b1 ++ b2))
-    q.stop()
-  }
 }

@@ -1,12 +1,24 @@
 package graft
 
 import graft.functions.TextKernels
+import graft.functions.TextFunctions.valid_doi
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden tests ported 1:1 from the reference:
   * tests/test_utilities.py, tests/test_metadata.py:90-146, tests/test_dois.py.
   */
-class TextKernelsSpec extends AnyFunSuite {
+class TextKernelsSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  // only the DOI pattern tests start it: `valid_doi` is a Column
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .appName("text-kernels-spec").getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
 
   // --- clean_html (tests/test_utilities.py) ---
   test("clean_html strips jats tags") {
@@ -66,11 +78,17 @@ class TextKernelsSpec extends AnyFunSuite {
     "10.5281/zenodo.8140226", "10.5281/zenodo.8140289")
   val invalidDois = Seq("", "non_empty_string", "10.5281zenodo.8140226", "10.5281/zenodo")
 
+  // the ingest's own pattern: `DoiOps.validate` runs `valid_doi`
+  private def validDoi(dois: Seq[String]): Map[String, Boolean] = {
+    import spark.implicits._
+    dois.toDF("doi").select(col("doi"), valid_doi(col("doi")))
+      .as[(String, Boolean)].collect().toMap
+  }
   test("valid DOI patterns accepted") {
-    validDois.foreach(d => assert(TextKernels.isValidDoi(d), d))
+    validDoi(validDois).foreach { case (d, ok) => assert(ok, d) }
   }
   test("invalid DOI patterns rejected") {
-    invalidDois.foreach(d => assert(!TextKernels.isValidDoi(d), d))
+    validDoi(invalidDois).foreach { case (d, ok) => assert(!ok, d) }
   }
   test("DOI normalization raw -> cleaned") {
     val raw = Seq(
